@@ -40,6 +40,7 @@ from prql_spark.plans.nodes import (
     SString,
     Unary,
 )
+from prql_spark.plans.physical import materialize, single_eval
 from prql_spark.sources.catalog import Catalog
 
 
@@ -215,35 +216,38 @@ def _call_table_name(fc: FuncCall) -> str | None:
     return None
 
 
-def _table_ref_counts(q: Query) -> dict:
-    """How many from/join sites reference each name, across every
-    table pipeline and the main pipeline (func bodies excluded: a
-    reference that only exists post-inlining is merely uncounted —
-    the CTE then stays inline, never the reverse)."""
-    refs: dict = {}
-    for node in [t.pipeline for t in q.tables] + [q.pipeline]:
-        for fc in _iter_calls(node):
+def _table_ref_counts(q: Query) -> list[int]:
+    """How many from/join sites reference each of ``q.tables``. A name
+    resolves to the latest table defined before the referencing
+    pipeline, else to the catalog (func bodies excluded: a reference
+    that only exists post-inlining is merely uncounted — the CTE then
+    stays inline, never the reverse)."""
+    counts = [0] * len(q.tables)
+    bound: dict = {}  # name -> index of the definition in scope
+    for i, pipe in enumerate([t.pipeline for t in q.tables] + [q.pipeline]):
+        for fc in _iter_calls(pipe):
             if fc.name in ("from", "join"):
-                nm = _call_table_name(fc)
-                if nm:
-                    refs[nm] = refs.get(nm, 0) + 1
-    return refs
+                j = bound.get(_call_table_name(fc))
+                if j is not None:
+                    counts[j] += 1
+        if i < len(q.tables):
+            bound[q.tables[i].name] = i
+    return counts
 
 
 def _has_shuffle_step(pipe: ExprPipeline) -> bool:
     """True when the pipeline contains a transform whose re-execution
     pays a shuffle (group/aggregate/sort/take top-k): the gate for
-    materializing a multi-referenced CTE."""
+    materializing a multi-referenced CTE.
+
+    A bare, unsorted ``take`` counts too. It need not shuffle, but it
+    is not guaranteed to return the same rows when it re-executes, so
+    two inline consumers could each see different rows; one
+    materialization gives both the same rows."""
     return any(
         fc.name in ("group", "aggregate", "sort", "take")
         for fc in _iter_calls(pipe)
     )
-
-
-def _cte_checkpoint_enabled() -> bool:
-    import os
-
-    return os.environ.get("PRQL_SPARK_CTE_CHECKPOINT", "1") != "0"
 
 
 class CExpr:
@@ -384,7 +388,7 @@ class Compiler:
     def compile_query(self, q: Query) -> DataFrame:
         self.funcs = dict(q.func_defs)
         refs = _table_ref_counts(q)
-        for t in q.tables:
+        for i, t in enumerate(q.tables):
             sub = self._sub()
             sub.funcs = dict(self.funcs)
             sub.local_tables = dict(self.local_tables)
@@ -394,11 +398,7 @@ class Compiler:
             # (DataFrame reuse shares the plan, not the work): q21's
             # order_supp ran its lineitem⋈orders aggregate twice —
             # two scans of the largest table, two broadcast builds,
-            # two shuffles. Materialize such a CTE once via the
-            # repo's lazy DISK_ONLY localCheckpoint pattern (same
-            # trade as prepare_training_corpus's scored frame: the
-            # intermediate is not fault-tolerant to executor loss,
-            # so lineage-replay clusters can disable via env).
+            # two shuffles. Materialize such a CTE once.
             # Gated on the CTE being shuffle-bearing (group/
             # aggregate/sort/take): a narrow filter-CTE is CHEAPER
             # re-executed inline, where each consumer keeps its own
@@ -407,15 +407,10 @@ class Compiler:
                 isinstance(df, DataFrame)  # the SQL backend compiles
                 # through here with _SqlRel stand-ins: CTE text needs
                 # no materialization (the dialect emits WITH)
-                and refs.get(t.name, 0) >= 2
+                and refs[i] >= 2
                 and _has_shuffle_step(t.pipeline)
-                and _cte_checkpoint_enabled()
             ):
-                from pyspark.storagelevel import StorageLevel
-
-                df = df.localCheckpoint(
-                    eager=False, storageLevel=StorageLevel.DISK_ONLY
-                )
+                df = materialize(df)
             self.local_tables[t.name] = df
         return self.compile_pipeline(q.pipeline)
 
@@ -717,25 +712,11 @@ class Compiler:
 
     def _filter_barrier(self, sql: str) -> str:
         """Dialect seam: the Spark engine wraps with the
-        nondeterministic no-op; SQL-text backends (the DuckDB oracle)
-        emit the plain expression — the barrier is a physical-plan
-        concern, not a semantic one.
-
-        ``IF(spark_partition_id() >= 0, c, NULL)``: partition ids
-        are non-negative, so the true branch ALWAYS returns ``c``
-        unchanged for any type, and both If and spark_partition_id
-        are codegen-able — the wrapped scoring chain stays in
-        whole-stage codegen. Two rejected forms, both measured on
-        docs_clean_pipeline: ``shuffle(array(c))[1]`` (the singleton
-        permutation) is CodegenFallback and dragged the entire chain
-        into interpreted eval — costing more than the double
-        evaluation it removed (1.46 → 1.75 s) — and
-        ``IF(rand(seed) < 2.0, ...)`` is folded away entirely by
-        Spark 4's rand-comparison simplification (the duplication
-        came straight back). The partition-id compare survives the
-        optimizer, costs one int compare per row, and keeps plan
-        dumps byte-stable (no seed)."""
-        return f"IF(spark_partition_id() >= 0, {sql}, NULL)"
+        nondeterministic no-op (see ``plans.physical.single_eval``);
+        SQL-text backends (the DuckDB oracle) emit the plain
+        expression — the barrier is a physical-plan concern, not a
+        semantic one."""
+        return single_eval(sql)
 
     def _metadata_count_aggregate(self, step: FuncCall) -> bool:
         """The 100 TB ``SELECT count(*)`` that doesn't scan 100 TB:

@@ -22,6 +22,8 @@ import random
 
 from pyspark.sql import DataFrame, functions as F
 
+from prql_spark.plans.physical import materialize, single_eval
+
 MERSENNE61 = (1 << 61) - 1
 
 
@@ -473,25 +475,19 @@ def dedup_against_bloom(
     # kilobyte documents (the first cut did exactly that and paid
     # the normalization four times over)
     # the slim key set is used three times (sizing count, filter
-    # build, refinement anti-join) — pin it so the reference's
-    # normalize+md5 scan happens ONCE, not three times (16-byte keys:
-    # a 10B-doc reference stores ~300 GB across a cluster, small
-    # next to re-scanning the corpus twice more). A lazy DISK_ONLY
-    # localCheckpoint, NOT persist(): CacheManager entries live until
-    # an explicit unpersist that no caller can place (the refinement
+    # build, refinement anti-join) — materialize it so the
+    # reference's normalize+md5 scan happens ONCE, not three times
+    # (16-byte keys: a 10B-doc reference stores ~300 GB across a
+    # cluster, small next to re-scanning the corpus twice more).
+    # materialize, NOT persist(): CacheManager entries live until an
+    # explicit unpersist that no caller can place (the refinement
     # join consumes the keys lazily, after this function returns), so
     # a long session accumulated cached reference key sets in storage
-    # memory. Checkpoint blocks sit on local disk (zero heap
-    # pressure) and the ContextCleaner reclaims them as soon as the
-    # consuming plan is garbage-collected — the lifecycle the CC
-    # variance fix (round 10) established. Not fault-tolerant, like
-    # every localCheckpoint here.
-    from pyspark.storagelevel import StorageLevel
-
-    ref_keys = (
+    # memory. Checkpoint blocks are reclaimed by the ContextCleaner
+    # as soon as the consuming plan is garbage-collected.
+    ref_keys = materialize(
         reference.select(F.expr(norm.format(t=rt)).alias("__key"))
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     ref_hashes = ref_keys.select(
         F.xxhash64("__key").alias("h1"),
@@ -1239,9 +1235,7 @@ def remove_duplicated_sentences(
     # partial dedup — replaces the (id, si) DISTINCT + affected-id
     # DISTINCT + sentence-payload anti-join/collect_list exchanges),
     # and the dirty branch rebuilds per-row in the array domain.
-    from pyspark.storagelevel import StorageLevel
-
-    cov = (
+    cov = materialize(
         wins.withColumn(
             "__c", F.expr("count(*) OVER (PARTITION BY __hk)")
         )
@@ -1254,7 +1248,6 @@ def remove_duplicated_sentences(
         )
         .groupBy(id_col)
         .agg(F.collect_set("__si").alias("__cov"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     staged = df.select(F.col(id_col), F.expr(sents).alias("__sa"))
     clean = (
@@ -1282,14 +1275,13 @@ def remove_duplicated_sentences(
     # trailing boundary's empty segment never counts as removed).
     # Binding + nondeterministic wrapper: see
     # remove_duplicated_windows.
-    reasm = (
-        "IF(spark_partition_id() >= 0, "
+    reasm = single_eval(
         "element_at(transform(array(named_struct("
         "'a', __sa, 'c', __cov)), b -> named_struct("
         "'kept', filter(transform("
         "array_except(sequence(0, size(b.a) - 1), b.c), "
         "i -> element_at(b.a, i + 1)), x -> trim(x) != ''), "
-        "'m', size(filter(b.a, x -> trim(x) != '')))), 1), NULL)"
+        "'m', size(filter(b.a, x -> trim(x) != '')))), 1)"
     )
     dirty = (
         staged.join(cov, id_col)
@@ -1410,14 +1402,9 @@ def remove_duplicated_windows(
     # native O(m) set op and the index transform is one
     # element_at per surviving word. ``cov`` feeds two consumers
     # (the clean-branch anti-join and the dirty-branch inner join),
-    # so it is pinned as a lazy DISK_ONLY localCheckpoint: slim
-    # (id, int-array) rows, computed once, read back per consumer.
-    # (DISK_ONLY for the same reason as connected_components': the
-    # blocks must not squat in storage memory. Not fault-tolerant —
-    # acceptable for derived intermediates, as elsewhere.)
-    from pyspark.storagelevel import StorageLevel
-
-    cov = (
+    # so it is materialized: slim (id, int-array) rows, computed
+    # once, read back per consumer.
+    cov = materialize(
         grams.withColumn(
             "__c", F.expr("count(*) OVER (PARTITION BY __gk)")
         )
@@ -1430,7 +1417,6 @@ def remove_duplicated_windows(
         )
         .groupBy(id_col)
         .agg(F.collect_set("__j").alias("__cov"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     # clean docs: byte-identical output (words rejoined with single
     # spaces) from a narrow projection — no explode, no reassembly
@@ -1459,23 +1445,18 @@ def remove_duplicated_windows(
     # have >= 1 gram, hence >= 1 word), so ANSI mode never trips.
     # Empty-string words are filtered AFTER the index cut, exactly
     # like the old stream's `__w != ''` — they count as removed.
-    # The outer IF(spark_partition_id() >= 0, ..., NULL) is a
-    # value-identity NONDETERMINISTIC wrapper (partition ids are
-    # non-negative: the true branch always returns the struct
-    # unchanged): the where-filter below references __t, and without
-    # the wrapper Catalyst would substitute the whole reassembly
-    # into the pushed filter — re-running it per surviving row (the
-    # same Filter/Project double-eval the compiler's heavy-filter
-    # barrier prevents; same codegen-friendly wrapper form, see
-    # compiler._filter_barrier).
-    reasm = (
-        f"IF(spark_partition_id() >= 0, "
+    # single_eval: the where-filter below references __t, and
+    # without the barrier Catalyst would substitute the whole
+    # reassembly into the pushed filter — re-running it per
+    # surviving row (the same Filter/Project double-eval the
+    # compiler's heavy-filter barrier prevents).
+    reasm = single_eval(
         f"element_at(transform(array(named_struct("
         f"'w', {ws}, 'c', __cov)), b -> named_struct("
         f"'kept', filter(transform("
         f"array_except(sequence(0, size(b.w) - 1), b.c), "
         f"i -> element_at(b.w, i + 1)), x -> x != ''), "
-        f"'m', size(b.w))), 1), NULL)"
+        f"'m', size(b.w))), 1)"
     )
     dirty = (
         df.join(cov, id_col)

@@ -13,9 +13,9 @@ is the canonical keep-first policy at cluster granularity.
 Scale design (100 TB posture):
 - min-label propagation: each iteration is ONE join (labels ⋈ edges,
   both hash-partitioned on the node key) + ONE groupBy(min). The edge
-  list is materialized once (localCheckpoint) and reused every
-  iteration; lineage is truncated per iteration so the plan never
-  grows with the iteration count.
+  list is materialized once (``plans.physical.materialize``) and
+  reused every iteration; lineage is truncated per iteration so the
+  plan never grows with the iteration count.
 - convergence is detected with a single scalar aggregate: labels only
   ever DECREASE (monotone min-lattice), so sum(component) strictly
   decreases until the fixpoint — no per-iteration label self-join.
@@ -39,6 +39,8 @@ small).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from prql_spark.plans.physical import materialize
 
 
 def connected_components(
@@ -84,21 +86,9 @@ def connected_components(
     indicates a long-chain topology that needs a higher bound).
     """
     # Undirected: propagate along both directions of every edge.
-    # localCheckpoint materializes the (possibly expensive) upstream
-    # pair computation ONCE — every iteration re-reads the cached
-    # blocks instead of re-running minhash/LSH per round.
-    #
-    # DISK_ONLY checkpoints, deliberately: the default MEMORY_AND_DISK
-    # blocks of superseded rounds linger in storage memory until the
-    # JVM's ContextCleaner gets a GC cycle, so an iterative op's wall
-    # time swung 2-8 s at sf0.1 with the HEAP state of the session
-    # (measured across rounds 6-9 on identical code). Slim (node,
-    # component) blocks read back from local disk in milliseconds;
-    # pinning them off-heap makes the op's cost a function of the
-    # DATA again, not of allocator history — and at 100 TB the edge
-    # list never competes with shuffle memory either.
-    from pyspark.storagelevel import StorageLevel
-
+    # materialize the (possibly expensive) upstream pair computation
+    # ONCE — every iteration re-reads the stored blocks instead of
+    # re-running minhash/LSH per round.
     # Both directions via ONE explode, not union-of-two-selects: a
     # union's branches each re-plan AND re-execute the upstream pair
     # computation (minhash UDF + bucket-combine ran TWICE into this
@@ -106,7 +96,7 @@ def connected_components(
     # every build — measured ~4.7 s of driver-side planning per call
     # at sf0.1 on top of the doubled execution). The explode emits
     # (u, v) and (v, u) from a single pass over the pair stream.
-    e = (
+    e = materialize(
         edges.select(
             F.explode(
                 F.expr(
@@ -117,7 +107,6 @@ def connected_components(
         )
         .select(F.col("__e.u").alias("u"), F.col("__e.v").alias("v"))
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     # Small-graph fast path: the count below is the action that
     # materializes the edge checkpoint (the distributed path pays an
@@ -208,14 +197,13 @@ def connected_components(
     # 2-3 round run, and one fewer per-round plan for Janino to
     # compile (whole-stage codegen compilation was a measured chunk
     # of the op's session-to-session wall-time variance).
-    labels = (
+    labels = materialize(
         e.groupBy("u")
         .agg(F.min("v").alias("mv"))
         .select(
             F.col("u").alias("node"),
             F.least(F.col("u"), F.col("mv")).alias("component"),
         )
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     # Monotone convergence metric: components only ever shrink toward
     # the min, so an unchanged sum IS the fixpoint (one scalar agg per
@@ -257,22 +245,18 @@ def connected_components(
         # The join is labels-sized (two slim columns), far smaller
         # than the edge join above.
         l, p = prop.alias("l"), prop.alias("p")
-        labels = (
+        # truncate lineage (the plan would otherwise double per round
+        # and Janino compile cost would dominate by round ~8). The
+        # convergence aggregate right below is the round's single
+        # action — it fills the materialization and reads the sum in
+        # ONE job instead of two.
+        labels = materialize(
             l.join(p, F.col("l.component") == F.col("p.node"), "left")
             .select(
                 F.col("l.node").alias("node"),
                 F.coalesce(
                     F.col("p.component"), F.col("l.component")
                 ).alias("component"),
-            )
-            # truncate lineage (the plan would otherwise double per
-            # round and Janino compile cost would dominate by round
-            # ~8). LAZY: the convergence aggregate right below is the
-            # round's single action — it materializes the checkpoint
-            # and reads the sum in ONE job instead of two. DISK_ONLY:
-            # see the edge checkpoint above.
-            .localCheckpoint(
-                eager=False, storageLevel=StorageLevel.DISK_ONLY
             )
         )
         if numeric_ids:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from prql_spark.operators.text import URL_HOST_RE, _esc
+from prql_spark.plans.physical import materialize
 
 # UTF-8 bytes decoded as cp1252/latin-1 (the classic double-encoding
 # mojibake). Ordered LONGEST/most-specific FIRST: the three-byte
@@ -187,15 +188,13 @@ def url_blocklist(
         "__hl", F.expr("split(url_host, '[.]')")
     )
     # distinct is load-bearing (a duplicated blocklist entry would
-    # duplicate corpus rows through the left joins); the lazy
-    # localCheckpoint materializes the deduped list ONCE — the five
-    # per-join broadcasts each read the checkpointed blocks instead
-    # of re-running the distinct (column renames above the exchange
-    # defeat Spark's structural ReusedExchange detection here)
-    bl = (
-        blocklist.select(F.lower("domain").alias("domain"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    # duplicate corpus rows through the left joins); materialize the
+    # deduped list ONCE — the five per-join broadcasts each read the
+    # stored blocks instead of re-running the distinct (column
+    # renames above the exchange defeat Spark's structural
+    # ReusedExchange detection here)
+    bl = materialize(
+        blocklist.select(F.lower("domain").alias("domain")).distinct()
     )
     # candidates from MOST specific (max_labels labels) down to 2 so
     # the coalesce below prefers the most-specific match

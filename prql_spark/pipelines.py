@@ -28,6 +28,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from prql_spark.operators import dedup, graph, splits, text
+from prql_spark.plans.physical import materialize
 
 
 @dataclass
@@ -63,7 +64,6 @@ def prepare_training_corpus(
     remove_dup_windows: int | None = None,
     remove_dup_sentence_spans: int | None = None,
     dup_window_min_count: int = 2,
-    checkpoint_filtered: bool = True,
     collect_stats: bool = False,
 ) -> tuple[DataFrame, CorpusStats]:
     """Run the full cleaning → filtering → dedup → split → pack chain.
@@ -211,39 +211,19 @@ def prepare_training_corpus(
     )
     if min_lm_logprob is not None:
         keep += f" AND lm_logprob >= {min_lm_logprob}"
-    if checkpoint_filtered:
-        # Checkpoint BEFORE the keep-filter, filter on the stored
-        # columns (round 11): `scored` is consumed by the filter
-        # predicate AND by the projection that outputs the score
-        # columns, and `filtered` is then consumed TWICE more (the
-        # signature branch and the anti-join left side). Filtering
-        # first pushed the giant scoring expressions into the Filter
-        # node below the projection, so every surviving row paid the
-        # regex/fold chain TWICE (filter + project — whole-stage
-        # codegen does not share subexpressions across operators);
-        # checkpointing the scored frame makes the keep predicate a
-        # plain column-reference filter over stored blocks and the
-        # scoring chain executes exactly ONCE for all consumers.
-        # Measured at sf0.1 (steady, GC'd): the materialize+CC phase
-        # 15.9 → ~8 s with identical output. Trade-off: the
-        # checkpoint holds the PRE-filter corpus (scored rows that
-        # the keep-filter drops are stored too) and localCheckpoint
-        # is NOT fault-tolerant — a lost executor cannot recompute
-        # its blocks — so set False on preemptible clusters and let
-        # lineage replay (then the filter evaluates scoring twice;
-        # correctness is unaffected).
-        # DISK_ONLY, deliberately: default MEMORY_AND_DISK blocks of
-        # the wide scored rows squat in storage memory until the
-        # ContextCleaner's next GC cycle and the phase wall time
-        # swung 8-16 s at sf0.1 with heap state (the exact mechanism
-        # the round-10 CC variance fix evicted); slim reads from
-        # local disk are milliseconds and the cost becomes a
-        # function of the data again.
-        from pyspark.storagelevel import StorageLevel
-
-        scored = scored.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.DISK_ONLY
-        )
+    # Materialize BEFORE the keep-filter, filter on the stored columns
+    # (round 11): `scored` is consumed by the filter predicate AND by
+    # the projection that outputs the score columns, and `filtered` is
+    # then consumed TWICE more (the signature branch and the anti-join
+    # left side). Filtering first pushed the giant scoring expressions
+    # into the Filter node below the projection, so every surviving
+    # row paid the regex/fold chain TWICE (whole-stage codegen does
+    # not share subexpressions across operators); over stored blocks
+    # the keep predicate is a plain column filter and the scoring
+    # chain runs exactly ONCE. Measured at sf0.1 (steady, GC'd): the
+    # materialize+CC phase 15.9 → ~8 s with identical output.
+    # Trade-off: the stored blocks hold the PRE-filter corpus.
+    scored = materialize(scored)
     filtered = scored.where(F.expr(keep))
     if collect_stats:
         stats.after_quality = filtered.count()
@@ -255,7 +235,8 @@ def prepare_training_corpus(
     )
     deduped = graph.dedup_by_clusters(filtered, pairs, id_col)
     if collect_stats:
-        deduped = deduped.localCheckpoint(eager=True)
+        # the count below fills it; the rest of the chain reads it
+        deduped = materialize(deduped)
         stats.after_dedup = deduped.count()
 
     # -- deterministic split + packing. Packing is PARTITIONED BY

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from prql_spark.plans.physical import materialize
+
 
 def _dataset_exists(spark: SparkSession, path: str) -> bool:
     """True when ``path`` holds a non-empty dataset (ignoring _/.
@@ -130,9 +132,10 @@ def upsert_parquet(
         updates.select(*key_cols).distinct(), key_cols, "left_anti"
     )
     merged = kept.unionByName(updates.select(existing.columns))
-    # break lineage from `path` before overwriting it; bounded by the
-    # touched partitions thanks to the pruned scan above
-    merged = merged.localCheckpoint(eager=True)
+    # break lineage from `path` before overwriting it (eager: the
+    # source must be fully read before the overwrite deletes it);
+    # bounded by the touched partitions thanks to the pruned scan
+    merged = materialize(merged, eager=True)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -63,6 +63,27 @@ def test_prepare_training_corpus_end_to_end(spark, catalog, tmp_path):
     assert "doc_id" in first and "text_clean" in first
 
 
+def test_prepare_training_corpus_collect_stats(catalog):
+    """collect_stats=True only adds counts: the result rows match the
+    stats-free run, and each stage can only drop rows."""
+    docs = catalog.load("documents").where("doc_id < 200")
+    dup = docs.where("doc_id < 5").withColumn(
+        "doc_id", F.expr("doc_id + 900000")
+    )
+    corpus = docs.unionByName(dup)
+    kw = dict(min_quality=0.3, langs=("en", "de", "fr", "es"),
+              minhash_threshold=0.5)
+    plain, _ = prepare_training_corpus(corpus, **kw)
+    counted, stats = prepare_training_corpus(
+        corpus, collect_stats=True, **kw
+    )
+    assert sorted(counted.collect(), key=repr) == sorted(
+        plain.collect(), key=repr
+    )
+    assert stats.input_rows == 205
+    assert stats.input_rows >= stats.after_quality >= stats.after_dedup > 0
+
+
 def test_prepare_training_corpus_chunks_long_docs(spark):
     """An over-budget document is split into budget-sized chunks
     before packing — no output row exceeds pack_target_tokens, the

@@ -575,6 +575,18 @@ def test_multi_ref_cte_materializes_once(catalog):
     # only inside the (shared) checkpoint materialization
     assert plan.count("Scan ExistingRDD") == 2
     assert "Scan parquet" not in plan
+    # an unsorted take may return different rows each time it runs:
+    # materialized once, both consumers see the same rows
+    few = (
+        "table few = (\n"
+        "  from lineitem\n"
+        "  take 100\n"
+        ")\n"
+        "from a=few\n"
+        "join b=few [l_orderkey]\n"
+        "aggregate [n = count]"
+    )
+    assert "ExistingRDD" in plan_of(compile_prql(few, catalog))
 
 
 def test_single_ref_cte_stays_inline(catalog):
@@ -591,6 +603,17 @@ def test_single_ref_cte_stays_inline(catalog):
     )
     plan = plan_of(compile_prql(single, catalog))
     assert "ExistingRDD" not in plan and "Scan parquet" in plan
+    # a CTE's own body reads the catalog table it shadows: `orders`
+    # is referenced once (by the main pipeline), not twice
+    shadow = (
+        "table orders = (\n"
+        "  from orders\n"
+        "  group [o_custkey] (aggregate [n = count])\n"
+        ")\n"
+        "from orders\nfilter n > 2"
+    )
+    plan = plan_of(compile_prql(shadow, catalog))
+    assert "ExistingRDD" not in plan and "Scan parquet" in plan
     narrow = (
         "table cheap = (\n"
         "  from lineitem\n"
@@ -602,3 +625,25 @@ def test_single_ref_cte_stays_inline(catalog):
     )
     plan = plan_of(compile_prql(narrow, catalog))
     assert "ExistingRDD" not in plan
+
+
+def test_plan_cuts_only_in_physical_helpers():
+    """Every materialization and single-evaluation barrier goes
+    through prql_spark/plans/physical.py, so a storage or
+    fault-tolerance policy change touches one function."""
+    import pathlib
+
+    import prql_spark
+
+    root = pathlib.Path(prql_spark.__file__).parent
+    helper = root / "plans" / "physical.py"
+    offenders = [
+        f"{path.relative_to(root)}: {token}"
+        for path in sorted(root.rglob("*.py"))
+        if path != helper
+        for token in (
+            "localCheckpoint(", "StorageLevel", "spark_partition_id() >= 0"
+        )
+        if token in path.read_text()
+    ]
+    assert offenders == []
