@@ -5,11 +5,34 @@ so Catalyst sees the scan directly — filters/projections push down to
 the file source. Tiny fixed-cardinality dims (region: 5 rows,
 nation: 25) are marked for broadcast so joins against them never
 shuffle the fact side.
+
+Schema cache: a file-format read without a schema makes Spark run one
+inference job (footer reads for parquet, a pass over the data for
+``inferSchema`` csv) every time a table is named. ``Catalog.load``
+keeps the schema Spark inferred in a process-wide cache, shared by
+every ``Catalog`` instance, and on a hit passes it back with
+``.schema(...)``: the scan plans with no job, and the types are
+Spark's own. The key is
+
+- the absolute path, the format and the reader options;
+- name, size, ``st_mtime_ns``, ``st_ctime_ns`` and inode of every file
+  under the path (directory datasets are walked, hidden files
+  included);
+- the session conf values that change inference (``_INFERENCE_CONFS``).
+
+Rewriting, adding, removing or renaming a file, or flipping one of
+those confs, therefore changes the key, and the next load infers
+again; a stale entry is never read. The cache holds at most
+``_SCHEMA_CACHE_MAX`` entries and evicts the least recently used.
+Manifest-committed tables bypass it: their reads are planned from the
+schema the manifest records.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -18,6 +41,64 @@ from pyspark.sql import DataFrame, SparkSession
 # supplier GROW with SF, so they are left to AQE + the
 # autoBroadcastJoinThreshold rather than force-broadcast.
 ALWAYS_BROADCAST = frozenset({"region", "nation"})
+
+# session confs whose value changes the schema Spark infers for a file
+# source: nanos-as-long, binary-as-string, INT96 and NTZ mapping for
+# parquet; the inferred timestamp type for csv/json
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.timestampType",
+)
+_SCHEMA_CACHE_MAX = 512
+_schema_cache: OrderedDict = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _cache_get(key):
+    with _schema_lock:
+        schema = _schema_cache.get(key)
+        if schema is not None:
+            _schema_cache.move_to_end(key)
+        return schema
+
+
+def _cache_put(key, schema) -> None:
+    with _schema_lock:
+        _schema_cache[key] = schema
+        _schema_cache.move_to_end(key)
+        while len(_schema_cache) > _SCHEMA_CACHE_MAX:
+            _schema_cache.popitem(last=False)
+
+
+def _file_signature(path: str) -> tuple:
+    """(relative name, size, mtime_ns, ctime_ns, inode) of every file
+    under ``path`` (``path`` itself when it is a file), sorted."""
+    def sig(full, rel):
+        st = os.stat(full)
+        return (rel, st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino)
+
+    if not os.path.isdir(path):
+        return (sig(path, ""),)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            out.append(sig(full, os.path.relpath(full, path)))
+    return tuple(sorted(out))
+
+
+def _schema_key(spark, path: str, fmt: str, options: dict) -> tuple:
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return (
+        os.path.abspath(path),
+        fmt,
+        tuple(sorted(options.items())),
+        confs,
+        _file_signature(path),
+    )
 
 
 class Catalog:
@@ -90,9 +171,22 @@ class Catalog:
                 f"table {name!r}: version= only applies to "
                 "manifest-committed tables"
             )
-        df = self.spark.read.format(self.fmt).options(**self.options).load(path)
+        df = self._read(path)
         if self.fmt == "parquet":
             df = self._fix_nanos(df, path)
+        return df
+
+    def _read(self, path: str) -> DataFrame:
+        """The format reader over ``path``, with the cached inferred
+        schema when the files and confs are unchanged (see the module
+        docstring); a miss infers as usual and stores the schema."""
+        key = _schema_key(self.spark, path, self.fmt, self.options)
+        schema = _cache_get(key)
+        reader = self.spark.read.format(self.fmt).options(**self.options)
+        if schema is not None:
+            return reader.schema(schema).load(path)
+        df = reader.load(path)
+        _cache_put(key, df.schema)
         return df
 
     def _fix_nanos(self, df: DataFrame, path: str):

@@ -846,6 +846,10 @@ def _plan_read(spark, base: str, m: dict, files=None) -> DataFrame:
     falls back to exact file paths and is never read. Planning is
     O(#commits), not O(#files).
 
+    Unpartitioned versions read with the manifest's recorded schema
+    (no inference job); manifests without ``schema_ddl`` and
+    schema-evolved (``merge_schema``) versions let Spark infer.
+
     Partitioned tables read per commit dir with ``basePath`` (so the
     ``col=value`` dirs surface as columns) and the manifest's exact
     ordered schema (types never depend on path inference; with
@@ -881,6 +885,7 @@ def _plan_read(spark, base: str, m: dict, files=None) -> DataFrame:
         else:
             per_dir[d] = [f"{full}/{r}" for r in sorted(rels)]
 
+    ddl = _manifest_ddl(m)
     if not m.get("partition_by"):
         paths = [p for ps in per_dir.values() for p in ps]
         reader = spark.read
@@ -888,9 +893,12 @@ def _plan_read(spark, base: str, m: dict, files=None) -> DataFrame:
             # schema-evolved version: files span schemas; merge so
             # old files null-fill columns added later
             reader = reader.option("mergeSchema", "true")
+        elif ddl is not None:
+            # every file carries the recorded schema: plan the scan
+            # from it, with no footer-inference job
+            reader = reader.schema(ddl)
         return reader.parquet(*paths)
 
-    ddl = _manifest_ddl(m)
     order = [n for n, _t in m["schema_ddl"]]
     out = None
     for d, paths in per_dir.items():

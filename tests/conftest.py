@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -65,3 +66,17 @@ def assert_df_matches_sql(df, con, sql, sort=False):
         f"rows differ: got {len(got)} want {len(want)}\n"
         f"first got: {got[:3]}\nfirst want: {want[:3]}"
     )
+
+
+def jobs_started(spark, fn):
+    """Run ``fn()`` under a fresh Spark job group and return
+    ``(result, number of Spark jobs it started)``."""
+    sc = spark.sparkContext
+    group = f"jobs-started-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group) or [])

@@ -17,6 +17,7 @@ from prql_spark.sources.manifest import (
     snapshot_write,
     vacuum_snapshot,
 )
+from tests.conftest import jobs_started
 
 
 def _ids(df):
@@ -2374,3 +2375,70 @@ def test_process_increment_raced_append_lands_next_run(
     got = sorted(r.id for r in snapshot_read(spark, dst).collect())
     assert got == list(range(95))  # every source row exactly once
     assert process_increment(spark, src, dst, double)["processed"] is False
+
+
+def test_snapshot_read_plans_from_recorded_schema(spark, tmp_path):
+    """Unpartitioned reads pass the manifest's ``schema_ddl`` to the
+    reader: no inference job, and the same schema and rows as an
+    inferring read of the same files, across every column type."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from prql_spark.sources.manifest import snapshot_pruned_read
+
+    schema = (
+        "l BIGINT, i INT, d DOUBLE, m DECIMAL(12,2), s STRING, "
+        "b BINARY, f BOOLEAN, day DATE, ts TIMESTAMP, "
+        "arr ARRAY<STRING>, st STRUCT<x: INT, y: STRING>, "
+        "mp MAP<STRING, INT>"
+    )
+    rows = [
+        (1, 2, 0.5, Decimal("1234567890.12"), "a", b"\x00\x01", True,
+         dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 3, 4, 5, 678901),
+         ["p", "q"], (7, "z"), {"k": 1}),
+        (9, -3, -1e300, Decimal("-0.01"), "", b"", False,
+         dt.date(1970, 1, 1), dt.datetime(1999, 12, 31, 23, 59, 59),
+         [], (None, None), {}),
+        (20,) + (None,) * 11,
+    ]
+    path = str(tmp_path / "types")
+    snapshot_write(spark.createDataFrame(rows, schema).repartition(2), path,
+                   stats_cols=("l",))
+    got, n = jobs_started(spark, lambda: snapshot_read(spark, path))
+    assert n == 0
+    inferred = spark.read.parquet(*got.inputFiles())
+    assert got.schema == inferred.schema
+    assert [f.dataType.simpleString() for f in got.schema] == [
+        f.dataType.simpleString()
+        for f in spark.createDataFrame([], schema).schema]
+    assert sorted(map(repr, got.collect())) == sorted(
+        map(repr, inferred.collect()))
+
+    (pruned, n_kept, _), n = jobs_started(
+        spark, lambda: snapshot_pruned_read(spark, path, {"l": (0, 5)}))
+    assert n == 0 and n_kept >= 1
+    assert pruned.schema == got.schema
+
+
+def test_time_travel_without_recorded_schema_infers(spark, tmp_path):
+    """A manifest written before ``schema_ddl`` existed still reads:
+    Spark infers its schema, as it always did."""
+    path = str(tmp_path / "legacy")
+    snapshot_write(spark.range(0, 10), path)
+    snapshot_write(spark.range(10, 15), path, mode="append")
+    mf = os.path.join(path, "_manifests", f"v{1:010d}.json")
+    with open(mf) as fh:
+        m = json.load(fh)
+    del m["schema_ddl"]
+    with open(mf, "w") as fh:
+        json.dump(m, fh)
+    # the local Hadoop filesystem checksums the file it wrote
+    crc = os.path.join(path, "_manifests", f".v{1:010d}.json.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    old, n_old = jobs_started(spark, lambda: snapshot_read(spark, path, 1))
+    assert n_old >= 1
+    assert _ids(old) == list(range(10))
+    head, n_head = jobs_started(spark, lambda: snapshot_read(spark, path))
+    assert n_head == 0
+    assert _ids(head) == list(range(15))

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from prql_spark import Catalog, compile_prql
 from prql_spark.sources import io as pio
+from tests.conftest import jobs_started
 
 
 def test_csv_roundtrip(spark, catalog, tmp_path):
@@ -311,3 +312,162 @@ def test_warc_to_documents_charset(spark, tmp_path):
     # declared latin-1 decodes correctly; undeclared stays utf-8
     assert docs["http://l.example/"] == "caf\xe9 r\xe9sum\xe9"
     assert docs["http://u.example/"] == "caf\xe9 utf8"
+
+
+# ------------------------------------------------- catalog schema cache
+
+
+def _fresh_load(spark, data_dir, name, **kw):
+    """Load ``name`` through a new Catalog; return (df, jobs started)."""
+    return jobs_started(spark, lambda: Catalog(spark, data_dir, **kw).load(name))
+
+
+def _write_pq(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), path)
+
+
+def test_catalog_repeat_load_starts_no_job(spark, tmp_path):
+    """Schema inference runs once per file signature: a second load
+    through a FRESH Catalog plans the scan from the cached schema."""
+    _write_pq(str(tmp_path / "t.parquet"), k=[1, 2, 3], v=["a", "b", "c"])
+    first, n_first = _fresh_load(spark, str(tmp_path), "t")
+    second, n_second = _fresh_load(spark, str(tmp_path), "t")
+    assert n_first >= 1  # the miss infers
+    assert n_second == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_catalog_cache_sees_file_rewritten_in_place(spark, tmp_path):
+    f = str(tmp_path / "t.parquet")
+    _write_pq(f, k=[1, 2])
+    assert _fresh_load(spark, str(tmp_path), "t")[0].columns == ["k"]
+    assert _fresh_load(spark, str(tmp_path), "t")[1] == 0  # cached
+    _write_pq(f, k=[3, 4, 5], extra=["x", "y", "z"])
+    df, n = _fresh_load(spark, str(tmp_path), "t")
+    assert n >= 1
+    assert df.columns == ["k", "extra"]
+    assert sorted(df.collect()) == [(3, "x"), (4, "y"), (5, "z")]
+
+
+def test_catalog_cache_sees_file_added_to_directory(spark, tmp_path):
+    d = tmp_path / "t"
+    d.mkdir()
+    _write_pq(str(d / "part-0.parquet"), k=[1, 2])
+    assert _fresh_load(spark, str(tmp_path), "t")[0].count() == 2
+    _write_pq(str(d / "part-1.parquet"), k=[3])
+    df, n = _fresh_load(spark, str(tmp_path), "t")
+    assert n >= 1
+    assert sorted(r.k for r in df.collect()) == [1, 2, 3]
+
+
+def test_catalog_cache_follows_binary_as_string(spark, tmp_path):
+    from pyspark.sql.types import BinaryType, StringType
+
+    _write_pq(str(tmp_path / "t.parquet"), b=[b"ab", b"cd"])
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        df = _fresh_load(spark, str(tmp_path), "t")[0]
+        assert df.schema["b"].dataType == BinaryType()
+        spark.conf.set(key, "true")
+        df = _fresh_load(spark, str(tmp_path), "t")[0]
+        assert df.schema["b"].dataType == StringType()
+        assert sorted(r.b for r in df.collect()) == ["ab", "cd"]
+        spark.conf.set(key, "false")
+        df, n = _fresh_load(spark, str(tmp_path), "t")
+        assert n == 0  # back to the first entry
+        assert df.schema["b"].dataType == BinaryType()
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_catalog_csv_hit_matches_miss(spark, tmp_path):
+    """An ``inferSchema`` csv catalog returns the same schema and rows
+    from the cached schema as from inference."""
+    (tmp_path / "t.csv").write_text(
+        "id,price,name,day\n1,2.5,a,2024-01-02\n2,,b c,2024-02-03\n")
+    miss, n_miss = _fresh_load(spark, str(tmp_path), "t", fmt="csv")
+    hit, n_hit = _fresh_load(spark, str(tmp_path), "t", fmt="csv")
+    assert n_miss >= 1 and n_hit == 0
+    assert [f.dataType.simpleString() for f in miss.schema] == [
+        "int", "double", "string", "date"]
+    assert hit.schema == miss.schema
+    assert sorted(hit.collect(), key=repr) == sorted(miss.collect(), key=repr)
+
+
+def test_catalog_nanosecond_timestamps(spark, tmp_path):
+    """parquet TIMESTAMP(NANOS) columns surface as TimestampType with
+    exact (truncated) microseconds, on the inferring load and on the
+    cached one."""
+    import pyarrow as pa
+    from pyspark.sql.types import TimestampType
+
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_000_999, 1_000]
+    _write_pq(str(tmp_path / "t.parquet"), id=[0, 1, 2],
+              ts=pa.array(ns, pa.timestamp("ns")))
+    for _ in range(2):
+        df, n = _fresh_load(spark, str(tmp_path), "t")
+        assert df.schema["ts"].dataType == TimestampType()
+        got = sorted(tuple(r) for r in df.select(
+            "id", F.unix_micros("ts")).collect())
+        assert got == [(i, v // 1000) for i, v in enumerate(ns)]
+    assert n == 0  # the second load planned from the cached schema
+
+
+def test_prql_build_on_warm_cache_starts_no_job(spark, catalog):
+    """Pure-PRQL TPC-H programs build with zero Spark jobs once their
+    tables' schemas are cached: only the drain runs jobs."""
+    from __spark_entry__ import _PRQL_QUERIES
+
+    text = _PRQL_QUERIES["q8_market_share"][0]
+    compile_prql(text, Catalog(spark, catalog.data_dir))  # warm
+    df, n = jobs_started(
+        spark, lambda: compile_prql(text, Catalog(spark, catalog.data_dir)))
+    assert n == 0
+    assert df.count() > 0
+
+
+def test_schema_cache_concurrent_use_stays_bounded(monkeypatch):
+    """Loads from many threads share the cache: LRU bookkeeping and
+    eviction never lose an entry they return or exceed the bound."""
+    import sys
+    import threading
+
+    from prql_spark.sources import catalog as cat_mod
+
+    monkeypatch.setattr(cat_mod, "_SCHEMA_CACHE_MAX", 8)
+    monkeypatch.setattr(cat_mod, "_schema_cache", type(cat_mod._schema_cache)())
+    errors = []
+
+    def worker(w):
+        try:
+            for i in range(2000):
+                key = ("k", (w * 7 + i) % 13)
+                got = cat_mod._cache_get(key)
+                assert got is None or got == key[1]
+                cat_mod._cache_put(key, key[1])
+                with cat_mod._schema_lock:
+                    assert len(cat_mod._schema_cache) <= 8
+        except Exception as e:  # surfaced by the main thread
+            errors.append(e)
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,))
+                   for w in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(cat_mod._schema_cache) <= 8
+
