@@ -72,14 +72,9 @@ def process_increment(
     refusal (process the full version or re-derive the destination);
     it is never silently misread.
     """
-    fs, jvm = mf._fs(spark, source_path)
-    src_base = source_path.rstrip("/")
-    seen = mf._versions(fs, jvm, src_base)
-    if not seen:
-        raise ValueError(
-            f"process_increment: no versions at {source_path!r}"
-        )
-    latest = seen[-1]
+    _, _, src_base, _, latest, _ = mf._open(
+        spark, source_path, "process_increment"
+    )
     sname = source_name or f"incr:{src_base}"
 
     dfs, djvm = mf._fs(spark, dest_path)
@@ -129,9 +124,9 @@ def _commit_rows(spark: SparkSession, base: str, version: int):
     """Rows ADDED by ``version``'s commit, from the manifest's
     write-time per-file counts — zero Spark jobs, ``None`` when any
     added file lacks a count (no ``stats_cols`` on the write)."""
-    fs, jvm = mf._fs(spark, base)
-    m = mf._load_manifest(fs, jvm, base, version)
-    seen = mf._versions(fs, jvm, base)
+    fs, jvm, _, seen, _, m = mf._open(
+        spark, base, "process_increment", version
+    )
     before = [v for v in seen if v < version]
     prev = (
         {f["path"] for f in mf._load_manifest(fs, jvm, base,

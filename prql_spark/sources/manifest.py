@@ -68,6 +68,15 @@ three-line interface.
 Manifests carry RELATIVE file paths — a dataset can be cloned or
 mounted elsewhere.
 
+Each table rule is written once, in a private helper every public
+function goes through: :func:`_open` is the only version lookup (and
+the only "no versions" / "version N not in" error), :func:`_publish`
+the only commit loop (list the head, build on it, carry the
+per-stream high-water map forward, retry a lost race),
+:func:`_overlaps_bounds` the only rule for skipping a file, and
+:func:`_rewrite_scoped` the one plan → stage → commit loop of the
+scoped maintenance rewrites (compact, optimize).
+
 Single-manifest simplification (documented trade-off vs Iceberg's
 manifest lists): each commit's manifest holds the FULL file list.
 At 400k files × ~60 bytes that is a ~25 MB driver-side JSON per
@@ -353,6 +362,58 @@ def _load_manifest(fs, jvm, base: str, version: int) -> dict:
     )
 
 
+def _open(spark, path: str, op: str, version: int | None = None):
+    """The one version lookup: ``(fs, jvm, base, versions, version,
+    manifest)`` for ``version`` (default: the head) of the table at
+    ``path``. Raises ``ValueError`` when the table has no versions or
+    ``version`` is not one of them."""
+    fs, jvm = _fs(spark, path)
+    base = path.rstrip("/")
+    seen = _versions(fs, jvm, base)
+    if not seen:
+        raise ValueError(f"{op}: no versions at {path!r}")
+    v = seen[-1] if version is None else version
+    if v not in seen:
+        raise ValueError(f"{op}: version {v} not in {seen} at {path!r}")
+    return fs, jvm, base, seen, v, _load_manifest(fs, jvm, base, v)
+
+
+_COMMIT_ATTEMPTS = 20
+
+
+def _publish(fs, jvm, base: str, op: str, build) -> dict:
+    """The one commit loop: list the head, let ``build(head,
+    head_manifest)`` (both None on an empty table) return the next
+    manifest, stamp it ``version``/``parent``, carry the per-stream
+    high-water map forward (max per stream, so a commit can never
+    lower a stream's bookmark) and publish it as the next version.
+    A lost race re-lists and rebuilds on the new head, up to
+    ``_COMMIT_ATTEMPTS`` times. ``build`` raises to refuse a head it
+    cannot commit on top of. Returns the published manifest."""
+    for _ in range(_COMMIT_ATTEMPTS):
+        seen = _versions(fs, jvm, base)
+        head = seen[-1] if seen else None
+        hm = None
+        if head is None:
+            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{base}/{_MANIFEST_DIR}"))
+        else:
+            hm = _load_manifest(fs, jvm, base, head)
+        manifest = {**build(head, hm), "version": (head or 0) + 1,
+                    "parent": head}
+        streams = dict((hm or {}).get("streams") or {})
+        for sid, ep in (manifest.get("streams") or {}).items():
+            streams[sid] = max(int(ep), streams.get(sid, -1))
+        manifest["streams"] = streams
+        if _write_text_atomic(
+            fs, jvm, f"{base}/{_MANIFEST_DIR}",
+            f"v{manifest['version']:010d}.json", json.dumps(manifest),
+        ):
+            return manifest
+    raise RuntimeError(
+        f"{op}: lost {_COMMIT_ATTEMPTS} commit races at {base!r}"
+    )
+
+
 _STATS_MAX_CHARS = 32
 
 
@@ -399,9 +460,23 @@ def _bound_stat(lo, hi):
 
 
 def _stats_enc(v):
-    """JSON-encode a stats bound the way snapshot_scan compares them
-    (timestamps/dates → ISO strings, bytes → utf-8)."""
+    """JSON-encode a stats value or query bound the way
+    :func:`_overlaps_bounds` compares them (timestamps/dates → naive
+    ISO strings, bytes → utf-8).
+
+    Returns None for a tz-AWARE datetime (e.g. a TIMESTAMP_MICROS/
+    MILLIS footer with isAdjustedToUTC): every stats producer and
+    consumer compares NAIVE isoformat strings, and a '+00:00' suffix
+    sorts GREATER than any naive bound with the same prefix — a file
+    whose min equals the query hi bound would be wrongly pruned, and
+    a non-UTC session timezone shifts the wall-clock value itself.
+    Converting correctly needs the Spark session timezone, which
+    driver-side code does not know, so the value is "no usable
+    stats": the file is always read (or the exact distributed scan
+    provides naive stats)."""
     if hasattr(v, "isoformat"):
+        if getattr(v, "tzinfo", None) is not None:
+            return None
         return v.isoformat()
     if isinstance(v, (bytes, bytearray)):
         return bytes(v).decode("utf-8", "replace")
@@ -451,11 +526,12 @@ def _staged_stats(
     for r in rows:
         st = {}
         for c in cols:
-            lo, hi = r[f"mn_{c}"], r[f"mx_{c}"]
+            lo = _stats_enc(r[f"mn_{c}"])
+            hi = _stats_enc(r[f"mx_{c}"])
             # an all-NULL file has no usable range for c; scans then
             # always read it (safe), same as a stats-less footer
             if lo is not None and hi is not None:
-                rng = _bound_stat(_stats_enc(lo), _stats_enc(hi))
+                rng = _bound_stat(lo, hi)
                 if rng is not None:
                     st[c] = rng
         rel = unquote(r["f"].split(marker, 1)[1])
@@ -672,7 +748,6 @@ def snapshot_write(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
-    max_commit_attempts: int = 20,
     extra: dict | None = None,
     allow_new_columns: bool = False,
     stats_cols: tuple | None = None,
@@ -698,11 +773,15 @@ def snapshot_write(
     check survives :func:`vacuum_snapshot` trimming old manifests
     (the latest manifest alone knows every stream's high water).
     ``stats_cols`` collects exact per-file [min, max] for those
-    columns AT WRITE TIME (one column-pruned distributed scan of the
-    new files — works on any filesystem, unlike the driver-side
-    footer reads of :func:`attach_stats`) and embeds them in the
-    manifest, powering :func:`snapshot_scan` file skipping with no
-    separate stats commit.
+    columns AT WRITE TIME and embeds them in the manifest, powering
+    :func:`snapshot_scan` file skipping with no separate stats
+    commit. The new files' parquet footers are read first (metadata
+    only: driver-side on a local filesystem, one tiny executor task
+    per file elsewhere); a footer lacking min/max, an unreadable
+    footer or a commit wider than 256 files falls back to one
+    column-pruned distributed scan of the new files. Both work on
+    any filesystem, unlike the driver-side footer reads of
+    :func:`attach_stats`.
     ``partition_by`` lays the commit out hive-style
     (``col=value`` dirs inside the commit dir) and records each
     file's partition values in the manifest — as a ``partition``
@@ -754,21 +833,9 @@ def snapshot_write(
         df, base, fs, jvm, partition_by, col_types, stats_cols
     )
 
-    fs.mkdirs(
-        jvm.org.apache.hadoop.fs.Path(f"{base}/{_MANIFEST_DIR}")
-    )
-    for _ in range(max_commit_attempts):
-        seen = _versions(fs, jvm, base)
-        parent = seen[-1] if seen else None
-        version = (parent or 0) + 1
+    def build(parent, pm):
         files = list(staged)
         merge_schema = False
-        streams: dict = {}
-        if parent is not None:
-            pm = _load_manifest(fs, jvm, base, parent)
-            # the per-stream high-water map rides EVERY commit (incl.
-            # overwrites), so it survives vacuum trimming manifests
-            streams = dict(pm.get("streams") or {})
         if mode == "append" and parent is not None:
             ppart = tuple(pm.get("partition_by") or ())
             if ppart != partition_by:
@@ -794,36 +861,29 @@ def snapshot_write(
                 merge_schema = True
             merge_schema = merge_schema or bool(pm.get("merge_schema"))
             files = pm["files"] + files
+        streams: dict = {}
         if extra and "stream_id" in extra and "epoch" in extra:
-            sid = str(extra["stream_id"])
-            streams[sid] = max(int(extra["epoch"]), streams.get(sid, -1))
-        manifest = {
-            "version": version,
-            "parent": parent,
+            streams[str(extra["stream_id"])] = int(extra["epoch"])
+        return {
             "operation": mode,
             "commit": commit_id,
             "schema": schema_sig,
             "schema_ddl": schema_ddl,
             "partition_by": list(partition_by),
             "merge_schema": merge_schema,
+            # the per-stream high-water map rides EVERY commit (incl.
+            # overwrites), so it survives vacuum trimming manifests
             "streams": streams,
             "files": files,
             **(extra or {}),
         }
-        if _write_text_atomic(
-            fs, jvm, f"{base}/{_MANIFEST_DIR}",
-            f"v{version:010d}.json", json.dumps(manifest),
-        ):
-            return {
-                "version": version,
-                "n_files": len(files),
-                "operation": mode,
-            }
-        # another writer claimed this version — rebase and retry
-    raise RuntimeError(
-        f"snapshot_write: lost {max_commit_attempts} commit races at "
-        f"{path!r}"
-    )
+
+    m = _publish(fs, jvm, base, "snapshot_write", build)
+    return {
+        "version": m["version"],
+        "n_files": len(m["files"]),
+        "operation": mode,
+    }
 
 
 def _manifest_ddl(m: dict) -> str | None:
@@ -922,23 +982,10 @@ def snapshot_read(
     latest). Plans from the manifest's file list — one listing per
     referenced commit directory (to validate dir-grouped planning),
     never a recursive data-tree walk."""
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if not seen:
-        raise ValueError(f"snapshot_read: no versions at {path!r}")
-    if version is None:
-        version = seen[-1]
-    if version not in seen:
-        raise ValueError(
-            f"snapshot_read: version {version} not in {seen} at {path!r}"
-        )
-    manifest = _load_manifest(fs, jvm, base, version)
-    if not manifest["files"]:
-        raise ValueError(
-            f"snapshot_read: version {version} is empty at {path!r}"
-        )
-    return _plan_read(spark, base, manifest)
+    _, _, base, _, v, m = _open(spark, path, "snapshot_read", version)
+    if not m["files"]:
+        raise ValueError(f"snapshot_read: version {v} is empty at {path!r}")
+    return _plan_read(spark, base, m)
 
 
 def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
@@ -979,17 +1026,7 @@ def snapshot_count(
     opens; the 100 TB ``SELECT count(*)`` that doesn't scan 100 TB.
     Falls back to one real ``count()`` job when any file lacks a
     recorded count (plain writes without stats)."""
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if not seen:
-        raise ValueError(f"snapshot_count: no versions at {path!r}")
-    v = seen[-1] if version is None else version
-    if v not in seen:
-        raise ValueError(
-            f"snapshot_count: version {v} not in {seen} at {path!r}"
-        )
-    m = _load_manifest(fs, jvm, base, v)
+    _, _, _, _, v, m = _open(spark, path, "snapshot_count", version)
     counts = [f.get("n_rows") for f in m["files"]]
     if counts and all(c is not None for c in counts):
         return int(sum(counts))
@@ -1008,17 +1045,7 @@ def snapshot_partitions(
     directory: at 100 TB / 10k partitions this is one small JSON
     read, not 10k object-store LISTs. Raises on an unpartitioned
     table."""
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if not seen:
-        raise ValueError(f"snapshot_partitions: no versions at {path!r}")
-    v = seen[-1] if version is None else version
-    if v not in seen:
-        raise ValueError(
-            f"snapshot_partitions: version {v} not in {seen} at {path!r}"
-        )
-    m = _load_manifest(fs, jvm, base, v)
+    _, _, _, _, v, m = _open(spark, path, "snapshot_partitions", version)
     pby = list(m.get("partition_by") or ())
     if not pby:
         raise ValueError(
@@ -1068,6 +1095,47 @@ def _maintenance_subset(
     return subset, rest
 
 
+def _rewrite_scoped(
+    spark, path: str, op: str, where: str | None, max_replan: int, layout
+) -> tuple[dict, list, dict | None]:
+    """The one scoped-rewrite loop under :func:`compact_snapshot` and
+    :func:`optimize_snapshot`: open the head, take the ``where``
+    subset, ask ``layout(m, subset)`` for ``(lay, stats_cols)`` (or
+    None: nothing to do), plan the subset, stage ``lay(df)`` with
+    stats and publish through :func:`_commit_replacing` with the
+    out-of-scope files kept. A conflict re-plans against the new head
+    up to ``max_replan`` times, then raises. Returns ``(manifest,
+    subset, commit result)``; the result is None for a no-op."""
+    name = f"{op}_snapshot"
+    for attempt in range(max_replan + 1):
+        fs, jvm, base, _, _, m = _open(spark, path, name)
+        subset, rest = _maintenance_subset(spark, m, where, name)
+        plan = layout(m, subset)
+        if plan is None:
+            return m, subset, None
+        lay, stats_cols = plan
+        pby = tuple(m.get("partition_by") or ())
+        # plan from the exact manifest the commit will validate
+        # against (not "latest again" — a racing append between the
+        # two reads must surface as a conflict, not silently join
+        # the rewrite)
+        df = lay(_plan_read(spark, base, m, subset))
+        commit_id, staged = _stage_commit(
+            df, base, fs, jvm, pby, dict(m.get("schema_ddl") or []),
+            stats_cols=stats_cols,
+        )
+        try:
+            res = _commit_replacing(
+                spark, path, m, {f["path"] for f in rest}, staged, op,
+                commit_id=commit_id,
+            )
+        except RuntimeError:
+            if attempt >= max_replan:
+                raise
+            continue  # conflict: re-plan against the new head
+        return m, subset, res
+
+
 def compact_snapshot(
     spark: SparkSession,
     path: str,
@@ -1107,16 +1175,7 @@ def compact_snapshot(
     """
     import math
 
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    for attempt in range(max_replan + 1):
-        seen = _versions(fs, jvm, base)
-        if not seen:
-            raise ValueError(f"compact_snapshot: no versions at {path!r}")
-        m = _load_manifest(fs, jvm, base, seen[-1])
-        subset, rest = _maintenance_subset(
-            spark, m, where, "compact_snapshot"
-        )
+    def layout(m, subset):
         total = sum(f["bytes"] for f in subset)
         want = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
         pby = tuple(m.get("partition_by") or ())
@@ -1129,41 +1188,26 @@ def compact_snapshot(
             )
             want = max(want, n_parts)
         if len(subset) <= want:
-            return {"compacted": False, "n_files": len(m["files"])}
-        # plan from the exact manifest the commit will validate
-        # against (not "latest again" — a racing append between the
-        # two reads must surface as a conflict, not silently join
-        # the rewrite)
-        df = _plan_read(spark, base, m, subset)
-        if pby:
-            df = df.repartition(want, *pby)
-        else:
-            df = df.coalesce(want)
-        # stage the repacked files, then publish through the
-        # validated commit path (kept: only out-of-scope files) —
+            return None
         # stats coverage is re-collected so file skipping never
         # degrades across a compaction
-        col_types = dict(m.get("schema_ddl") or [])
-        commit_id, staged = _stage_commit(
-            df, base, fs, jvm, pby, col_types,
-            stats_cols=_table_stats_cols(m, pby),
-        )
-        try:
-            res = _commit_replacing(
-                spark, path, m, {f["path"] for f in rest}, staged,
-                "compact", commit_id=commit_id,
-            )
-        except RuntimeError:
-            if attempt >= max_replan:
-                raise
-            continue  # conflict: re-plan against the new head
-        return {
-            "compacted": True,
-            "version": res["version"],
-            "n_files_before": len(subset),
-            "n_files_after": res["n_files_new"],
-            "n_files_kept": res["n_files_kept"],
-        }
+        stats = _table_stats_cols(m, pby)
+        if pby:
+            return (lambda df: df.repartition(want, *pby)), stats
+        return (lambda df: df.coalesce(want)), stats
+
+    m, subset, res = _rewrite_scoped(
+        spark, path, "compact", where, max_replan, layout
+    )
+    if res is None:
+        return {"compacted": False, "n_files": len(m["files"])}
+    return {
+        "compacted": True,
+        "version": res["version"],
+        "n_files_before": len(subset),
+        "n_files_after": res["n_files_new"],
+        "n_files_kept": res["n_files_kept"],
+    }
 
 
 def optimize_snapshot(
@@ -1208,16 +1252,12 @@ def optimize_snapshot(
     from prql_spark.sources.layout import zorder_expr
     from pyspark.sql import functions as F
 
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    for attempt in range(max_replan + 1):
-        seen = _versions(fs, jvm, base)
-        if not seen:
-            raise ValueError(f"optimize_snapshot: no versions at {path!r}")
-        m = _load_manifest(fs, jvm, base, seen[-1])
-        subset, rest = _maintenance_subset(
-            spark, m, where, "optimize_snapshot"
-        )
+    def layout(m, subset):
+        if not subset:
+            raise ValueError(
+                f"optimize_snapshot: nothing to optimize at {path!r}"
+                + (f" under where={where!r}" if where else "")
+            )
         total = sum(f["bytes"] for f in subset)
         # target_files pins the output file count directly (small
         # tables, tests); otherwise size to target_mb
@@ -1225,51 +1265,36 @@ def optimize_snapshot(
             1, math.ceil(total / (target_mb * 1024 * 1024))
         )
         pby = tuple(m.get("partition_by") or ())
-        if not subset:
-            raise ValueError(
-                f"optimize_snapshot: nothing to optimize at {path!r}"
-                + (f" under where={where!r}" if where else "")
+
+        def lay(df):
+            missing = [c for c in zorder_by if c not in df.columns]
+            if missing:
+                raise ValueError(
+                    f"optimize_snapshot: zorder_by columns {missing} "
+                    f"not in table columns {df.columns}"
+                )
+            z = zorder_expr(df, list(zorder_by))
+            keyed = df.withColumn("__z", F.expr(z))
+            range_key = [*pby, "__z"]
+            return (
+                keyed.repartitionByRange(want, *range_key)
+                .sortWithinPartitions(*range_key)
+                .drop("__z")
             )
-        # plan from the exact manifest the commit will validate
-        # against — a concurrent append between plan and publish
-        # raises via _commit_replacing (never silently dropped)
-        df = _plan_read(spark, base, m, subset)
-        missing = [c for c in zorder_by if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"optimize_snapshot: zorder_by columns {missing} not in "
-                f"table columns {df.columns}"
-            )
-        z = zorder_expr(df, list(zorder_by))
-        keyed = df.withColumn("__z", F.expr(z))
-        range_key = [*pby, "__z"]
-        out = (
-            keyed.repartitionByRange(want, *range_key)
-            .sortWithinPartitions(*range_key)
-            .drop("__z")
-        )
-        col_types = dict(m.get("schema_ddl") or [])
-        commit_id, staged = _stage_commit(
-            out, base, fs, jvm, pby, col_types,
-            stats_cols=tuple(stats_cols or zorder_by),
-        )
-        try:
-            res = _commit_replacing(
-                spark, path, m, {f["path"] for f in rest}, staged,
-                "optimize", commit_id=commit_id,
-            )
-        except RuntimeError:
-            if attempt >= max_replan:
-                raise
-            continue  # conflict: re-plan against the new head
-        return {
-            "version": res["version"],
-            "operation": "optimize",
-            "zorder_by": list(zorder_by),
-            "n_files_before": len(subset),
-            "n_files_after": res["n_files_new"],
-            "n_files_kept": res["n_files_kept"],
-        }
+
+        return lay, tuple(stats_cols or zorder_by)
+
+    _, subset, res = _rewrite_scoped(
+        spark, path, "optimize", where, max_replan, layout
+    )
+    return {
+        "version": res["version"],
+        "operation": "optimize",
+        "zorder_by": list(zorder_by),
+        "n_files_before": len(subset),
+        "n_files_after": res["n_files_new"],
+        "n_files_kept": res["n_files_kept"],
+    }
 
 
 def vacuum_snapshot(
@@ -1466,21 +1491,12 @@ def snapshot_changes(
     "added rows" and this raises instead of silently returning
     rewritten data.
     """
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if since_version not in seen:
-        raise ValueError(
-            f"snapshot_changes: version {since_version} not in {seen} "
-            f"at {path!r}"
-        )
-    if end_version is None:
-        end_version = seen[-1]
-    elif end_version not in seen:
-        raise ValueError(
-            f"snapshot_changes: end version {end_version} not in "
-            f"{seen} at {path!r}"
-        )
+    fs, jvm, base, _, _, sm = _open(
+        spark, path, "snapshot_changes", since_version
+    )
+    _, _, _, seen, end_version, em = _open(
+        spark, path, "snapshot_changes", end_version
+    )
     if end_version < since_version:
         raise ValueError(
             f"snapshot_changes: end version {end_version} < since "
@@ -1496,11 +1512,7 @@ def snapshot_changes(
                     "append — added files no longer mean added rows; "
                     "read the full version instead"
                 )
-    old = {
-        f["path"]
-        for f in _load_manifest(fs, jvm, base, since_version)["files"]
-    }
-    em = _load_manifest(fs, jvm, base, end_version)
+    old = {f["path"] for f in sm["files"]}
     new_files = [f for f in em["files"] if f["path"] not in old]
     if not new_files:
         return snapshot_read(spark, path, end_version).limit(0)
@@ -1849,16 +1861,9 @@ def _commit_replacing(
     streaming append's ``stream_id``/``epoch``) don't leak into an
     unrelated rewrite's manifest."""
     fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
     planned_paths = [f["path"] for f in planned["files"]]
-    for _ in range(20):
-        seen = _versions(fs, jvm, base)
-        head = seen[-1]
-        hm = (
-            planned
-            if head == planned["version"]
-            else _load_manifest(fs, jvm, base, head)
-        )
+
+    def build(head, hm):
         if [f["path"] for f in hm["files"]] != planned_paths:
             raise RuntimeError(
                 f"{operation}_snapshot: concurrent commit changed "
@@ -1866,10 +1871,7 @@ def _commit_replacing(
                 f"head v{head} references different files) — re-run "
                 "against the new head"
             )
-        kept = [f for f in hm["files"] if f["path"] in keep_paths]
-        manifest = {
-            "version": head + 1,
-            "parent": head,
+        return {
             "operation": operation,
             "commit": commit_id or hm.get("commit"),
             # schema overrides serve merge's opt-in evolution: the
@@ -1882,22 +1884,20 @@ def _commit_replacing(
             "partition_by": hm.get("partition_by") or [],
             "merge_schema": bool(hm.get("merge_schema"))
             if merge_schema is None else bool(merge_schema),
-            "streams": hm.get("streams") or {},
-            "files": kept + staged,
+            "files": [f for f in hm["files"] if f["path"] in keep_paths]
+            + staged,
         }
-        if _write_text_atomic(
-            fs, jvm, f"{base}/{_MANIFEST_DIR}",
-            f"v{head + 1:010d}.json", json.dumps(manifest),
-        ):
-            return {
-                "version": head + 1,
-                "operation": operation,
-                "n_files_rewritten": len(planned_paths)
-                - len(keep_paths),
-                "n_files_kept": len(kept),
-                "n_files_new": len(staged),
-            }
-    raise RuntimeError(f"{operation}_snapshot: lost commit races at {path!r}")
+
+    m = _publish(
+        fs, jvm, path.rstrip("/"), f"{operation}_snapshot", build
+    )
+    return {
+        "version": m["version"],
+        "operation": operation,
+        "n_files_rewritten": len(planned_paths) - len(keep_paths),
+        "n_files_kept": len(m["files"]) - len(staged),
+        "n_files_new": len(staged),
+    }
 
 
 def merge_snapshot(
@@ -1947,12 +1947,7 @@ def merge_snapshot(
     from pyspark.sql import functions as F
 
     on = tuple(on)
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if not seen:
-        raise ValueError(f"merge_snapshot: no versions at {path!r}")
-    m = _load_manifest(fs, jvm, base, seen[-1])
+    fs, jvm, base, _, _, m = _open(spark, path, "merge_snapshot")
     src_sig = sorted(
         (f.name, f.dataType.simpleString()) for f in source.schema.fields
     )
@@ -1987,31 +1982,14 @@ def merge_snapshot(
         *[F.max(c).alias(f"mx_{c}") for c in on],
     ).collect()[0]
     n_keys = krow["__n"]
+    # NULL keys never equi-join, so a hive NULL partition on a key
+    # column cannot hold a matchable row: _overlaps_bounds skips it
     bounds = {
         c: (krow[f"mn_{c}"], krow[f"mx_{c}"])
         for c in on
         if krow[f"mn_{c}"] is not None
     }
-
-    def overlaps(f) -> bool:
-        st = f.get("stats") or {}
-        pv = f.get("partition") or {}
-        for c, (lo, hi) in bounds.items():
-            # NULL keys never equi-join: a hive NULL partition on a
-            # key column cannot contain a matchable row — exact skip
-            if c in pv and pv[c] is None:
-                return False
-            rng = st.get(c)
-            if rng is None:
-                continue
-            try:
-                if rng[0] > _stats_enc(hi) or rng[1] < _stats_enc(lo):
-                    return False
-            except TypeError:
-                continue
-        return True
-
-    candidates = [f for f in m["files"] if overlaps(f)]
+    candidates = [f for f in m["files"] if _overlaps_bounds(f, bounds)]
 
     # stage 2: exact touched set — semi-join candidates vs keys,
     # one output row per file. Broadcast the keys only when they are
@@ -2199,12 +2177,7 @@ def delete_snapshot(
     the old files."""
     from pyspark.sql import functions as F
 
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if not seen:
-        raise ValueError(f"delete_snapshot: no versions at {path!r}")
-    m = _load_manifest(fs, jvm, base, seen[-1])
+    fs, jvm, base, _, _, m = _open(spark, path, "delete_snapshot")
     verdicts = _pure_partition_verdicts(spark, m, predicate)
     if verdicts is not None:
         doomed = {
@@ -2272,24 +2245,10 @@ def delete_snapshot(
     return res
 
 
-def _file_stats(local_path: str, cols: tuple) -> dict | None:
-    """Per-column [min, max] from one parquet footer (driver-side,
-    metadata only — no data pages read). JSON-serializable values
-    (timestamps/dates → ISO strings). None when the footer lacks
-    statistics."""
-    import pyarrow.parquet as pq
-
-    try:
-        meta = pq.read_metadata(local_path)
-    except Exception:
-        return None
-    return _stats_from_footer_meta(meta, cols)
-
-
 def _stats_from_footer_meta(meta, cols: tuple) -> dict | None:
     """Bounded per-column [min, max] from a pyarrow FileMetaData —
-    the shared core of the driver-side (:func:`_file_stats`) and
-    executor-side (:func:`_staged_stats_footers`) footer readers.
+    the shared core of every footer reader
+    (:func:`_footer_rows_and_stats`, driver- or executor-side).
     None when any requested column lacks usable statistics."""
     out: dict = {}
     want = set(cols)
@@ -2310,33 +2269,9 @@ def _stats_from_footer_meta(meta, cols: tuple) -> dict | None:
             out[name] = [lo, hi]
     if set(out) != want:
         return None
-
-    def enc(v):
-        if hasattr(v, "isoformat"):
-            # tz-AWARE datetimes (TIMESTAMP_MICROS/MILLIS footers with
-            # isAdjustedToUTC) are UNUSABLE here: every other stats
-            # producer/consumer (_staged_stats via Spark collect,
-            # _norm_ts_path, snapshot_scan's query-bound encoding)
-            # compares NAIVE isoformat strings, and a '+00:00' suffix
-            # sorts GREATER than any naive bound with the same prefix
-            # — a file whose min equals the query hi bound would be
-            # wrongly pruned, and a non-UTC session timezone shifts
-            # the wall-clock value itself. Converting correctly needs
-            # the Spark session timezone, which this driver-side
-            # helper does not know — so signal "no usable stats" and
-            # let the exact distributed scan (or no-stats = always
-            # read) handle the file. Naive values (DATE,
-            # TIMESTAMP_NTZ, unadjusted footers) keep the fast path.
-            if getattr(v, "tzinfo", None) is not None:
-                return None
-            return v.isoformat()
-        if isinstance(v, bytes):
-            return v.decode("utf-8", "replace")
-        return v
-
     bounded = {}
     for k, (lo, hi) in out.items():
-        lo_e, hi_e = enc(lo), enc(hi)
+        lo_e, hi_e = _stats_enc(lo), _stats_enc(hi)
         if lo_e is None or hi_e is None:
             return None  # tz-aware bound: stats unusable for pruning
         rng = _bound_stat(lo_e, hi_e)
@@ -2365,13 +2300,7 @@ def attach_stats(
     with the z-order writer: clustered layout → tight per-file
     ranges → most files skip.
     """
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if not seen:
-        raise ValueError(f"attach_stats: no versions at {path!r}")
-    v = seen[-1] if version is None else version
-    m = _load_manifest(fs, jvm, base, v)
+    fs, jvm, base, _, _, m = _open(spark, path, "attach_stats", version)
     scheme = jvm.org.apache.hadoop.fs.Path(base).toUri().getScheme()
     if scheme not in (None, "file"):
         raise ValueError(
@@ -2382,17 +2311,13 @@ def attach_stats(
     stats_by_path: dict[str, dict] = {}
     nrows_by_path: dict[str, int] = {}
     for f in m["files"]:
-        st = _file_stats(f"{local_base}/{f['path']}", cols)
-        if st is not None:
+        n_rows, st = _footer_rows_and_stats(
+            f"{local_base}/{f['path']}", tuple(cols)
+        )
+        if st:
             stats_by_path[f["path"]] = st
-        try:
-            import pyarrow.parquet as pq
-
-            nrows_by_path[f["path"]] = pq.read_metadata(
-                f"{local_base}/{f['path']}"
-            ).num_rows
-        except Exception:
-            pass
+        if n_rows is not None:
+            nrows_by_path[f["path"]] = n_rows
     # Publish on top of the CURRENT head, never on version v's file
     # list: a concurrent commit (or an explicit older ``version=``)
     # means v's list is stale, and re-publishing it would silently
@@ -2401,36 +2326,27 @@ def attach_stats(
     # attach to whatever subset of v's files the head still
     # references; files the head added since v simply carry no
     # stats (scans read them — safe).
-    for _ in range(20):
-        seen = _versions(fs, jvm, base)
-        head = seen[-1]
-        hm = m if head == v else _load_manifest(fs, jvm, base, head)
-        n_ok = 0
+    def build(head, hm):
         files = []
         for f in hm["files"]:
             nf = dict(f)
             st = stats_by_path.get(f["path"])
             if st is not None:
                 nf["stats"] = {**nf.get("stats", {}), **st}
-                n_ok += 1
             nr = nrows_by_path.get(f["path"])
             if nr is not None:
                 nf["n_rows"] = nr
             files.append(nf)
-        manifest = {
-            **hm,
-            "files": files,
-            "operation": "stats",
-            "parent": head,
-            "version": head + 1,
-        }
-        if _write_text_atomic(
-            fs, jvm, f"{base}/{_MANIFEST_DIR}",
-            f"v{head + 1:010d}.json", json.dumps(manifest),
-        ):
-            return {"version": head + 1, "files_with_stats": n_ok,
-                    "n_files": len(files)}
-    raise RuntimeError(f"attach_stats: lost commit races at {path!r}")
+        return {**hm, "files": files, "operation": "stats"}
+
+    out = _publish(fs, jvm, base, "attach_stats", build)
+    return {
+        "version": out["version"],
+        "files_with_stats": sum(
+            f["path"] in stats_by_path for f in out["files"]
+        ),
+        "n_files": len(out["files"]),
+    }
 
 
 def snapshot_scan(
@@ -2458,37 +2374,7 @@ def snapshot_scan(
 
     if lo is None and hi is None:
         raise ValueError("snapshot_scan: need lo and/or hi")
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if not seen:
-        raise ValueError(f"snapshot_scan: no versions at {path!r}")
-    v = seen[-1] if version is None else version
-    m = _load_manifest(fs, jvm, base, v)
-
-    def enc(x):
-        return x.isoformat() if hasattr(x, "isoformat") else x
-
-    lo_e, hi_e = enc(lo), enc(hi)
-    keep = []
-    for f in m["files"]:
-        # a hive NULL partition holds ONLY NULLs for its column — no
-        # row can satisfy a range bound (SQL: NULL >= x is never
-        # TRUE), so the skip is exact, not just conservative
-        pv = f.get("partition") or {}
-        if col in pv and pv[col] is None:
-            continue
-        rng = (f.get("stats") or {}).get(col)
-        if rng is not None:
-            fmin, fmax = rng
-            if lo_e is not None and fmax < lo_e:
-                continue
-            if hi_e is not None and fmin > hi_e:
-                continue
-        keep.append(f)
-    if not keep:
-        return snapshot_read(spark, path, v).limit(0).where(F.lit(False))
-    df = _plan_read(spark, base, m, keep)
+    df, _, _ = snapshot_pruned_read(spark, path, {col: (lo, hi)}, version)
     c = F.col(col)
     if lo is not None:
         df = df.where(c >= F.lit(lo))
@@ -2517,17 +2403,7 @@ def snapshot_pruned_read(
     that fails (type mismatch between a literal and the stored
     stats) keeps the file. Returns ``(df, n_kept, n_total)`` so the
     caller can decide whether pruning was worth re-planning."""
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if not seen:
-        raise ValueError(f"snapshot_pruned_read: no versions at {path!r}")
-    v = seen[-1] if version is None else version
-    if v not in seen:
-        raise ValueError(
-            f"snapshot_pruned_read: version {v} not in {seen} at {path!r}"
-        )
-    m = _load_manifest(fs, jvm, base, v)
+    _, _, base, _, v, m = _open(spark, path, "snapshot_pruned_read", version)
     keep = [f for f in m["files"] if _overlaps_bounds(f, bounds)]
     n_total = len(m["files"])
     if not keep:
@@ -2543,42 +2419,22 @@ def snapshot_restore(
     copied or deleted — one manifest write undoes a bad commit, and
     the bad version stays inspectable until vacuumed. The
     manifest-table answer to "the 3 am backfill wrote garbage"."""
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if version not in seen:
-        raise ValueError(
-            f"snapshot_restore: version {version} not in {seen} at "
-            f"{path!r}"
-        )
-    m = _load_manifest(fs, jvm, base, version)
-    for _ in range(20):
-        latest = _versions(fs, jvm, base)[-1]
-        # restore rolls back DATA, never the exactly-once ledger: the
-        # head's per-stream high-water map is merged forward (max per
-        # stream), else a replayed epoch would re-append post-restore
-        lm = _load_manifest(fs, jvm, base, latest)
-        streams = dict(m.get("streams") or {})
-        for sid, ep in (lm.get("streams") or {}).items():
-            streams[sid] = max(int(ep), streams.get(sid, -1))
-        manifest = {
-            **m,
-            "version": latest + 1,
-            "parent": latest,
-            "operation": "restore",
-            "restored_from": version,
-            "streams": streams,
-        }
-        if _write_text_atomic(
-            fs, jvm, f"{base}/{_MANIFEST_DIR}",
-            f"v{latest + 1:010d}.json", json.dumps(manifest),
-        ):
-            return {
-                "version": latest + 1,
-                "restored_from": version,
-                "n_files": len(m["files"]),
-            }
-    raise RuntimeError(f"snapshot_restore: lost commit races at {path!r}")
+    fs, jvm, base, _, _, m = _open(spark, path, "snapshot_restore", version)
+    # restore rolls back DATA, never the exactly-once ledger:
+    # _publish merges the head's per-stream high-water map forward
+    # (max per stream), else a replayed epoch would re-append
+    # post-restore
+    out = _publish(
+        fs, jvm, base, "snapshot_restore",
+        lambda head, hm: {
+            **m, "operation": "restore", "restored_from": version
+        },
+    )
+    return {
+        "version": out["version"],
+        "restored_from": version,
+        "n_files": len(m["files"]),
+    }
 
 
 def snapshot_describe(
@@ -2592,17 +2448,7 @@ def snapshot_describe(
     the global bounds — so an operator can see at a glance whether a
     predicate on a column will actually skip files before relying on
     it at 100 TB."""
-    fs, jvm = _fs(spark, path)
-    base = path.rstrip("/")
-    seen = _versions(fs, jvm, base)
-    if not seen:
-        raise ValueError(f"snapshot_describe: no versions at {path!r}")
-    v = seen[-1] if version is None else version
-    if v not in seen:
-        raise ValueError(
-            f"snapshot_describe: version {v} not in {seen} at {path!r}"
-        )
-    m = _load_manifest(fs, jvm, base, v)
+    _, _, _, seen, v, m = _open(spark, path, "snapshot_describe", version)
     counts = [f.get("n_rows") for f in m["files"]]
     cov: dict = {}
     for f in m["files"]:

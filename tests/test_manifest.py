@@ -11,9 +11,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from prql_spark.sources.manifest import (
+    CommitProtocol,
+    RenameCommitProtocol,
+    attach_stats,
     compact_snapshot,
+    delete_snapshot,
+    merge_snapshot,
     snapshot_history,
     snapshot_read,
+    snapshot_restore,
     snapshot_write,
     vacuum_snapshot,
 )
@@ -1505,13 +1511,16 @@ def test_sql_bounds_extractor_soundness():
     assert _sql_bounds("id >= 3 AND id >= 7") == {"id": (7, None)}
 
 
-def test_lockfile_commit_protocol_races_and_recovers(spark, tmp_path):
+def test_lockfile_commit_protocol_races_and_recovers(
+    spark, tmp_path, monkeypatch
+):
     """The pluggable commit seam: under LockFileCommitProtocol two
     racing writers serialize onto distinct versions (no lost
     commit), a HELD lock makes publishers lose (and retry onto the
     next attempt), and a STALE lock (dead writer) is broken by TTL."""
     import threading
 
+    from prql_spark.sources import manifest as mf
     from prql_spark.sources.manifest import (
         LockFileCommitProtocol,
         RenameCommitProtocol,
@@ -1548,10 +1557,10 @@ def test_lockfile_commit_protocol_races_and_recovers(spark, tmp_path):
         lock = os.path.join(path, "_manifests", ".commit.lock")
         with open(lock, "w") as f:
             f.write("held")
+        monkeypatch.setattr(mf, "_COMMIT_ATTEMPTS", 2)
         with pytest.raises(RuntimeError, match="lost .* commit races"):
-            snapshot_write(
-                spark.range(3), path, mode="append", max_commit_attempts=2
-            )
+            snapshot_write(spark.range(3), path, mode="append")
+        monkeypatch.undo()
         os.remove(lock)
 
         # a stale lock (dead writer) is broken by the TTL
@@ -2235,9 +2244,15 @@ def test_file_stats_rejects_tz_aware_footer_bounds(tmp_path):
         }
     )
     pq.write_table(t, p)
-    assert mf._file_stats(p, ("ts",)) is None  # tz-aware: unusable
-    assert mf._file_stats(p, ("ts", "id")) is None  # any col poisons
-    assert mf._file_stats(p, ("id",)) == {"id": [1, 2]}  # naive: fine
+
+    def stats(cols):
+        n_rows, st = mf._footer_rows_and_stats(p, cols)
+        assert n_rows == 2  # the row count survives unusable stats
+        return st
+
+    assert stats(("ts",)) is None  # tz-aware: unusable
+    assert stats(("ts", "id")) is None  # any col poisons
+    assert stats(("id",)) == {"id": [1, 2]}  # naive: fine
 
 
 def test_micros_timestamp_write_keeps_naive_stats(spark, tmp_path):
@@ -2442,3 +2457,144 @@ def test_time_travel_without_recorded_schema_infers(spark, tmp_path):
     head, n_head = jobs_started(spark, lambda: snapshot_read(spark, path))
     assert n_head == 0
     assert _ids(head) == list(range(15))
+
+
+def test_snapshot_scan_space_separated_timestamp_bound(spark, tmp_path):
+    """A TIMESTAMP column's stats are isoformat (``T`` separator) while
+    a query bound is often space-separated. ``'T' > ' '``, so a raw
+    compare would skip the very file holding the matching day: the
+    scan must return what the filtered full read returns, reading
+    only that day's file."""
+    from prql_spark.sources.manifest import snapshot_scan
+
+    path = str(tmp_path / "ts")
+    for day in range(1, 5):
+        snapshot_write(
+            spark.range(10 * (day - 1), 10 * day).coalesce(1).withColumn(
+                "ts", F.lit(f"2024-01-0{day} 05:00:00").cast("timestamp")
+            ),
+            path,
+            mode="overwrite" if day == 1 else "append",
+            stats_cols=("ts",),
+        )
+    bound = "2024-01-01 23:59:59"
+    want = snapshot_read(spark, path).where(f"ts <= '{bound}'")
+    got = snapshot_scan(spark, path, "ts", hi=bound)
+    assert _ids(want) == list(range(10))
+    assert _ids(got) == _ids(want)
+    assert len(got.inputFiles()) == 1  # the other three days skip
+
+
+@pytest.mark.parametrize(
+    "fn, args",
+    [
+        ("snapshot_read", ()),
+        ("snapshot_pruned_read", ({"id": (0, 1)},)),
+        ("snapshot_scan", ("id", 0)),
+        ("snapshot_count", ()),
+        ("snapshot_describe", ()),
+        ("snapshot_partitions", ()),
+        ("attach_stats", (("id",),)),
+    ],
+)
+def test_unknown_version_raises_value_error(spark, tmp_path, fn, args):
+    """Every explicit ``version=`` is checked against the retained
+    versions the same way, before any file is opened."""
+    from prql_spark.sources import manifest as mf
+
+    path = str(tmp_path / "v")
+    snapshot_write(spark.range(5), path)
+    with pytest.raises(ValueError, match=r"version 99 not in \[1\]"):
+        getattr(mf, fn)(spark, path, *args, version=99)
+
+
+class _LosingProtocol(CommitProtocol):
+    """Commit-protocol double: loses its first ``k`` publishes, as if
+    a rival had claimed each version first (``rival`` runs before each
+    loss), then delegates to the default rename protocol."""
+
+    def __init__(self, k, rival=None):
+        self.losses_left = k
+        self.rival = rival
+        self.default = RenameCommitProtocol()
+
+    def publish(self, fs, jvm, dir_path, name, text):
+        if self.losses_left > 0:
+            self.losses_left -= 1
+            if self.rival is not None:
+                self.rival()
+            return False
+        return self.default.publish(fs, jvm, dir_path, name, text)
+
+
+_COMMIT_OPS = {
+    "append": lambda spark, p: snapshot_write(
+        spark.range(100, 110), p, mode="append"
+    ),
+    "merge": lambda spark, p: merge_snapshot(
+        spark, p, spark.range(5, 25), on=("id",)
+    ),
+    "delete": lambda spark, p: delete_snapshot(spark, p, "id < 3"),
+    "attach_stats": lambda spark, p: attach_stats(spark, p, ("id",)),
+    "restore": lambda spark, p: snapshot_restore(spark, p, 1),
+}
+
+
+@pytest.mark.parametrize("op", list(_COMMIT_OPS))
+def test_commit_survives_lost_races(spark, tmp_path, monkeypatch, op):
+    """Concurrent manifest commits: a publisher that loses races
+    rebuilds on the new head and publishes exactly head+1 with the
+    right parent, carrying the head's stream high water forward; one
+    that loses every attempt raises instead of publishing."""
+    from prql_spark.sources import manifest as mf
+
+    path = str(tmp_path / "t")
+    snapshot_write(spark.range(20).coalesce(2), path, stats_cols=("id",))
+    snapshot_write(
+        spark.range(20, 30), path, mode="append",
+        extra={"stream_id": "s1", "epoch": 7},
+    )
+    run = _COMMIT_OPS[op]
+    monkeypatch.setattr(mf, "_COMMIT_ATTEMPTS", 3)
+    try:
+        mf.set_commit_protocol(_LosingProtocol(3))
+        with pytest.raises(RuntimeError, match="lost 3 commit races"):
+            run(spark, path)
+        assert mf._versions(*mf._fs(spark, path), path) == [1, 2]
+
+        losing = _LosingProtocol(2)
+        mf.set_commit_protocol(losing)
+        run(spark, path)
+    finally:
+        mf.set_commit_protocol(RenameCommitProtocol())
+    assert losing.losses_left == 0
+    with open(os.path.join(path, "_manifests", f"v{3:010d}.json")) as fh:
+        m = json.load(fh)
+    assert mf._versions(*mf._fs(spark, path), path) == [1, 2, 3]
+    assert (m["version"], m["parent"]) == (3, 2)
+    assert m["streams"] == {"s1": 7}
+
+
+def test_merge_raises_when_rival_append_lands_before_publish(
+    spark, tmp_path
+):
+    """A rival append that wins the version between merge's plan and
+    its publish changes the files the merge was planned against: the
+    retry must raise, never publish a head that drops the append."""
+    from prql_spark.sources import manifest as mf
+
+    path = str(tmp_path / "t")
+    snapshot_write(spark.range(20).coalesce(2), path, stats_cols=("id",))
+
+    def rival():
+        snapshot_write(spark.range(500, 505), path, mode="append")
+
+    try:
+        mf.set_commit_protocol(_LosingProtocol(1, rival=rival))
+        with pytest.raises(RuntimeError, match="concurrent commit"):
+            merge_snapshot(spark, path, spark.range(5, 25), on=("id",))
+    finally:
+        mf.set_commit_protocol(RenameCommitProtocol())
+    assert _ids(snapshot_read(spark, path)) == sorted(
+        list(range(20)) + list(range(500, 505))
+    )

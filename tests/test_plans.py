@@ -647,3 +647,37 @@ def test_plan_cuts_only_in_physical_helpers():
         if token in path.read_text()
     ]
     assert offenders == []
+
+
+def test_manifest_commits_only_through_publish():
+    """Every manifest commit goes through manifest._publish, so the
+    retry budget and the stream high-water carry-forward live in one
+    loop."""
+    import ast
+    import pathlib
+
+    import prql_spark
+
+    root = pathlib.Path(prql_spark.__file__).parent
+    callers = []
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, path):
+            self.path, self.stack = path, []
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        def visit_Call(self, node):
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name == "_write_text_atomic":
+                callers.append(f"{self.path.name}:{'.'.join(self.stack)}")
+            self.generic_visit(node)
+
+    for path in sorted(root.rglob("*.py")):
+        Calls(path).visit(ast.parse(path.read_text()))
+        assert "range(20)" not in path.read_text(), path
+    assert callers == ["manifest.py:_publish"]
