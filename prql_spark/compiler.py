@@ -351,6 +351,7 @@ class Compiler:
 
     def r_join(
         self,
+        right: DataFrame,
         rtable: str,
         ralias: str,
         how: str,
@@ -358,11 +359,11 @@ class Compiler:
         using_cols: list[str] | None = None,
         cond: str | None = None,
     ):
-        right = self._load(rtable)
+        """Join ``right`` (``_load(rtable)``) to the current frame."""
         if self.catalog.is_broadcast(rtable):
             right = F.broadcast(right)
-        for old, new in renames.items():
-            right = right.withColumnRenamed(old, new)
+        if renames:
+            right = right.withColumnsRenamed(renames)
         if using_cols is not None:
             self.df = self.df.join(right, on=using_cols, how=how)
         else:
@@ -1032,7 +1033,8 @@ class Compiler:
         how = {"inner": "inner", "left": "left", "right": "right", "full": "full"}[
             side
         ]
-        rcols = self._load(rtable).columns
+        right = self._load(rtable)
+        rcols = right.columns
         using = all(
             isinstance(c, Ident) and "." not in c.name for c in conds
         ) and all(c.name in rcols for c in conds if isinstance(c, Ident))
@@ -1046,7 +1048,7 @@ class Compiler:
                 for c in rcols
                 if c in left_flat and c not in using_cols
             }
-            self.r_join(rtable, ralias, how, ren, using_cols=using_cols)
+            self.r_join(right, rtable, ralias, how, ren, using_cols=using_cols)
             for c in rcols:
                 flat = ren.get(c, c)
                 self.scope.setdefault(c, flat)
@@ -1065,7 +1067,7 @@ class Compiler:
                 self.scope[f"{rtable}.{c}"] = flat
         cond_sqls = [self.expr(c).sql for c in conds]
         cond = " AND ".join(f"({s})" for s in cond_sqls)
-        self.r_join(rtable, ralias, how, ren, cond=cond)
+        self.r_join(right, rtable, ralias, how, ren, cond=cond)
 
     # -- group
     def t_group(self, step: FuncCall):

@@ -6,14 +6,13 @@ the file source. Tiny fixed-cardinality dims (region: 5 rows,
 nation: 25) are marked for broadcast so joins against them never
 shuffle the fact side.
 
-Schema cache: a file-format read without a schema makes Spark run one
-inference job (footer reads for parquet, a pass over the data for
-``inferSchema`` csv) every time a table is named. ``Catalog.load``
-keeps the schema Spark inferred in a process-wide cache, shared by
-every ``Catalog`` instance, and on a hit passes it back with
-``.schema(...)``: the scan plans with no job, and the types are
-Spark's own. The key is
+Relation cache: ``Catalog.load`` resolves each file table once per
+session. The resolved DataFrame (after ``_fix_nanos``) sits in a
+process-wide cache shared by every ``Catalog``, and a hit returns that
+same object: no Spark resolution, no job. The key is
 
+- the owning SparkSession, so another session (``newSession()``, or a
+  new one after ``stop()``) never gets this session's frame;
 - the absolute path, the format and the reader options;
 - name, size, ``st_mtime_ns``, ``st_ctime_ns`` and inode of every file
   under the path (directory datasets are walked, hidden files
@@ -21,20 +20,34 @@ Spark's own. The key is
 - the session conf values that change inference (``_INFERENCE_CONFS``).
 
 Rewriting, adding, removing or renaming a file, or flipping one of
-those confs, therefore changes the key, and the next load infers
+those confs, therefore changes the key, and the next load resolves
 again; a stale entry is never read. The cache holds at most
-``_SCHEMA_CACHE_MAX`` entries and evicts the least recently used.
-Manifest-committed tables bypass it: their reads are planned from the
-schema the manifest records.
+``_RELATION_CACHE_MAX`` entries and evicts the least recently used.
+
+A miss on a single parquet file read with no reader options takes its
+schema from the file footer on the driver, through Spark's own footer
+reader and type conversion (``ParquetFileFormat.readSchema``, the code
+Spark's inference job runs on an executor), and passes it to the reader
+with ``.schema(...)``: the first load starts no job either. Directories,
+csv/json, reader options, an empty footer result and any error take
+Spark's inferring read.
+
+Two loads of one table in one plan share expression ids; Spark's
+analyzer re-instances the second side of such a self-join, and every
+join the compiler builds refers to columns by name. Manifest-committed
+tables and registered frames bypass the cache: manifest reads are
+planned from the schema the manifest records.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Dims that stay tiny at ANY scale factor (fixed cardinality in the
 # TPC-H-ish generator) — always broadcast-joinable. customer/part/
@@ -43,34 +56,35 @@ from pyspark.sql import DataFrame, SparkSession
 ALWAYS_BROADCAST = frozenset({"region", "nation"})
 
 # session confs whose value changes the schema Spark infers for a file
-# source: nanos-as-long, binary-as-string, INT96 and NTZ mapping for
-# parquet; the inferred timestamp type for csv/json
+# source: nanos-as-long, binary-as-string, INT96, NTZ and UNKNOWN-type
+# mapping for parquet; the inferred timestamp type for csv/json
 _INFERENCE_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
     "spark.sql.timestampType",
 )
-_SCHEMA_CACHE_MAX = 512
-_schema_cache: OrderedDict = OrderedDict()
-_schema_lock = threading.Lock()
+_RELATION_CACHE_MAX = 512
+_relations: OrderedDict = OrderedDict()
+_relations_lock = threading.Lock()
 
 
 def _cache_get(key):
-    with _schema_lock:
-        schema = _schema_cache.get(key)
-        if schema is not None:
-            _schema_cache.move_to_end(key)
-        return schema
+    with _relations_lock:
+        value = _relations.get(key)
+        if value is not None:
+            _relations.move_to_end(key)
+        return value
 
 
-def _cache_put(key, schema) -> None:
-    with _schema_lock:
-        _schema_cache[key] = schema
-        _schema_cache.move_to_end(key)
-        while len(_schema_cache) > _SCHEMA_CACHE_MAX:
-            _schema_cache.popitem(last=False)
+def _cache_put(key, value) -> None:
+    with _relations_lock:
+        _relations[key] = value
+        _relations.move_to_end(key)
+        while len(_relations) > _RELATION_CACHE_MAX:
+            _relations.popitem(last=False)
 
 
 def _file_signature(path: str) -> tuple:
@@ -90,9 +104,37 @@ def _file_signature(path: str) -> tuple:
     return tuple(sorted(out))
 
 
-def _schema_key(spark, path: str, fmt: str, options: dict) -> tuple:
+def _footer_schema(spark, path: str):
+    """The schema Spark infers for the one parquet file ``path``, read
+    from its footer on the driver with Spark's own footer reader and
+    type conversion (the code of the inference job, without the job);
+    None when the footer yields no schema."""
+    jvm = spark._jvm
+    jspark = spark._jsparkSession
+    conf = jspark.sessionState().newHadoopConf()
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    status = jpath.getFileSystem(conf).getFileStatus(jpath)
+    fmt = getattr(
+        getattr(jvm.org.apache.spark.sql.execution.datasources.parquet,
+                "ParquetFileFormat$"),
+        "MODULE$",
+    )
+    footers = fmt.readParquetFootersInParallel(
+        conf,
+        jvm.org.apache.spark.api.python.PythonUtils.toSeq(
+            jvm.java.util.Collections.singletonList(status)),
+        False,
+    )
+    schema = fmt.readSchema(footers, jspark)
+    if schema.isEmpty():
+        return None
+    return StructType.fromJson(json.loads(schema.get().json()))
+
+
+def _relation_key(spark, path: str, fmt: str, options: dict) -> tuple:
     confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
     return (
+        spark,
         os.path.abspath(path),
         fmt,
         tuple(sorted(options.items())),
@@ -171,22 +213,36 @@ class Catalog:
                 f"table {name!r}: version= only applies to "
                 "manifest-committed tables"
             )
-        df = self._read(path)
-        if self.fmt == "parquet":
-            df = self._fix_nanos(df, path)
+        key = _relation_key(self.spark, path, self.fmt, self.options)
+        df = _cache_get(key)
+        if df is None:
+            df = self._resolve(path)
+            _cache_put(key, df)
         return df
 
-    def _read(self, path: str) -> DataFrame:
-        """The format reader over ``path``, with the cached inferred
-        schema when the files and confs are unchanged (see the module
-        docstring); a miss infers as usual and stores the schema."""
-        key = _schema_key(self.spark, path, self.fmt, self.options)
-        schema = _cache_get(key)
-        reader = self.spark.read.format(self.fmt).options(**self.options)
-        if schema is not None:
-            return reader.schema(schema).load(path)
-        df = reader.load(path)
-        _cache_put(key, df.schema)
+    def _resolve(self, path: str) -> DataFrame:
+        """The format reader over ``path``: with the footer schema for
+        a single parquet file and no reader options, else (or when
+        that fails) Spark's inferring read (see the module
+        docstring)."""
+        def reader():
+            return self.spark.read.format(self.fmt).options(**self.options)
+
+        df = None
+        if self.fmt == "parquet" and not self.options and os.path.isfile(path):
+            try:
+                schema = _footer_schema(self.spark, path)
+                if schema is not None:
+                    df = reader().schema(schema).load(path)
+            except Exception:
+                # an unreadable footer or a changed Spark internal:
+                # the inferring read below decides, and raises its
+                # own error if the file cannot be read at all
+                pass
+        if df is None:
+            df = reader().load(path)
+        if self.fmt == "parquet":
+            df = self._fix_nanos(df, path)
         return df
 
     def _fix_nanos(self, df: DataFrame, path: str):

@@ -269,7 +269,9 @@ class SqlCompiler(Compiler):
         t2.select = [(c, self._qi(c)) for c in keep]
         self.df.columns = keep
 
-    def r_join(self, rtable, ralias, how, renames, using_cols=None, cond=None):
+    def r_join(
+        self, right, rtable, ralias, how, renames, using_cols=None, cond=None
+    ):
         src, rcols = self._source_rel(rtable)
         if renames:
             proj = ", ".join(

@@ -3,6 +3,7 @@ from __future__ import annotations
 import math
 import os
 import uuid
+from collections import OrderedDict
 
 import duckdb
 import pytest
@@ -27,6 +28,17 @@ def spark():
 @pytest.fixture(scope="session")
 def catalog(spark):
     return Catalog(spark, SF_DIR)
+
+
+@pytest.fixture
+def empty_relation_cache(monkeypatch):
+    """The catalog's process-wide relation cache, emptied for one test
+    (the previous one comes back afterwards): job-count and cold-cache
+    assertions then do not depend on which tests ran before."""
+    from prql_spark.sources import catalog as cat_mod
+
+    monkeypatch.setattr(cat_mod, "_relations", OrderedDict())
+    return cat_mod._relations
 
 
 @pytest.fixture(scope="session")

@@ -5,11 +5,13 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from prql_spark import Catalog, compile_prql
 from prql_spark.sources import io as pio
-from tests.conftest import jobs_started
+from tests.conftest import assert_df_matches_sql, jobs_started
 
 
 def test_csv_roundtrip(spark, catalog, tmp_path):
@@ -330,12 +332,13 @@ def _write_pq(path, **cols):
 
 
 def test_catalog_repeat_load_starts_no_job(spark, tmp_path):
-    """Schema inference runs once per file signature: a second load
-    through a FRESH Catalog plans the scan from the cached schema."""
+    """A single parquet file resolves once per file signature: the
+    miss reads the footer, and a second load through a FRESH Catalog
+    returns the cached frame."""
     _write_pq(str(tmp_path / "t.parquet"), k=[1, 2, 3], v=["a", "b", "c"])
     first, n_first = _fresh_load(spark, str(tmp_path), "t")
     second, n_second = _fresh_load(spark, str(tmp_path), "t")
-    assert n_first >= 1  # the miss infers
+    assert n_first == 0  # the miss reads the footer on the driver
     assert n_second == 0
     assert second.schema == first.schema
     assert sorted(second.collect()) == sorted(first.collect())
@@ -348,7 +351,7 @@ def test_catalog_cache_sees_file_rewritten_in_place(spark, tmp_path):
     assert _fresh_load(spark, str(tmp_path), "t")[1] == 0  # cached
     _write_pq(f, k=[3, 4, 5], extra=["x", "y", "z"])
     df, n = _fresh_load(spark, str(tmp_path), "t")
-    assert n >= 1
+    assert n == 0
     assert df.columns == ["k", "extra"]
     assert sorted(df.collect()) == [(3, "x"), (4, "y"), (5, "z")]
 
@@ -440,8 +443,8 @@ def test_schema_cache_concurrent_use_stays_bounded(monkeypatch):
 
     from prql_spark.sources import catalog as cat_mod
 
-    monkeypatch.setattr(cat_mod, "_SCHEMA_CACHE_MAX", 8)
-    monkeypatch.setattr(cat_mod, "_schema_cache", type(cat_mod._schema_cache)())
+    monkeypatch.setattr(cat_mod, "_RELATION_CACHE_MAX", 8)
+    monkeypatch.setattr(cat_mod, "_relations", type(cat_mod._relations)())
     errors = []
 
     def worker(w):
@@ -451,8 +454,8 @@ def test_schema_cache_concurrent_use_stays_bounded(monkeypatch):
                 got = cat_mod._cache_get(key)
                 assert got is None or got == key[1]
                 cat_mod._cache_put(key, key[1])
-                with cat_mod._schema_lock:
-                    assert len(cat_mod._schema_cache) <= 8
+                with cat_mod._relations_lock:
+                    assert len(cat_mod._relations) <= 8
         except Exception as e:  # surfaced by the main thread
             errors.append(e)
 
@@ -469,5 +472,225 @@ def test_schema_cache_concurrent_use_stays_bounded(monkeypatch):
         sys.setswitchinterval(prev)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
-    assert len(cat_mod._schema_cache) <= 8
+    assert len(cat_mod._relations) <= 8
 
+
+def test_catalog_hit_returns_same_frame(spark, tmp_path):
+    """A hit hands back the resolved frame itself: no Spark resolution
+    on repeat loads, from any Catalog of the same session."""
+    _write_pq(str(tmp_path / "t.parquet"), k=[1, 2])
+    first = Catalog(spark, str(tmp_path)).load("t")
+    second, n = _fresh_load(spark, str(tmp_path), "t")
+    assert second is first and n == 0
+
+
+def test_catalog_new_session_gets_own_entry(spark, tmp_path):
+    """The key names the owning session: another session resolves its
+    own frame and never gets this session's."""
+    _write_pq(str(tmp_path / "t.parquet"), k=[1, 2])
+    mine = Catalog(spark, str(tmp_path)).load("t")
+    other = spark.newSession()
+    theirs = Catalog(other, str(tmp_path)).load("t")
+    assert theirs is not mine
+    assert theirs.sparkSession is other and mine.sparkSession is spark
+    assert Catalog(other, str(tmp_path)).load("t") is theirs
+    assert Catalog(spark, str(tmp_path)).load("t") is mine
+    assert sorted(theirs.collect()) == sorted(mine.collect())
+
+
+def test_catalog_footer_failure_falls_back_to_inference(
+        spark, tmp_path, monkeypatch, empty_relation_cache):
+    """If the driver-side footer read raises, the load takes Spark's
+    inferring read: same schema and rows, at the cost of its job."""
+    from prql_spark.sources import catalog as cat_mod
+
+    _write_pq(str(tmp_path / "t.parquet"), k=[1, 2, 3], v=["a", "b", None])
+    footer, n_footer = _fresh_load(spark, str(tmp_path), "t")
+    assert n_footer == 0
+
+    def broken(spark, path):
+        raise RuntimeError("footer unreadable")
+
+    empty_relation_cache.clear()
+    monkeypatch.setattr(cat_mod, "_footer_schema", broken)
+    inferred, n_inferred = _fresh_load(spark, str(tmp_path), "t")
+    assert n_inferred >= 1
+    assert inferred is not footer
+    assert inferred.schema == footer.schema
+    assert sorted(inferred.collect(), key=repr) == sorted(
+        footer.collect(), key=repr)
+
+
+def _parity_files(spark, d):
+    """Single parquet files of every kind the footer path must read
+    exactly as Spark's inference does: the test tables, an
+    arrow-written file of many types, an arrow INT96 file, and the
+    12-type fixture written by Spark."""
+    import datetime as dt
+    import shutil
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_DIR, TABLES
+
+    files = [os.path.join(SF_DIR, f"{t}.parquet") for t in TABLES]
+    ts = [dt.datetime(2024, 1, 2, 3, 4, 5, 678901), None]
+    arrow = pa.table({
+        "i8": pa.array([1, None], pa.int8()),
+        "i16": pa.array([2, 3], pa.int16()),
+        "i32": pa.array([None, 4], pa.int32()),
+        "f32": pa.array([0.5, None], pa.float32()),
+        "f64": [1e300, -0.0],
+        "s": ["x", None],
+        "b": [b"\x00\xff", b""],
+        "flag": [True, None],
+        "day": pa.array([dt.date(2024, 1, 2), None], pa.date32()),
+        "ts_us": pa.array(ts, pa.timestamp("us")),
+        "ts_ms_utc": pa.array(ts, pa.timestamp("ms", tz="UTC")),
+        "ts_ns": pa.array(ts, pa.timestamp("ns")),
+        "dec": pa.array([Decimal("12.34"), None], pa.decimal128(10, 2)),
+        "arr": pa.array([[1, 2], None], pa.list_(pa.int32())),
+        "st": pa.array([{"x": 1, "y": "a"}, None],
+                       pa.struct([("x", pa.int32()), ("y", pa.string())])),
+        "mp": pa.array([[("k", 1)], None], pa.map_(pa.string(), pa.int64())),
+    })
+    files.append(os.path.join(d, "arrow.parquet"))
+    pq.write_table(arrow, files[-1])
+    files.append(os.path.join(d, "int96.parquet"))
+    pq.write_table(arrow.select(["ts_us", "ts_ns", "s"]), files[-1],
+                   use_deprecated_int96_timestamps=True)
+
+    schema = (
+        "l BIGINT, i INT, d DOUBLE, m DECIMAL(12,2), s STRING, "
+        "b BINARY, f BOOLEAN, day DATE, ts TIMESTAMP, "
+        "arr ARRAY<STRING>, st STRUCT<x: INT, y: STRING>, "
+        "mp MAP<STRING, INT>"
+    )
+    rows = [
+        (1, 2, 0.5, Decimal("1234567890.12"), "a", b"\x00\x01", True,
+         dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 3, 4, 5, 678901),
+         ["p", "q"], (7, "z"), {"k": 1}),
+        (9, -3, -1e300, Decimal("-0.01"), "", b"", False,
+         dt.date(1970, 1, 1), dt.datetime(1999, 12, 31, 23, 59, 59),
+         [], (None, None), {}),
+        (20,) + (None,) * 11,
+    ]
+    out = os.path.join(d, "spark_out")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(out)
+    (part,) = glob.glob(os.path.join(out, "part-*.parquet"))
+    files.append(os.path.join(d, "types.parquet"))
+    shutil.copy(part, files[-1])
+    return files
+
+
+def test_catalog_footer_schema_matches_inference(
+        spark, tmp_path, monkeypatch, empty_relation_cache):
+    """The footer path gives Spark's inferred schema and the same rows
+    for every kind of file, under each parquet type-mapping conf, and
+    the Catalog load over it starts no job."""
+    from prql_spark.sources import catalog as cat_mod
+
+    files = _parity_files(spark, str(tmp_path))
+    flips = [
+        {},
+        {"spark.sql.parquet.binaryAsString": "true"},
+        {"spark.sql.parquet.int96AsTimestamp": "false"},
+        {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"},
+    ]
+    prev = {k: spark.conf.get(k) for flip in flips for k in flip}
+    try:
+        for flip in flips:
+            for k, v in prev.items():
+                spark.conf.set(k, flip.get(k, v))
+            for f in files:
+                label = (os.path.basename(f), flip)
+                d, name = os.path.dirname(f), os.path.basename(f)[:-8]
+                try:
+                    inferred = spark.read.parquet(f)
+                except AnalysisException:
+                    # INT96 with int96AsTimestamp off: Spark refuses the
+                    # file, and so does the footer read and the load
+                    with pytest.raises(AnalysisException):
+                        cat_mod._footer_schema(spark, f)
+                    empty_relation_cache.clear()
+                    with pytest.raises(AnalysisException):
+                        Catalog(spark, d).load(name)
+                    continue
+                schema = cat_mod._footer_schema(spark, f)
+                assert schema == inferred.schema, label
+                got = spark.read.schema(schema).parquet(f)
+                assert sorted(map(repr, got.collect())) == sorted(
+                    map(repr, inferred.collect())), label
+
+                empty_relation_cache.clear()
+                via_footer, n = _fresh_load(spark, d, name)
+                assert n == 0, label
+                empty_relation_cache.clear()
+                with monkeypatch.context() as m:
+                    m.setattr(cat_mod, "_footer_schema",
+                              lambda spark, path: None)
+                    via_inference = Catalog(spark, d).load(name)
+                assert via_footer.schema == via_inference.schema, label
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def test_prql_build_on_cold_cache_starts_no_job(
+        spark, catalog, empty_relation_cache):
+    """Even the first compile of q8 (8 tables, one first use each)
+    starts no Spark job before the drain: every table's schema comes
+    from its footer on the driver."""
+    from __spark_entry__ import _PRQL_QUERIES
+
+    text = _PRQL_QUERIES["q8_market_share"][0]
+    df, n = jobs_started(
+        spark, lambda: compile_prql(text, Catalog(spark, catalog.data_dir)))
+    assert n == 0
+    assert df.count() > 0
+
+
+def test_self_join_on_shared_frame_matches_oracle(
+        spark, catalog, oracle, empty_relation_cache):
+    """Two loads of one table in one plan are the same frame. q8 joins
+    nation twice (n1, n2) and a PRQL self-join joins orders to itself;
+    both still return the oracle's rows."""
+    from __spark_entry__ import _PRQL_QUERIES
+
+    assert spark.conf.get(
+        "spark.sql.analyzer.failAmbiguousSelfJoin") == "true"
+    assert Catalog(spark, catalog.data_dir).load("nation") is Catalog(
+        spark, catalog.data_dir).load("nation")
+    text, sql = _PRQL_QUERIES["q8_market_share"]
+    assert_df_matches_sql(
+        compile_prql(text, Catalog(spark, catalog.data_dir)), oracle, sql)
+
+    self_join = """
+from a=orders
+join b=orders [a.o_custkey == b.o_custkey]
+filter a.o_orderkey < b.o_orderkey
+derive [gap = b.o_totalprice - a.o_totalprice]
+group [a.o_custkey] (aggregate [n = count, lo = min gap, hi = max gap])
+sort [o_custkey]
+"""
+    assert_df_matches_sql(
+        compile_prql(self_join, Catalog(spark, catalog.data_dir)), oracle,
+        """
+SELECT a.o_custkey, count(*) AS n,
+  min(b.o_totalprice - a.o_totalprice) AS lo,
+  max(b.o_totalprice - a.o_totalprice) AS hi
+FROM orders a JOIN orders b ON a.o_custkey = b.o_custkey
+WHERE a.o_orderkey < b.o_orderkey
+GROUP BY a.o_custkey ORDER BY a.o_custkey
+""")
+
+
+def test_ambiguous_ref_on_shared_frame_raises(spark, catalog):
+    """A Dataset-bound column ref into a self-join of two loads of one
+    table raises instead of resolving silently to one side."""
+    a = Catalog(spark, catalog.data_dir).load("orders")
+    b = Catalog(spark, catalog.data_dir).load("orders")
+    with pytest.raises(AnalysisException, match="ambiguous"):
+        a.join(b, "o_custkey").select(a["o_orderkey"]).collect()
