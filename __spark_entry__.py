@@ -21,14 +21,9 @@ from prql_spark import Catalog, compile_prql
 SF0001 = "/root/testdata/sf0.001"
 
 
-def _cat(spark: SparkSession, sf_dir: str) -> Catalog:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return Catalog(spark, sf_dir)
-
-
 def _prql(text: str) -> Callable[[SparkSession, str], DataFrame]:
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return compile_prql(text, _cat(spark, sf_dir))
+        return compile_prql(text, Catalog(spark, sf_dir))
 
     return fn
 
@@ -764,7 +759,7 @@ LIMIT 500
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1 pricing summary) on sf0.001."""
-    return compile_prql(Q1_PRICING_SUMMARY, _cat(spark, SF0001))
+    return compile_prql(Q1_PRICING_SUMMARY, Catalog(spark, SF0001))
 
 
 # --- round 5: the remaining TPC-H query SHAPES, adapted to the
@@ -1232,12 +1227,10 @@ def _ordered(d: dict) -> dict:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name, (prql, _sql) in _PRQL_QUERIES.items():
-        out[name] = _prql(prql)
-    from prql_spark.operators import entry_queries
+    from entries.operators import ENTRIES
 
-    out.update(entry_queries())
+    out = {name: _prql(prql) for name, (prql, _sql) in _PRQL_QUERIES.items()}
+    out.update((name, build) for name, (build, _sql) in ENTRIES.items())
     return _ordered(out)
 
 
@@ -1247,15 +1240,12 @@ def oracle_sql() -> dict[str, str]:
     # Spark-schema type wrapper — see scripts/gen_oracles.py). The
     # hand-written strings remain as documentation and fallback;
     # tests/test_to_sql.py asserts all three agree.
-    try:
-        from prql_spark._gen_oracles import ORACLES as _gen
-    except ImportError:
-        _gen = {}
+    from entries._gen_oracles import ORACLES as _gen
+    from entries.operators import ENTRIES
+
     out = {
         name: _gen.get(name, sql)
         for name, (_p, sql) in _PRQL_QUERIES.items()
     }
-    from prql_spark.operators import entry_oracles
-
-    out.update(entry_oracles())
+    out.update((name, sql) for name, (_build, sql) in ENTRIES.items())
     return _ordered(out)

@@ -42,6 +42,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import functions as F  # noqa: E402
+
 import __spark_entry__ as entry_mod  # noqa: E402
 from prql_spark import build_spark  # noqa: E402
 
@@ -164,6 +166,36 @@ def _prepare_corpus(spark, sf_dir):
     return result
 
 
+def warm_up(spark, qs, sf_dir):
+    """Untimed session warm-up: JVM/codegen/parquet-footer costs and
+    Python worker spin-up are session constants, not per-query
+    costs."""
+    qs["q6_forecast_revenue"](spark, sf_dir).collect()
+    spark.range(100).select(
+        F.pandas_udf(lambda s: s + 1, "long")(F.col("id"))
+    ).count()
+
+
+def measure(spark, fn, mode, sf_dir) -> float:
+    """Wall seconds to build ``fn(spark, sf_dir)`` and drain it by
+    ``mode`` ("count", "hash" or "collect"), after a JVM GC."""
+    spark._jvm.System.gc()
+    t0 = time.time()
+    df = fn(spark, sf_dir)
+    if mode == "count":
+        df.count()
+    elif mode == "hash":
+        # consume EVERY output column so Catalyst cannot prune the
+        # projection (count() would) — see module docstring. bit_xor,
+        # not sum: summing 64-bit hashes overflows under ANSI mode
+        df.select(
+            F.xxhash64(*[F.col(c) for c in df.columns]).alias("h")
+        ).selectExpr("bit_xor(h)").collect()
+    else:
+        df.collect()
+    return round(time.time() - t0, 3)
+
+
 def main():
     # pre-flight JVM hygiene: give stragglers up to 60 s to exit,
     # then proceed (recording contention) — numbers from a contended
@@ -179,34 +211,9 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
     qs["prepare_training_corpus"] = _prepare_corpus
-    # untimed warmup: JVM/codegen/parquet-footer costs and Python
-    # worker spin-up are session constants, not per-query costs
-    qs["q6_forecast_revenue"](spark, SF_DIR).collect()
-    from pyspark.sql import functions as F
-
-    spark.range(100).select(
-        F.pandas_udf(lambda s: s + 1, "long")(F.col("id"))
-    ).count()
+    warm_up(spark, qs, SF_DIR)
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
-
-    def measure(fn, mode):
-        spark._jvm.System.gc()
-        t0 = time.time()
-        df = fn(spark, SF_DIR)
-        if mode == "count":
-            df.count()
-        elif mode == "hash":
-            # consume EVERY output column so Catalyst cannot prune
-            # the projection (count() would) — see module docstring.
-            # bit_xor, not sum: summing 64-bit hashes overflows
-            # under ANSI mode
-            df.select(
-                F.xxhash64(*[F.col(c) for c in df.columns]).alias("h")
-            ).selectExpr("bit_xor(h)").collect()
-        else:
-            df.collect()
-        return round(time.time() - t0, 3)
 
     for name, mode in HEADLINE.items():
         fn = qs[name]
@@ -222,7 +229,7 @@ def main():
             # fresh session (minhash 1.3s +/- 0.1 across repeats).
             # Keeps the benchmark about plan quality, not heap
             # entropy.
-            target[name] = measure(fn, mode)
+            target[name] = measure(spark, fn, mode, SF_DIR)
     # sanity pass: a steady run can NEVER be slower than its own cold
     # run on a quiet host (steady excludes codegen/compile) — an
     # inversion is measurement contamination, so re-measure that
@@ -238,7 +245,9 @@ def main():
     for name, mode in HEADLINE.items():
         if inverted(name):
             reran.append(name)
-            times[name] = min(times[name], measure(qs[name], mode))
+            times[name] = min(
+                times[name], measure(spark, qs[name], mode, SF_DIR)
+            )
             if inverted(name):
                 inversions.append(name)
     total = round(sum(times.values()), 3)

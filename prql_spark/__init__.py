@@ -4,8 +4,13 @@ Public surface:
 - ``compile_prql(text, catalog)`` — PRQL → lazy Spark DataFrame.
 - ``Catalog`` — table name → DataFrame resolution (parquet dirs etc.).
 - ``build_spark`` — SparkSession with scale-appropriate defaults.
-- ``prql_spark.operators`` — training-data pipeline operators
-  (dedup, similarity search, text analysis, multimodal plumbing).
+- ``prql_spark.operators.<family>`` — training-data pipeline
+  operators (``dedup``, ``similarity``, ``text``, ``multimodal``, ...);
+  import the family module, the package itself exports nothing.
+
+The query entries of ``__spark_entry__.py`` and their DuckDB oracles
+are a harness, not part of this package: they live in ``entries/``
+beside it.
 """
 
 from prql_spark.ast_io import format_prql, from_json, to_json

@@ -17,6 +17,7 @@ eligible, zero Python UDFs in the core language.
 
 from __future__ import annotations
 
+import functools
 import re
 import warnings
 
@@ -67,9 +68,10 @@ TRANSFORMS = {
 }
 
 
+@functools.cache
 def _extended_transforms() -> dict:
-    """df→df operators exposed as PRQL pipeline steps (lazy import to
-    keep parser-only use light)."""
+    """df→df operators exposed as PRQL pipeline steps (imported on
+    first use to keep parser-only use light)."""
     from prql_spark.operators import (
         dedup,
         multimodal,
@@ -121,49 +123,9 @@ def _extended_transforms() -> dict:
     }
 
 
-class _LazyTransforms:
-    _cache: dict | None = None
-
-    def _load(self) -> dict:
-        if type(self)._cache is None:
-            type(self)._cache = _extended_transforms()
-        return type(self)._cache
-
-    def __contains__(self, name):
-        return name in self._load()
-
-    def __getitem__(self, name):
-        return self._load()[name]
-
-
-EXTENDED_TRANSFORMS = _LazyTransforms()
-
 _CMP_MAP = {"==": "=", "!=": "<>", "and": "AND", "or": "OR"}
 
 _NAME_SAFE = re.compile(r"[^A-Za-z0-9_]+")
-
-# Extended operators whose derived columns are LARGE expression trees
-# (regex chains / higher-order folds, hundreds of plan nodes). A later
-# `filter` on such a column triggers Catalyst's alias substitution
-# (predicate pushdown through the defining Project), leaving the full
-# expression in BOTH the pushed Filter and the Project that outputs
-# the column — every surviving row pays the chain twice (guide §4.4's
-# duplication, JVM-expression edition; measured on docs_clean_pipeline
-# at sf0.1). t_filter cost-gates a pushdown barrier on exactly these
-# columns: conjuncts referencing them are wrapped so the filter stays
-# ABOVE the defining projection and the chain evaluates once. Cheap
-# derived columns (arithmetic, casts) are NOT listed — their
-# substitution is harmless and blocking it would cost real pushdown.
-_HEAVY_SCORE_OPS = frozenset(
-    {
-        "quality_score",
-        "lang_id",
-        "gopher_quality_flags",
-        "repetition_flags",
-        "url_features",
-    }
-)
-
 
 def _q(name: str) -> str:
     """Backtick-quote a flat column name for Spark SQL."""
@@ -284,8 +246,9 @@ class Compiler:
         # past filters — sargable filter bounds re-plan its scan
         # through manifest file-skipping (see _manifest_pushdown)
         self._manifest_from: str | None = None
-        # columns produced by _HEAVY_SCORE_OPS in THIS pipeline —
-        # filters referencing them get the pushdown barrier
+        # columns produced in THIS pipeline by operators marked
+        # large_expressions — filters referencing them get the
+        # pushdown barrier
         self._heavy_cols: set[str] = set()
 
     # -------------------------------------------------- dialect seam
@@ -426,7 +389,7 @@ class Compiler:
 
     def apply_transform(self, step):
         if isinstance(step, Ident) and (
-            step.name in TRANSFORMS or step.name in EXTENDED_TRANSFORMS
+            step.name in TRANSFORMS or step.name in _extended_transforms()
         ):
             step = FuncCall(step.name, [], {})
         if not isinstance(step, FuncCall):
@@ -448,7 +411,7 @@ class Compiler:
         elif name in self.funcs:
             # user-defined table-level function — inline and re-apply
             self.apply_transform(self._inline_user(name, step.args, step.named))
-        elif name in EXTENDED_TRANSFORMS:
+        elif name in _extended_transforms():
             self._apply_extended(name, step)
         else:
             raise PrqlCompileError(f"unknown transform or function {name!r}")
@@ -457,7 +420,7 @@ class Compiler:
         """Training-data operators as pipeline transforms:
         ``from documents | quality_score | filter quality > 0.5``.
         Named args pass through as keyword arguments (literals only)."""
-        fn = EXTENDED_TRANSFORMS[name]
+        fn = _extended_transforms()[name]
         if step.args:
             raise PrqlCompileError(
                 f"{name}: use named args (e.g. {name} key_col:doc_id)"
@@ -486,7 +449,9 @@ class Compiler:
                 )
         before_cols = set(self.df.columns)
         self.df = fn(self.df, **kwargs)
-        if name in _HEAVY_SCORE_OPS:
+        # the operator declares whether its new columns are large
+        # expression trees (operators/text.py:_large_expressions)
+        if getattr(fn, "large_expressions", False):
             self._heavy_cols.update(set(self.df.columns) - before_cols)
         # operators may add/drop columns — rebuild the bare-name scope,
         # keeping qualified names that still resolve
@@ -640,8 +605,8 @@ class Compiler:
 
     def _barrier_heavy(self, node, ce: CExpr) -> bool:
         """Cost-gated Filter/Project barrier (round 12, guide §4.4):
-        when the filter references a column built by a
-        _HEAVY_SCORE_OPS operator (a giant regex/fold expression
+        when the filter references a column built by an operator
+        marked ``large_expressions`` (a giant regex/fold expression
         tree), Catalyst's predicate pushdown would substitute the
         defining expression into the pushed Filter, leaving it in
         BOTH the Filter and the Project that outputs the column —

@@ -188,7 +188,7 @@ def minhash_signatures(
     # the profile ~10×. crc32 over md5 is a MEASURED choice: md5
     # hashing costs 2.5× in this loop (60 vs 24 µs/doc), and the
     # DuckDB oracle reproduces crc32 exactly anyway with a
-    # table-driven list_reduce (operators/__init__.py:_CRC32_DD) —
+    # table-driven list_reduce (entries/operators.py:_CRC32_DD) —
     # the oracle pays, the 100 TB path doesn't.
     import zlib
 
@@ -654,7 +654,7 @@ def dedup_against_near(
 # salted). MEASURED choice at sf0.1 (warm signature stage):
 # xxhash64 0.46 s, double-crc32 0.78 s, md5-halves 1.5 s — crc32
 # costs ~1.7× xxhash64 but, unlike xxhash64, is exactly reproducible
-# in the DuckDB oracle (table-driven fold, operators/__init__.py:
+# in the DuckDB oracle (table-driven fold, entries/operators.py:
 # _CRC32_DD), which buys a full value oracle for every simhash bit.
 # Both halves stay < 2^32 so the shiftleft|or is overflow-free.
 _TOKEN_HASH64 = (
@@ -678,7 +678,7 @@ def simhash_signatures(
     over the crc32 token hashes computes the identical signature in
     ~25 µs per doc. The hash definition (``_TOKEN_HASH64``) is shared
     with the DuckDB oracle, which replays every bit exactly
-    (operators/__init__.py:_sql_simhash_pairs); equality between this
+    (entries/operators.py:_sql_simhash_pairs); equality between this
     UDF and the SQL formulation is pinned in tests/test_operators.py.
     """
     import zlib

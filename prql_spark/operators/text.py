@@ -32,6 +32,24 @@ LANG_SIGNATURES = {
 }
 
 
+def _large_expressions(fn):
+    """Mark an operator whose derived columns are LARGE expression
+    trees (regex chains / higher-order folds, hundreds of plan nodes).
+
+    A later PRQL ``filter`` on such a column triggers Catalyst's alias
+    substitution (predicate pushdown through the defining Project),
+    leaving the full expression in BOTH the pushed Filter and the
+    Project that outputs the column — every surviving row pays the
+    chain twice (measured on docs_clean_pipeline at sf0.1). The
+    compiler reads ``fn.large_expressions`` and keeps filters on these
+    columns ABOVE the defining projection, so the chain evaluates once
+    (``Compiler._barrier_heavy``). Operators with cheap derived columns
+    (arithmetic, casts) stay unmarked: their substitution is harmless
+    and blocking it would cost real pushdown."""
+    fn.large_expressions = True
+    return fn
+
+
 def _words(col: str) -> str:
     return f"split(lower(trim({col})), '\\\\s+')"
 
@@ -84,6 +102,7 @@ def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+@_large_expressions
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic quality features + a composite score in [0, 1].
 
@@ -131,6 +150,7 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+@_large_expressions
 def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """n-gram/stopword-signature language guess (en/de/fr/es).
 
@@ -540,6 +560,7 @@ def ngram_contamination(
     )
 
 
+@_large_expressions
 def gopher_quality_flags(
     df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
@@ -669,6 +690,7 @@ def pack_sequences(
     )
 
 
+@_large_expressions
 def repetition_flags(
     df: DataFrame,
     text_col: str = "text",
@@ -1132,6 +1154,7 @@ URL_HOST_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#@]*@)?([^/:?#]+)"
 URL_PATH_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(/[^?#]*)?"
 
 
+@_large_expressions
 def url_features(
     df: DataFrame,
     url_col: str = "url",

@@ -452,46 +452,3 @@ def to_sql(text, catalog: Catalog, dialect: str = "spark") -> str:
     c = cls(catalog, src=text if isinstance(text, str) else "")
     c.compile_query(q)
     return c.emit()
-
-
-_DUCK_TYPES = {
-    "tinyint": "TINYINT",
-    "smallint": "SMALLINT",
-    "int": "INTEGER",
-    "bigint": "BIGINT",
-    "float": "FLOAT",
-    "double": "DOUBLE",
-    "string": "VARCHAR",
-    "boolean": "BOOLEAN",
-    "date": "DATE",
-    "timestamp": "TIMESTAMP",
-    "timestamp_ntz": "TIMESTAMP",
-}
-
-
-def typed_oracle_sql(prql: str, catalog: Catalog) -> str:
-    """DuckDB oracle SQL generated from PRQL, with the outer
-    projection cast to the SPARK result types.
-
-    The cast wrapper is what makes generated SQL driver-hash-safe:
-    DuckDB types aggregates differently (e.g. sum(int) → HUGEINT
-    where Spark yields BIGINT — the round-1 q12 red row), so every
-    column is cast to the type the Spark plan actually produces.
-    Decimal(p,s) maps verbatim; unmappable types (arrays/structs)
-    leave the column uncast.
-    """
-    from prql_spark.compiler import compile_prql
-
-    sql = to_sql(prql, catalog, dialect="duckdb").strip()
-    schema = compile_prql(prql, catalog).schema
-    cols = []
-    for f in schema.fields:
-        s = f.dataType.simpleString()
-        t = _DUCK_TYPES.get(s)
-        if t is None and s.startswith("decimal("):
-            t = s.upper()
-        q = '"' + f.name.replace('"', '""') + '"'
-        cols.append(f"CAST({q} AS {t}) AS {q}" if t else q)
-    return (
-        "SELECT " + ", ".join(cols) + " FROM (\n" + sql + "\n) AS __typed"
-    )

@@ -52,7 +52,7 @@ def read_events_stream(
 def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Tumbling 1-hour window agg with late-data watermark.
 
-    Batch twin: prql_spark.operators.q_events_hourly (oracled via
+    Batch twin: entries.operators.q_events_hourly (oracled via
     DuckDB time_bucket).
     """
     src = events

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -39,15 +38,13 @@ def main():
     # invocations race the previous JVM's exit; then refuse rather
     # than record a contaminated number
     for _ in range(24):
-        out = subprocess.run(
-            ["pgrep", "-c", "java"], capture_output=True, text=True
-        ).stdout.strip()
-        if out in ("", "0"):
+        jvms = bench._concurrent_jvms()
+        if not jvms:
             break
         time.sleep(5)
     else:
         raise SystemExit(
-            f"refusing to measure: {out} concurrent JVM(s) alive"
+            f"refusing to measure: {len(jvms)} concurrent JVM(s) alive"
         )
     mode = bench.HEADLINE.get(name, "count")
     spark = build_spark("bench-single")
@@ -55,31 +52,9 @@ def main():
     qs = entry_mod.queries()
     if name == "prepare_training_corpus":
         qs[name] = bench._prepare_corpus
-    fn = qs[name]
-    # bench.py's session warmup: one cheap query + one pandas UDF
-    qs["q6_forecast_revenue"](spark, sf_dir).collect()
-    from pyspark.sql import functions as F
-
-    spark.range(100).select(
-        F.pandas_udf(lambda s: s + 1, "long")(F.col("id"))
-    ).count()
-
-    def measure():
-        spark._jvm.System.gc()
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        if mode == "count":
-            df.count()
-        elif mode == "hash":
-            df.select(
-                F.xxhash64(*[F.col(c) for c in df.columns]).alias("h")
-            ).selectExpr("bit_xor(h)").collect()
-        else:
-            df.collect()
-        return round(time.time() - t0, 3)
-
-    cold = measure()
-    steady = measure()
+    bench.warm_up(spark, qs, sf_dir)
+    cold = bench.measure(spark, qs[name], mode, sf_dir)
+    steady = bench.measure(spark, qs[name], mode, sf_dir)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     print(json.dumps(
         {"query": name, "cold_sec": cold, "steady_sec": steady,

@@ -12,13 +12,13 @@ shape). Refuses to run beside another JVM.
 from __future__ import annotations
 
 import os
-import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+import bench  # noqa: E402
 from prql_spark import build_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -28,21 +28,17 @@ def main():
     out_dir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     for _ in range(24):
-        out = subprocess.run(
-            ["pgrep", "-c", "java"], capture_output=True, text=True
-        ).stdout.strip()
-        if out in ("", "0"):
+        jvms = bench._concurrent_jvms()
+        if not jvms:
             break
         time.sleep(5)
     else:
-        raise SystemExit(f"refusing: {out} concurrent JVM(s) alive")
+        raise SystemExit(f"refusing: {len(jvms)} concurrent JVM(s) alive")
     os.makedirs(out_dir, exist_ok=True)
     spark = build_spark("explain")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
     if "prepare_training_corpus" in names:
-        import bench
-
         qs["prepare_training_corpus"] = bench._prepare_corpus
     for name in names:
         df = qs[name](spark, SF_DIR)

@@ -4,7 +4,7 @@ Real IVF indexes ship a PRETRAINED coarse quantizer (trained once,
 then reused for every search); this script is that training step. It
 runs the deterministic Lloyd's trainer (seeded with the n_lists
 smallest vec_ids, fixed iterations) on the sf0.01 embeddings and
-writes the centroids into ``prql_spark/operators/_ivf_centroids.py``
+writes the centroids into ``entries/_ivf_centroids.py``
 as literals, so BOTH the engine entry and the DuckDB oracle search
 with the exact same quantizer. Training itself stays covered by the
 recall-vs-bruteforce tests in tests/test_operators.py.
@@ -14,12 +14,12 @@ Usage: python scripts/gen_ivf_centroids.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 sys.path.insert(0, ".")
 
-from prql_spark import build_spark  # noqa: E402
-from prql_spark.operators import _embs  # noqa: E402
+from prql_spark import Catalog, build_spark  # noqa: E402
 from prql_spark.operators import similarity  # noqa: E402
 
 N_LISTS = 8
@@ -36,7 +36,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = build_spark("gen-ivf-centroids")
     spark.sparkContext.setLogLevel("ERROR")
-    embs = _embs(spark, sf_dir)
+    embs = Catalog(spark, sf_dir).load("embeddings")
     cents = similarity.ivf_train_centroids(
         embs, dim=DIM, n_lists=N_LISTS, iters=ITERS
     )
@@ -46,7 +46,8 @@ def main() -> None:
     lines = [
         '"""Pretrained IVF coarse-quantizer centroids.',
         "",
-        f"Generated by scripts/gen_ivf_centroids.py from {sf_dir}",
+        "Generated by scripts/gen_ivf_centroids.py from the "
+        f"{os.path.basename(sf_dir.rstrip('/'))} testdata",
         f"(n_lists={N_LISTS}, dim={DIM}, iters={ITERS}, deterministic",
         "seed = smallest vec_ids). Do not edit by hand — regenerate.",
         '"""',
@@ -70,7 +71,7 @@ def main() -> None:
     lines.append("")
     lines.append(f"# semdedup quantizer: {SEMDEDUP_LISTS} lists (see header)")
     emit("SEMDEDUP_CENTROIDS", sd_cents)
-    out = "prql_spark/operators/_ivf_centroids.py"
+    out = "entries/_ivf_centroids.py"
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {len(cents)}+{len(sd_cents)} centroids to {out}")

@@ -1,4 +1,4 @@
-"""Regenerate prql_spark/_gen_oracles.py: machine-written DuckDB
+"""Regenerate entries/_gen_oracles.py: machine-written DuckDB
 oracle SQL for every PRQL driver entry, produced by the SQL-text
 backend from the same PRQL the engine executes (plus a Spark-schema
 cast wrapper for hash-stable types). Run after editing any entry in
@@ -14,12 +14,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from prql_spark import Catalog, build_spark  # noqa: E402
-from prql_spark.sql_backend import typed_oracle_sql  # noqa: E402
+from entries.typed_oracle import typed_oracle_sql  # noqa: E402
 
 HEADER = '''"""MACHINE-GENERATED by scripts/gen_oracles.py — do not edit.
 
 DuckDB oracle SQL per PRQL driver entry, generated from the same
-PRQL source the engine compiles (sql_backend.typed_oracle_sql), so
+PRQL source the engine compiles (entries.typed_oracle), so
 the oracle cannot drift from the executed plan.
 """
 
@@ -38,7 +38,7 @@ def main():
     out.append("}\n")
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "prql_spark",
+        "entries",
         "_gen_oracles.py",
     )
     with open(path, "w") as f:

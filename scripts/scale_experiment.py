@@ -807,7 +807,7 @@ def main():
     # verification both scale linearly in corpus size at fixed
     # occupancy; star_cap bounds the duplicate-class clusters this
     # perturbed corpus is full of
-    from prql_spark.operators._ivf_centroids import SEMDEDUP_CENTROIDS
+    from entries._ivf_centroids import SEMDEDUP_CENTROIDS
 
     res["semdedup_prune"] = run(
         "semdedup",

@@ -204,7 +204,7 @@ def test_semdedup_bucket_combine_shape(catalog):
     # bucket-combine (the r11 shape still paid a 64-way
     # BroadcastNestedLoopJoin + argmax aggregate + corpus re-join),
     # and the only exchange is the bucket-combine group-by
-    from prql_spark.operators._ivf_centroids import SEMDEDUP_CENTROIDS
+    from entries._ivf_centroids import SEMDEDUP_CENTROIDS
     from prql_spark.operators.similarity import semdedup_pairs
 
     df = semdedup_pairs(
@@ -227,7 +227,7 @@ def test_docs_clean_pipeline_plan_shape(catalog, spark):
     # and at most three exchanges — the local single-file spread
     # (gated off on already-parallel inputs), the dedup window's
     # __key hash, and the entry's final sort
-    from prql_spark.operators import entry_queries
+    from __spark_entry__ import queries as entry_queries
 
     df = entry_queries()["docs_clean_pipeline"](
         spark, "/root/testdata/sf0.001"
@@ -248,7 +248,7 @@ def test_heavy_filter_barrier_single_eval(catalog, spark):
     through a nondeterministic no-op, so the chain evaluates exactly
     once; sargable conjuncts of the same filter still push to the
     scan."""
-    from prql_spark.operators import entry_queries
+    from __spark_entry__ import queries as entry_queries
 
     df = entry_queries()["docs_clean_pipeline"](
         spark, "/root/testdata/sf0.001"
@@ -647,6 +647,38 @@ def test_plan_cuts_only_in_physical_helpers():
         if token in path.read_text()
     ]
     assert offenders == []
+
+
+def test_runtime_package_holds_no_harness():
+    """The query entries, their DuckDB oracles and the oracle engine
+    live outside prql_spark/, and importing an operator family runs no
+    package-level code."""
+    import ast
+    import pathlib
+
+    import prql_spark
+
+    root = pathlib.Path(prql_spark.__file__).parent
+    harness = {"entries", "__spark_entry__", "duckdb"}
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                names = [node.module]
+            else:
+                continue
+            offenders += [
+                f"{path.relative_to(root)}: {n}"
+                for n in names
+                if n.split(".")[0] in harness
+            ]
+    assert offenders == []
+    body = ast.parse((root / "operators" / "__init__.py").read_text()).body
+    assert len(body) == 1 and isinstance(body[0], ast.Expr)
+    assert isinstance(body[0].value, ast.Constant)
+    assert isinstance(body[0].value.value, str)
 
 
 def test_manifest_commits_only_through_publish():

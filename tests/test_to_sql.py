@@ -117,8 +117,8 @@ def test_generated_oracles_fresh(catalog):
     """prql_spark/_gen_oracles.py must match what gen_oracles.py
     would emit today — fails when a PRQL entry changes without
     rerunning the generator."""
-    from prql_spark._gen_oracles import ORACLES
-    from prql_spark.sql_backend import typed_oracle_sql
+    from entries._gen_oracles import ORACLES
+    from entries.typed_oracle import typed_oracle_sql
 
     assert set(ORACLES) == set(entry_mod._PRQL_QUERIES)
     for name, (prql, _sql) in entry_mod._PRQL_QUERIES.items():
@@ -132,7 +132,7 @@ def test_generated_oracles_fresh(catalog):
 def test_generated_oracle_matches_results(name, catalog, oracle):
     """The generated+type-wrapped oracle must return the same values
     as the DataFrame plan (this is what the driver executes now)."""
-    from prql_spark._gen_oracles import ORACLES
+    from entries._gen_oracles import ORACLES
 
     prql, _ = entry_mod._PRQL_QUERIES[name]
     df = compile_prql(prql, catalog)
