@@ -133,22 +133,31 @@ HEADLINE = {
 }
 
 
-def _concurrent_jvms() -> list[str]:
-    """Any other live JVM on this local[32] host inflates measured
-    queries 3-30x (round-3/4/5 postmortems — the r5 driver bench ran
-    uniformly +19% with a physically impossible steady>cold inversion
-    on q1). scale_experiment.py refuses to run in that state; the
-    driver-visible bench cannot refuse (a missing BENCH file is
-    worse), so it WAITS for stragglers then records contention."""
+def _concurrent_jvms(wait_s: float = 120) -> list[str]:
+    """The shared JVM gate. Any other live JVM on this local[32] host
+    inflates measured queries 3-30x (round-3/4/5 postmortems — the r5
+    driver bench ran uniformly +19% with a physically impossible
+    steady>cold inversion on q1). Waits up to ``wait_s`` for
+    stragglers to exit — back-to-back shell invocations race the
+    previous JVM's exit — and returns those still alive. Each caller
+    keeps its own policy: the driver-visible bench cannot refuse (a
+    missing BENCH file is worse), so ``main`` records contention;
+    bench_single.py, explain_query.py and scale_experiment.py
+    refuse."""
     import subprocess
 
-    try:
-        out = subprocess.run(
-            ["pgrep", "-a", "java"], capture_output=True, text=True
-        ).stdout
-    except FileNotFoundError:
-        return []
-    return [ln for ln in out.splitlines() if ln.strip()]
+    deadline = time.time() + wait_s
+    while True:
+        try:
+            out = subprocess.run(
+                ["pgrep", "-a", "java"], capture_output=True, text=True
+            ).stdout
+        except FileNotFoundError:
+            return []
+        alive = [ln for ln in out.splitlines() if ln.strip()]
+        if not alive or time.time() >= deadline:
+            return alive
+        time.sleep(5)
 
 
 def _prepare_corpus(spark, sf_dir):
@@ -166,6 +175,19 @@ def _prepare_corpus(spark, sf_dir):
     return result
 
 
+def queries() -> dict:
+    """The entry queries plus the composed ``prepare_training_corpus``
+    — one table for every script that measures or explains a row."""
+    return {**entry_mod.queries(), "prepare_training_corpus": _prepare_corpus}
+
+
+def sf_label(sf_dir: str):
+    """The scale factor a testdata directory name carries
+    (``.../sf0.1`` -> 0.1); the bare suffix when it is not numeric."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else sf
+
+
 def warm_up(spark, qs, sf_dir):
     """Untimed session warm-up: JVM/codegen/parquet-footer costs and
     Python worker spin-up are session constants, not per-query
@@ -176,14 +198,15 @@ def warm_up(spark, qs, sf_dir):
     ).count()
 
 
-def measure(spark, fn, mode, sf_dir) -> float:
+def measure(spark, fn, mode, sf_dir) -> tuple[float, int | None]:
     """Wall seconds to build ``fn(spark, sf_dir)`` and drain it by
-    ``mode`` ("count", "hash" or "collect"), after a JVM GC."""
+    ``mode`` ("count", "hash" or "collect"), after a JVM GC, and the
+    row count the drain saw (None for "hash", which sees none)."""
     spark._jvm.System.gc()
     t0 = time.time()
     df = fn(spark, sf_dir)
     if mode == "count":
-        df.count()
+        rows = df.count()
     elif mode == "hash":
         # consume EVERY output column so Catalyst cannot prune the
         # projection (count() would) — see module docstring. bit_xor,
@@ -191,26 +214,20 @@ def measure(spark, fn, mode, sf_dir) -> float:
         df.select(
             F.xxhash64(*[F.col(c) for c in df.columns]).alias("h")
         ).selectExpr("bit_xor(h)").collect()
+        rows = None
     else:
-        df.collect()
-    return round(time.time() - t0, 3)
+        rows = len(df.collect())
+    return round(time.time() - t0, 3), rows
 
 
 def main():
     # pre-flight JVM hygiene: give stragglers up to 60 s to exit,
     # then proceed (recording contention) — numbers from a contended
     # host are flagged, not silently comparable
-    contended = bool(_concurrent_jvms())
-    if contended:
-        for _ in range(12):
-            time.sleep(5)
-            if not _concurrent_jvms():
-                contended = False
-                break
+    contended = bool(_concurrent_jvms(wait_s=60))
     spark = build_spark("prql_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entry_mod.queries()
-    qs["prepare_training_corpus"] = _prepare_corpus
+    qs = queries()
     warm_up(spark, qs, SF_DIR)
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
@@ -229,7 +246,7 @@ def main():
             # fresh session (minhash 1.3s +/- 0.1 across repeats).
             # Keeps the benchmark about plan quality, not heap
             # entropy.
-            target[name] = measure(spark, fn, mode, SF_DIR)
+            target[name], _ = measure(spark, fn, mode, SF_DIR)
     # sanity pass: a steady run can NEVER be slower than its own cold
     # run on a quiet host (steady excludes codegen/compile) — an
     # inversion is measurement contamination, so re-measure that
@@ -246,13 +263,12 @@ def main():
         if inverted(name):
             reran.append(name)
             times[name] = min(
-                times[name], measure(spark, qs[name], mode, SF_DIR)
+                times[name], measure(spark, qs[name], mode, SF_DIR)[0]
             )
             if inverted(name):
                 inversions.append(name)
     total = round(sum(times.values()), 3)
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    sf_val = sf_label(SF_DIR)
     detail = json.dumps(
         {
             "metric": "headline_total_runtime",

@@ -22,21 +22,10 @@ import random
 
 from pyspark.sql import DataFrame, functions as F
 
+from prql_spark.plans.lint import byte_conf
 from prql_spark.plans.physical import materialize, single_eval
 
 MERSENNE61 = (1 << 61) - 1
-
-
-def _parse_byte_conf(v: str) -> int:
-    """Spark size-conf string ('134217728b', '128m', '1g') → bytes."""
-    s = str(v).strip().lower()
-    for suf, mult in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
-    ):
-        if s.endswith(suf):
-            return int(s[: -len(suf)]) * mult
-    return int(s)
 
 
 def _spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -53,27 +42,21 @@ def _spread(df: DataFrame, *cols: str) -> DataFrame:
     instead of probing ``df.rdd.getNumPartitions()``, which forces
     full physical planning + RDD materialization per call. Unknown
     stats (Long.MaxValue sentinel) read as "big" → no repartition,
-    the safe default at scale. ``spark.prql.spread`` = auto (default)
-    / always / never overrides the heuristic either way.
+    the safe default at scale.
     """
     sess = df.sparkSession
-    mode = sess.conf.get("spark.prql.spread", "auto")
-    if mode == "never":
-        return df
     n_parts = sess.sparkContext.defaultParallelism
-    if mode != "always":
-        try:
-            size = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            split = _parse_byte_conf(
-                sess.conf.get("spark.sql.files.maxPartitionBytes",
-                              "134217728b")
-            )
-        except Exception:
-            return df
-        if size >= n_parts * split:
-            return df
+    try:
+        size = int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+        split = byte_conf(
+            sess, "spark.sql.files.maxPartitionBytes", "134217728b"
+        )
+    except Exception:
+        return df
+    if size >= n_parts * split:
+        return df
     return df.repartition(n_parts, *cols) if cols else df.repartition(n_parts)
 
 

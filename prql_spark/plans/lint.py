@@ -60,8 +60,11 @@ def _scan_bytes(node) -> int | None:
     return total if saw_scan else None
 
 
-def _threshold_bytes(spark) -> int:
-    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+def byte_conf(spark, key: str, default: str) -> int:
+    """A byte-size conf ("268435456", "10MB", "134217728b") in bytes:
+    plain digits parse in Python, anything else through Spark's own
+    size parser."""
+    raw = spark.conf.get(key, default)
     try:
         return int(raw)
     except ValueError:
@@ -79,7 +82,9 @@ def lint_broadcast_misses(
     join whose smaller side scans under the broadcast threshold."""
     spark = df.sparkSession
     if threshold is None:
-        threshold = _threshold_bytes(spark)
+        threshold = byte_conf(
+            spark, "spark.sql.autoBroadcastJoinThreshold", "10MB"
+        )
     findings: list[str] = []
     plan = df._jdf.queryExecution().executedPlan()
     for node in _walk(plan):

@@ -85,13 +85,13 @@ def drop_bucketed(spark: SparkSession, table: str) -> None:
     if not re.fullmatch(r"[A-Za-z0-9_]+(\.[A-Za-z0-9_]+)?", table):
         raise ValueError(f"unsafe table name: {table!r}")
     location = None
-    try:
+    # ask the catalog first: a DESCRIBE of an absent table fails
+    # analysis, which Spark logs at ERROR with its stack traces
+    if spark.catalog.tableExists(table):
         desc = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
         for row in desc:
             if row["col_name"] == "Location":
                 location = row["data_type"].removeprefix("file:")
-    except Exception:
-        pass  # not in this session's catalog — use the layout rule
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     if location is None:
         wh = spark.conf.get(

@@ -3,45 +3,35 @@
 Usage:
     python scripts/explain_query.py <out_dir> <suffix> <query> [...]
 
-Writes <out_dir>/<query>_<suffix>.txt for each query. Build-only —
-no query executes (write-shaped snapshot entries DO run their
-commits to build the final read plan; that is inherent to their
-shape). Refuses to run beside another JVM.
+Writes <out_dir>/<query>_<suffix>.txt for each query, built over
+bench.SF_DIR. Build-only — no query executes (write-shaped snapshot
+entries DO run their commits to build the final read plan; that is
+inherent to their shape). Refuses to run beside another JVM.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry_mod  # noqa: E402
 import bench  # noqa: E402
 from prql_spark import build_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main():
     out_dir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
-    for _ in range(24):
-        jvms = bench._concurrent_jvms()
-        if not jvms:
-            break
-        time.sleep(5)
-    else:
+    jvms = bench._concurrent_jvms()
+    if jvms:
         raise SystemExit(f"refusing: {len(jvms)} concurrent JVM(s) alive")
     os.makedirs(out_dir, exist_ok=True)
     spark = build_spark("explain")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entry_mod.queries()
-    if "prepare_training_corpus" in names:
-        qs["prepare_training_corpus"] = bench._prepare_corpus
+    qs = bench.queries()
     for name in names:
-        df = qs[name](spark, SF_DIR)
+        df = qs[name](spark, bench.SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

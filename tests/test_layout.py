@@ -266,3 +266,27 @@ def test_drop_bucketed_rejects_unsafe_names(spark):
     os.makedirs(orphan, exist_ok=True)
     drop_bucketed(spark, "MyDb.MyTbl")
     assert not os.path.exists(orphan)
+
+
+def test_drop_bucketed_never_describes_an_absent_table(spark):
+    """A name the catalog does not hold is never DESCRIBEd: the failed
+    analysis would log TABLE_OR_VIEW_NOT_FOUND at ERROR, with two Java
+    stack traces, on every fresh name."""
+    from prql_spark.sources.bucketing import drop_bucketed
+
+    class Recording:
+        def __init__(self, inner):
+            self._inner = inner
+            self.statements = []
+
+        def sql(self, statement, *args, **kwargs):
+            self.statements.append(statement)
+            return self._inner.sql(statement, *args, **kwargs)
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+    session = Recording(spark)
+    drop_bucketed(session, "prql_bkt_absent")
+    assert session.statements
+    assert not [s for s in session.statements if s.startswith("DESCRIBE")]

@@ -649,6 +649,33 @@ def test_plan_cuts_only_in_physical_helpers():
     assert offenders == []
 
 
+def test_measurement_only_in_bench():
+    """Every script measures through bench.py — one GC-then-drain
+    timer, one JVM gate, one sf-dir default — and the runtime package
+    reads no spread override."""
+    import pathlib
+
+    import prql_spark
+
+    root = pathlib.Path(prql_spark.__file__).parent
+    scripts = root.parent / "scripts"
+    offenders = [
+        f"scripts/{path.name}: {token}"
+        for path in sorted(scripts.glob("*.py"))
+        for token in (
+            "System.gc(", "pgrep", "SPARK_GRAFT_SF_DIR",
+            "SPARK_GRAFT_IGNORE_JVMS",
+        )
+        if token in path.read_text()
+    ]
+    offenders += [
+        f"prql_spark/{path.relative_to(root)}: spark.prql.spread"
+        for path in sorted(root.rglob("*.py"))
+        if "spark.prql.spread" in path.read_text()
+    ]
+    assert offenders == []
+
+
 def test_runtime_package_holds_no_harness():
     """The query entries, their DuckDB oracles and the oracle engine
     live outside prql_spark/, and importing an operator family runs no

@@ -114,7 +114,7 @@ def test_compile_alias_matches_reference_embedding_api(catalog):
 
 
 def test_generated_oracles_fresh(catalog):
-    """prql_spark/_gen_oracles.py must match what gen_oracles.py
+    """entries/_gen_oracles.py must match what gen_oracles.py
     would emit today — fails when a PRQL entry changes without
     rerunning the generator."""
     from entries._gen_oracles import ORACLES
