@@ -61,12 +61,13 @@ def to_dict(node):
     """Encode an AST node (or container of nodes) as JSON-able data.
 
     Mirrors the CLI ``--ast`` encoding: each dataclass becomes a dict
-    with a ``_type`` discriminator; ``pos`` fields (source offsets)
-    are dropped — they are diagnostics, not semantics."""
+    with a ``_type`` discriminator; source offsets (the fields that
+    take no part in equality) are dropped — they are diagnostics, not
+    semantics."""
     if dataclasses.is_dataclass(node):
         d = {"_type": type(node).__name__}
         for f in dataclasses.fields(node):
-            if f.name == "pos":
+            if not f.compare:
                 continue
             d[f.name] = to_dict(getattr(node, f.name))
         return d

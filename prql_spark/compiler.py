@@ -243,8 +243,8 @@ class Compiler:
         # 'wrap': agg/window funcs get OVER(...); 'agg': plain agg SQL
         self.window_mode = "wrap"
         # manifest table just loaded by `from` and not yet transformed
-        # past filters — sargable filter bounds re-plan its scan
-        # through manifest file-skipping (see _manifest_pushdown)
+        # past filters — the first filter's SQL re-plans its scan
+        # through manifest file-skipping (Catalog.load_pruned)
         self._manifest_from: str | None = None
         # columns produced in THIS pipeline by operators marked
         # large_expressions — filters referencing them get the
@@ -334,10 +334,12 @@ class Compiler:
 
     # ------------------------------------------------------------ query
 
-    def _err(self, msg: str, node=None) -> PrqlCompileError:
-        """Compile error annotated with the PRQL source location
-        (parity: prql-compiler/src/error.rs span reporting)."""
-        pos = getattr(node, "pos", -1)
+    def _err(self, msg: str, node=None, pos=None) -> PrqlCompileError:
+        """Compile error annotated with the PRQL source location of
+        ``node`` or offset ``pos`` (parity: prql-compiler/src/error.rs
+        span reporting)."""
+        if pos is None:
+            pos = getattr(node, "pos", -1)
         if pos is not None and pos >= 0 and self.src:
             start = self.src.rfind("\n", 0, pos) + 1
             end = self.src.find("\n", pos)
@@ -348,6 +350,14 @@ class Compiler:
                 f"  | {' ' * (pos - start)}^"
             )
         return PrqlCompileError(msg)
+
+    def _arity(self, step: FuncCall, n: int) -> None:
+        """Raise at the first positional argument past the ``n`` the
+        transform reads, instead of dropping it (``filter k > 5 k <
+        3`` would otherwise filter on ``k > 5`` alone)."""
+        if len(step.args) > n:
+            pos = step.arg_pos[n] if n < len(step.arg_pos) else -1
+            raise self._err(f"{step.name}: unexpected argument", pos=pos)
 
     def compile_query(self, q: Query) -> DataFrame:
         self.funcs = dict(q.func_defs)
@@ -499,6 +509,7 @@ class Compiler:
 
     def _table_ref(self, step: FuncCall) -> tuple[str, str]:
         assigns = step.named.get("_assigns") or []
+        self._arity(step, 0 if assigns else 1)
         if assigns:
             a = assigns[0]
             if not isinstance(a.expr, Ident):
@@ -577,10 +588,11 @@ class Compiler:
     def t_filter(self, step: FuncCall):
         if not step.args:
             raise PrqlCompileError("filter needs a condition")
+        self._arity(step, 1)
         # ANY filter — sargable or not, QUALIFY or plain — consumes
         # the pristine manifest scan: (a) the metadata-count fast
         # path must never answer past a predicate with the full-table
-        # manifest count, and (b) _manifest_pushdown replaces self.df
+        # manifest count, and (b) load_pruned replaces self.df
         # with a re-planned base scan, which is only sound while
         # self.df IS the bare scan (a later filter re-planning would
         # silently drop this filter's predicate from the result).
@@ -598,7 +610,10 @@ class Compiler:
             self.r_select([(c, self._qi(c)) for c in keep])
             return
         if manifest_from is not None:
-            self._manifest_pushdown(manifest_from, step.args[0])
+            # the exact filter below still decides every row
+            pruned = self.catalog.load_pruned(manifest_from, ce.sql)
+            if pruned is not None:
+                self.df = pruned
         if self._barrier_heavy(step.args[0], ce):
             return
         self.r_filter(ce.sql)
@@ -731,165 +746,6 @@ class Compiler:
         self.sort = []
         return True
 
-    def _manifest_pushdown(self, tname: str, cond) -> None:
-        """Route a sargable filter straight after ``from`` on a
-        manifest table through manifest file-skipping: extract
-        conservative [lo, hi] bounds per column from the condition's
-        AST and re-plan the scan over only the files whose manifest
-        stats can overlap them (100 TB lever: a selective range
-        predicate on a stats-covered, clustered column opens
-        O(matching) files instead of every file). The EXACT original
-        predicate is still applied by the caller, so correctness
-        never depends on stats coverage; when nothing prunes, the
-        original plan is kept unchanged."""
-        bounds = self._filter_bounds(cond)
-        if not bounds:
-            return
-        pruned = self.catalog.load_pruned(tname, bounds)
-        if pruned is not None:
-            self.df = pruned
-
-    def _filter_bounds(self, node) -> dict:
-        """Column → list of (lo, hi) INTERVALS implied by the
-        condition. Conjunctions of ``col <op> literal`` comparisons
-        and ``in lo..hi`` ranges intersect per column;
-        DISJUNCTIONS over the SAME single column union their
-        intervals (``ds == a or ds == b`` — the multi-partition
-        day query — prunes to exactly those partitions' files).
-        Anything else contributes nothing (never wrong bounds:
-        unknown shapes are simply not sargable for file skipping).
-        Strict inequalities widen to inclusive bounds
-        (conservative); widening means an EMPTY intersection is
-        empty for the original predicate too, so an empty interval
-        list legitimately prunes every file."""
-        _FLIP = {"<": ">", ">": "<", ">=": "<=", "<=": ">=", "==": "=="}
-
-        def litval(n):
-            if not isinstance(n, Lit):
-                return None
-            if n.kind in ("int", "float", "str", "date"):
-                return n.value
-            if n.kind == "timestamp":
-                # stats store isoformat ("T"-separated); normalize
-                return str(n.value).replace(" ", "T")
-            return None
-
-        def one(colname, op, v):
-            """{col: [interval]} for a single comparison, or None."""
-            flat = self.scope.get(colname)
-            if flat is None or v is None:
-                return None
-            if op in (">=", ">"):
-                return {flat: [(v, None)]}
-            if op in ("<=", "<"):
-                return {flat: [(None, v)]}
-            if op == "==":
-                return {flat: [(v, v)]}
-            return None
-
-        def isect(a, b):
-            """Intersection of two intervals, or None when empty /
-            incomparable (incomparable -> treated as empty by the
-            caller dropping the COLUMN, not the file)."""
-            try:
-                lo = a[0] if b[0] is None else (
-                    b[0] if a[0] is None else max(a[0], b[0])
-                )
-                hi = a[1] if b[1] is None else (
-                    b[1] if a[1] is None else min(a[1], b[1])
-                )
-                if lo is not None and hi is not None and lo > hi:
-                    return None
-            except TypeError:
-                raise _Unsargable()
-            return (lo, hi)
-
-        class _Unsargable(Exception):
-            pass
-
-        def walk(n):
-            """{col: [intervals]} for the subtree, or None when the
-            subtree constrains nothing usable."""
-            if isinstance(n, ExprPipeline):
-                # fold `(x | in a..b)` into FuncCall("in", [rng, x]),
-                # mirroring _expr_pipeline
-                cur = n.steps[0]
-                for stp in n.steps[1:]:
-                    if isinstance(stp, Ident):
-                        stp = FuncCall(stp.name, [], {})
-                    if not isinstance(stp, FuncCall):
-                        return None
-                    cur = FuncCall(stp.name, stp.args + [cur], stp.named)
-                return walk(cur)
-            if isinstance(n, Binary) and n.op == "and":
-                left, right = walk(n.left), walk(n.right)
-                if left is None:
-                    return right
-                if right is None:
-                    return left
-                out = dict(left)
-                for col, ivs in right.items():
-                    if col not in out:
-                        out[col] = ivs
-                        continue
-                    try:
-                        merged = [
-                            m
-                            for a in out[col]
-                            for b in ivs
-                            if (m := isect(a, b)) is not None
-                        ]
-                    except _Unsargable:
-                        out.pop(col)  # incomparable: drop the column
-                        continue
-                    out[col] = merged
-                return out
-            if isinstance(n, Binary) and n.op == "or":
-                left, right = walk(n.left), walk(n.right)
-                # sound ONLY when both arms constrain the SAME single
-                # column: rows satisfying either arm lie in the
-                # union of that column's intervals. A multi-column or
-                # half-constrained OR guarantees nothing.
-                if (
-                    left is not None
-                    and right is not None
-                    and len(left) == 1
-                    and set(left) == set(right)
-                ):
-                    col = next(iter(left))
-                    return {col: left[col] + right[col]}
-                return None
-            if isinstance(n, Binary) and n.op in _FLIP:
-                if isinstance(n.left, Ident):
-                    return one(n.left.name, n.op, litval(n.right))
-                if isinstance(n.right, Ident):
-                    return one(n.right.name, _FLIP[n.op], litval(n.left))
-                return None
-            # `value | in lo..hi` parses as FuncCall("in", [range, value])
-            if (
-                isinstance(n, FuncCall)
-                and n.name == "in"
-                and len(n.args) == 2
-                and isinstance(n.args[0], RangeLit)
-                and isinstance(n.args[1], Ident)
-            ):
-                rng = n.args[0]
-                flat = self.scope.get(n.args[1].name)
-                lo = litval(rng.start) if rng.start is not None else None
-                hi = litval(rng.end) if rng.end is not None else None
-                if flat is None or (lo is None and hi is None):
-                    return None
-                return {flat: [(lo, hi)]}
-            return None
-
-        got = walk(node) or {}
-        return {
-            col: ivs
-            for col, ivs in got.items()
-            if any(lo is not None or hi is not None for lo, hi in ivs)
-            or not ivs  # empty list = provably no match: prune all
-        }
-
     # -- aggregate (top level; group-level handled in t_group)
     def t_aggregate(self, step: FuncCall, keys: list[str] | None = None):
         items = self._items(step)
@@ -930,6 +786,7 @@ class Compiler:
     def t_take(self, step: FuncCall):
         if not step.args:
             raise PrqlCompileError("take needs a count or range")
+        self._arity(step, 1)
         node = step.args[0]
         if isinstance(node, Lit) and node.kind == "int":
             lo, hi = 1, node.value
@@ -1038,6 +895,7 @@ class Compiler:
     def t_group(self, step: FuncCall):
         if len(step.args) < 2:
             raise PrqlCompileError("group needs keys and a pipeline")
+        self._arity(step, 2)
         keys_node, pipe_node = step.args[0], step.args[1]
         key_items = (
             keys_node.items if isinstance(keys_node, ListExpr) else [keys_node]

@@ -418,6 +418,7 @@ class Parser:
     def parse_func_call_after_ident(self, name: str) -> FuncCall:
         args: list = []
         named: dict = {}
+        arg_pos: list = []
         while True:
             t = self.peek()
             if t.kind == "IDENT":
@@ -436,15 +437,17 @@ class Parser:
                         Assign(t.value, self.parse_expr())
                     )
                     continue
+                arg_pos.append(t.pos)
                 args.append(self.parse_expr())
                 continue
             if t.kind in _TERM_STARTS or (
                 t.kind == "OP" and t.value in ("[", "(")
             ):
+                arg_pos.append(t.pos)
                 args.append(self.parse_expr())
                 continue
             break
-        return FuncCall(name, args, named)
+        return FuncCall(name, args, named, arg_pos)
 
     # -- expressions (precedence climbing)
     def parse_expr(self):

@@ -72,9 +72,13 @@ class Binary(Node):
 
 @dataclass
 class FuncCall(Node):
+    """``arg_pos`` holds each positional argument's source offset,
+    for span-carrying arity errors."""
+
     name: str
     args: list = field(default_factory=list)
     named: dict = field(default_factory=dict)
+    arg_pos: list = field(default_factory=list, compare=False, repr=False)
 
 
 @dataclass

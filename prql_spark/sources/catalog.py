@@ -298,21 +298,27 @@ class Catalog:
     def is_broadcast(self, name: str) -> bool:
         return name in self.broadcast_names
 
-    def load_pruned(self, name: str, bounds: dict):
+    def load_pruned(self, name: str, predicate: str):
         """Manifest-table FILE-SKIPPING load for predicate pushdown:
         re-plan ``name``'s latest version keeping only files whose
-        manifest [min, max] stats can overlap every bound in
-        ``bounds`` (``{col: (lo, hi)}`` or ``{col: [(lo, hi), ...]}``
-        — an interval UNION from a same-column OR). Returns the pruned
-        DataFrame, or None when ``name`` is not a manifest table or
-        nothing was actually pruned (caller keeps its original
-        plan). The caller MUST still apply its exact predicate —
-        pruning is conservative, not exact."""
+        manifest [min, max] stats can overlap the bounds
+        ``manifest._sql_bounds`` reads from the Spark SQL
+        ``predicate``. Returns the pruned DataFrame, or None when
+        ``name`` is not a manifest table or nothing was actually
+        pruned (caller keeps its original plan). The caller MUST
+        still apply its exact predicate — pruning is conservative,
+        not exact."""
         path = self._manifest_paths.get(name)
-        if path is None or not bounds:
+        if path is None:
             return None
-        from prql_spark.sources.manifest import snapshot_pruned_read
+        from prql_spark.sources.manifest import (
+            _sql_bounds,
+            snapshot_pruned_read,
+        )
 
+        bounds = _sql_bounds(predicate)
+        if not bounds:
+            return None
         df, n_kept, n_total = snapshot_pruned_read(
             self.spark, path, bounds
         )

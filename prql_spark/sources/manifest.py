@@ -73,9 +73,11 @@ function goes through: :func:`_open` is the only version lookup (and
 the only "no versions" / "version N not in" error), :func:`_publish`
 the only commit loop (list the head, build on it, carry the
 per-stream high-water map forward, retry a lost race),
-:func:`_overlaps_bounds` the only rule for skipping a file, and
-:func:`_rewrite_scoped` the one plan → stage → commit loop of the
-scoped maintenance rewrites (compact, optimize).
+:func:`_sql_bounds` the only predicate-to-bounds rule (the PRQL
+pushdown hands it the filter's compiled SQL, ``delete_snapshot`` the
+user's predicate), :func:`_overlaps_bounds` the only rule for
+skipping a file, and :func:`_rewrite_scoped` the one plan → stage →
+commit loop of the scoped maintenance rewrites (compact, optimize).
 
 Single-manifest simplification (documented trade-off vs Iceberg's
 manifest lists): each commit's manifest holds the FULL file list.
@@ -1567,21 +1569,23 @@ def _lt_for_prune(a, b) -> bool:
 
 
 def _overlaps_bounds(f: dict, bounds: dict) -> bool:
-    """Can file entry ``f`` contain a row satisfying every bound in
-    ``bounds`` (``{col: (lo, hi)}`` or ``{col: [(lo, hi), ...]}``, an
-    interval UNION per column)? Conservative: files lacking stats
-    for a bounded column are kept, incomparable types keep the file.
-    Exact skips: a hive NULL partition on a bounded column (a range
-    or equality bound is never TRUE on NULL), and an empty interval
-    list (the caller proved the conjunction unsatisfiable)."""
+    """The one file-skip rule: can file entry ``f`` contain a row
+    satisfying every bound in ``bounds`` (``{col: (lo, hi)}`` or
+    ``{col: [(lo, hi), ...]}``, an interval UNION per column, as
+    :func:`_sql_bounds` builds them)? Each interval is tested against
+    THIS file's stats, end by end, so an inverted interval (an AND
+    whose ends cross) skips a file only by that file's own stats —
+    emptiness is never decided apart from them. Conservative:
+    files lacking stats for a bounded column are kept, incomparable
+    types keep the file. Exact skip: a hive NULL partition on a
+    bounded column (a range or equality bound is never TRUE on
+    NULL)."""
     st = f.get("stats") or {}
     pv = f.get("partition") or {}
     for col, ivs in bounds.items():
         if isinstance(ivs, tuple):
             ivs = [ivs]
         if col in pv and pv[col] is None:
-            return False
-        if not ivs:
             return False
         rng = st.get(col)
         if rng is None:
@@ -1604,38 +1608,52 @@ def _overlaps_bounds(f: dict, bounds: dict) -> bool:
 
 
 _SQL_TOKEN = re.compile(
-    r"(?:"
-    r"(?P<str>'(?:[^']|'')*')"
-    r"|(?P<num>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)"
+    r"(?P<stop>--|/\*)"
+    r"|'(?P<str>(?:[^'\\]|\\.|'')*)'"
+    r"|(?P<num>\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)"
     r"|(?P<op><=|>=|==|!=|<>|=|<|>)"
+    r"|(?P<arith>[-+*/%])"
     r"|(?P<lp>\()|(?P<rp>\))|(?P<comma>,)"
-    r"|(?P<word>`[^`]+`|[A-Za-z_][A-Za-z0-9_.]*)"
-    r")"
+    r"|`(?P<col>[^`]+)`"
+    r"|(?P<word>[A-Za-z_][A-Za-z0-9_.]*)",
+    re.S,
 )
+# a string literal body whose value the extractor can state; Spark
+# also decodes \n, \t, \uXXXX, octal ..., which stop extraction
+_SQL_STR_PLAIN = re.compile(r"(?:[^'\\]|\\['\\]|'')*", re.S)
+_SQL_UNESC = re.compile(r"\\(['\\])|'(')")
 
 
 def _sql_bounds(predicate: str) -> dict | None:
-    """Extract conservative per-column pruning bounds from a Spark
-    SQL boolean ``predicate`` string, in :func:`_overlaps_bounds`
-    shape — or None when nothing sargable was found.
+    """The one predicate-to-bounds rule: conservative per-column
+    pruning bounds from a Spark SQL boolean ``predicate`` string, in
+    :func:`_overlaps_bounds` shape (a ``(lo, hi)`` tuple for one
+    interval, a list for an ``IN`` or a same-column ``OR``), or None
+    when nothing sargable was found. ``delete_snapshot`` hands it the
+    user's predicate; the PRQL pushdown (``Catalog.load_pruned``)
+    hands it the filter's compiled SQL.
 
     Soundness posture (the caller ALWAYS re-applies the exact
     predicate, so pruning only needs a SUPERSET of matching files):
-    only top-level AND conjuncts contribute; any conjunct that isn't
-    ``col <op> literal`` / ``literal <op> col`` / ``col BETWEEN a
-    AND b`` / ``col IN (...)`` is simply SKIPPED (IS NULL, NOT,
-    functions, subqueries — skipping a conjunct keeps more files,
-    never fewer). A disjunction at any group's top level makes that
-    whole group contribute nothing. Strict bounds widen to
-    inclusive. TIMESTAMP literals normalize like the partition-path
-    parser (space → T, fraction padded) so lexicographic compares
-    against isoformat stats stay exact."""
+
+    * atoms are ``col <op> literal``, ``literal <op> col``, ``col
+      BETWEEN a AND b`` and ``col IN (...)``; any other conjunct
+      (IS NULL, NOT, ``!=``, functions, arithmetic, CASE) is
+      skipped — skipping keeps more files, never fewer;
+    * AND intersects the intervals per column, keeping the tighter
+      end where the two compare and either end where they do not
+      (each alone is a valid bound). It never decides that an
+      intersection is empty: implicit casts make that unsound, so an
+      inverted interval goes to :func:`_overlaps_bounds`, which tests
+      it per file against that file's stats;
+    * OR contributes only when every arm bounds the same single
+      column, as the union of the arms' intervals;
+    * strict bounds widen to inclusive; DATE/TIMESTAMP literals take
+      the isoformat the stats use; a comment (``--``, ``/*``), an
+      unknown character or a string escape other than ``\\'``,
+      ``\\\\`` and ``''`` stops extraction."""
     toks = _tok_sql(predicate)
-    if not toks:
-        return None
-    out: dict = {}
-    _bounds_walk(toks, out)
-    return out or None
+    return (_bounds_walk(toks) or None) if toks else None
 
 
 def _tok_sql(s: str) -> list | None:
@@ -1646,70 +1664,93 @@ def _tok_sql(s: str) -> list | None:
             i += 1
             continue
         m = _SQL_TOKEN.match(s, i)
-        if not m:
-            return None  # unknown character: give up (no pruning)
+        if not m or m.group("stop"):
+            return None  # unknown character or a comment: no pruning
         i = m.end()
-        if m.group("str") is not None:
-            toks.append(("lit", m.group("str")[1:-1].replace("''", "'")))
-        elif m.group("num") is not None:
-            t = m.group("num")
-            toks.append(
-                ("lit", float(t) if "." in t or "e" in t.lower() else int(t))
-            )
-        elif m.group("op"):
-            toks.append(("op", m.group("op")))
-        elif m.group("lp"):
-            toks.append(("lp", "("))
-        elif m.group("rp"):
-            toks.append(("rp", ")"))
-        elif m.group("comma"):
-            toks.append(("comma", ","))
-        else:
-            toks.append(("word", m.group("word").strip("`")))
+        kind = m.lastgroup
+        v = m.group(kind)
+        if kind == "str":
+            if not _SQL_STR_PLAIN.fullmatch(v):
+                return None
+            kind, v = "lit", _SQL_UNESC.sub(r"\1\2", v)
+        elif kind == "num":
+            num = float if "." in v or "e" in v.lower() else int
+            kind, v = "lit", num(v)
+        toks.append((kind, v))
     return toks
 
 
-def _bounds_walk(toks: list, out: dict) -> None:
-    def is_kw(t, *names):
-        return t[0] == "word" and t[1].upper() in names
+def _kw(t) -> str | None:
+    return t[1].upper() if t[0] == "word" else None
 
-    # a top-level OR anywhere: this group proves nothing
-    depth = 0
-    for t in toks:
-        if t[0] == "lp":
-            depth += 1
-        elif t[0] == "rp":
-            depth -= 1
-        elif depth == 0 and is_kw(t, "OR"):
-            return
-    # split on top-level AND (BETWEEN's AND belongs to its atom)
-    segs, depth, start, between = [], 0, 0, False
+
+def _split(toks: list, kw: str) -> list:
+    """``toks`` split at each top-level ``kw`` (AND / OR): outside
+    parentheses and CASE ... END, and not the AND of a BETWEEN."""
+    parts, depth, start, between = [], 0, 0, False
     for idx, t in enumerate(toks):
-        if t[0] == "lp":
+        k = _kw(t)
+        if t[0] == "lp" or k == "CASE":
             depth += 1
-        elif t[0] == "rp":
+        elif t[0] == "rp" or k == "END":
             depth -= 1
-        elif depth == 0 and t[0] == "word":
-            u = t[1].upper()
-            if u == "BETWEEN":
-                between = True
-            elif u == "AND":
-                if between:
-                    between = False
-                else:
-                    segs.append(toks[start:idx])
-                    start = idx + 1
-    segs.append(toks[start:])
-    for seg in segs:
-        if not seg:
-            continue
-        if seg[0][0] == "lp" and seg[-1][0] == "rp" and _wrapped(seg):
-            _bounds_walk(seg[1:-1], out)
-        else:
-            _bounds_atom(seg, out)
+        elif depth == 0 and k == "BETWEEN":
+            between = True
+        elif depth == 0 and k == kw:
+            if kw == "AND" and between:
+                between = False
+            else:
+                parts.append(toks[start:idx])
+                start = idx + 1
+    parts.append(toks[start:])
+    return parts
+
+
+def _bounds_walk(toks: list) -> dict:
+    """{col: bound} implied by a token group ({} when nothing is)."""
+    arms = _split(toks, "OR")
+    if len(arms) > 1:
+        got = [_bounds_walk(a) for a in arms]
+        cols = {c for g in got for c in g}
+        if len(cols) != 1 or not all(got):
+            return {}
+        (col,) = cols
+        return {col: [iv for g in got for iv in _ivs(g[col])]}
+    out: dict = {}
+    for seg in _split(toks, "AND"):
+        got = _bounds_walk(seg[1:-1]) if _wrapped(seg) else _bounds_atom(seg)
+        for col, b in got.items():
+            out[col] = _meet(out[col], b) if col in out else b
+    return out
+
+
+def _ivs(b) -> list:
+    return [b] if isinstance(b, tuple) else b
+
+
+def _meet(a, b):
+    """Both bounds of one column hold. Two intervals stay a tuple;
+    a list meets pairwise, and past 1024 pairs one side is kept."""
+    if isinstance(a, tuple) and isinstance(b, tuple):
+        return (_tighter(a[0], b[0], max), _tighter(a[1], b[1], min))
+    xs, ys = _ivs(a), _ivs(b)
+    if len(xs) * len(ys) > 1024:
+        return a
+    return [_meet(x, y) for x in xs for y in ys]
+
+
+def _tighter(x, y, pick):
+    if x is None or y is None:
+        return y if x is None else x
+    try:
+        return pick(x, y)
+    except TypeError:
+        return x  # incomparable: either end alone is a valid bound
 
 
 def _wrapped(seg: list) -> bool:
+    if not seg or seg[0][0] != "lp":
+        return False
     depth = 0
     for idx, t in enumerate(seg):
         if t[0] == "lp":
@@ -1721,108 +1762,92 @@ def _wrapped(seg: list) -> bool:
     return False
 
 
+def _dt_bound(kind: str, text: str) -> str | None:
+    """A DATE/TIMESTAMP literal's text → the isoformat its stats hold
+    (``_stats_enc``), or None: a zoned or unparseable literal gives no
+    bound."""
+    from datetime import date, datetime
+
+    try:
+        v = (date if kind == "DATE" else datetime).fromisoformat(text)
+    except ValueError:
+        return None
+    return None if getattr(v, "tzinfo", None) is not None else v.isoformat()
+
+
 def _bounds_lit(seg: list, i: int):
-    """Literal at position ``i`` → (value, next_i) or None."""
-    if i < len(seg) and seg[i][0] == "lit":
-        return seg[i][1], i + 1
+    """Literal at position ``i`` → (value, next_i) or None: a number
+    (negated or parenthesized too), a string, or a DATE/TIMESTAMP
+    literal. (No booleans: a cast between BOOLEAN and a numeric
+    column's stats could prune a matching row.)"""
+    kind, v = seg[i] if i < len(seg) else (None, None)
+    if kind == "lit":
+        return v, i + 1
+    if kind == "arith" and v == "-":
+        got = _bounds_lit(seg, i + 1)
+        if got and type(got[0]) in (int, float):
+            return -got[0], got[1]
+        return None
+    if kind == "lp":
+        got = _bounds_lit(seg, i + 1)
+        if got and got[1] < len(seg) and seg[got[1]][0] == "rp":
+            return got[0], got[1] + 1
+        return None
+    k = _kw(seg[i]) if kind else None
     if (
-        i + 1 < len(seg)
-        and seg[i][0] == "word"
-        and seg[i][1].upper() in ("DATE", "TIMESTAMP")
+        k in ("DATE", "TIMESTAMP")
+        and i + 1 < len(seg)
         and seg[i + 1][0] == "lit"
         and isinstance(seg[i + 1][1], str)
     ):
-        v = seg[i + 1][1]
-        if seg[i][1].upper() == "TIMESTAMP":
-            v = _norm_ts_path(v)
-        return v, i + 2
-    if i < len(seg) and seg[i][0] == "word":
-        u = seg[i][1].upper()
-        if u in ("TRUE", "FALSE"):
-            return u == "TRUE", i + 1
+        v = _dt_bound(k, seg[i + 1][1])
+        return None if v is None else (v, i + 2)
     return None
 
 
 _REV_OP = {"<": ">", "<=": ">=", ">": "<", ">=": "<=", "=": "=", "==": "=="}
 
 
-def _bounds_atom(seg: list, out: dict) -> None:
-    def add_iv(col, lo, hi):
-        cur = out.get(col)
-        if cur is None:
-            out[col] = (lo, hi)
-            return
-        if isinstance(cur, list):
-            return  # an IN already bound this col; extra is skipped (safe)
-        clo, chi = cur
-        try:
-            if lo is not None:
-                clo = lo if clo is None else max(clo, lo)
-            if hi is not None:
-                chi = hi if chi is None else min(chi, hi)
-        except TypeError:
-            return  # incomparable intersection: keep the old (safe)
-        out[col] = (clo, chi)
+def _cmp_bound(col: str, op: str, v) -> dict:
+    if op in ("=", "=="):
+        return {col: (v, v)}
+    if op in ("<", "<="):
+        return {col: (None, v)}  # strict widens to inclusive (safe)
+    if op in (">", ">="):
+        return {col: (v, None)}
+    return {}  # != / <> prove nothing for interval pruning
 
-    def add_op(col, op, v):
-        if op in ("=", "=="):
-            add_iv(col, v, v)
-        elif op in ("<", "<="):
-            add_iv(col, None, v)  # strict widens to inclusive (safe)
-        elif op in (">", ">="):
-            add_iv(col, v, None)
-        # != / <> prove nothing for interval pruning: skip
 
+def _bounds_atom(seg: list) -> dict:
+    """One conjunct → {col: bound}, or {} for an unknown shape."""
     n = len(seg)
-    if n >= 3 and seg[0][0] == "word":
-        col = seg[0][1]
-        if seg[1][0] == "op":
+    if n >= 3 and seg[0][0] in ("word", "col"):
+        col, (kind, v) = seg[0][1], seg[1]
+        if kind == "op":
             lit = _bounds_lit(seg, 2)
-            if lit and lit[1] == n:
-                add_op(col, seg[1][1], lit[0])
-            return
-        if seg[1][0] == "word":
-            u = seg[1][1].upper()
-            if u == "BETWEEN":
-                l1 = _bounds_lit(seg, 2)
-                if l1:
-                    j = l1[1]
-                    if (
-                        j < n
-                        and seg[j][0] == "word"
-                        and seg[j][1].upper() == "AND"
-                    ):
-                        l2 = _bounds_lit(seg, j + 1)
-                        if l2 and l2[1] == n:
-                            add_iv(col, l1[0], l2[0])
-                return
-            if u == "IN" and n >= 5 and seg[2][0] == "lp" and seg[-1][0] == "rp":
-                vals, j = [], 3
-                while j < n - 1:
-                    lit = _bounds_lit(seg, j)
-                    if not lit:
-                        return
-                    vals.append(lit[0])
-                    j = lit[1]
-                    if j < n - 1:
-                        if seg[j][0] != "comma":
-                            return
-                        j += 1
-                if vals and col not in out:
-                    out[col] = [(v, v) for v in vals]
-                return
-    # literal <op> col (reversed)
-    lit = _bounds_lit(seg, 0)
-    if (
-        lit
-        and lit[1] == n - 2
-        and seg[lit[1]][0] == "op"
-        and seg[n - 1][0] == "word"
-    ):
-        op = _REV_OP.get(seg[lit[1]][1])
-        if op:
-            add_op(seg[n - 1][1], op, lit[0])
-    # anything else: unknown conjunct — contribute nothing (safe)
+            return _cmp_bound(col, v, lit[0]) if lit and lit[1] == n else {}
+        if _kw(seg[1]) == "BETWEEN":
+            lo = _bounds_lit(seg, 2)
+            if lo and lo[1] < n and _kw(seg[lo[1]]) == "AND":
+                hi = _bounds_lit(seg, lo[1] + 1)
+                if hi and hi[1] == n:
+                    return {col: (lo[0], hi[0])}
+            return {}
+        if _kw(seg[1]) == "IN" and seg[2][0] == "lp" and seg[-1][0] == "rp":
+            vals, j = [], 3
+            while (lit := _bounds_lit(seg, j)) is not None:
+                vals.append(lit[0])
+                j = lit[1]
+                if j >= n or seg[j][0] != "comma":
+                    break
+                j += 1
+            return {col: [(v, v) for v in vals]} if vals and j == n - 1 else {}
+    lit = _bounds_lit(seg, 0)  # literal <op> col
+    if lit and lit[1] == n - 2 and seg[-2][0] == "op":
+        if seg[-1][0] in ("word", "col"):
+            op = _REV_OP.get(seg[-2][1], "")
+            return _cmp_bound(seg[-1][1], op, lit[0])
+    return {}
 
 
 def _commit_replacing(
@@ -2161,8 +2186,9 @@ def delete_snapshot(
     Touched discovery is two-stage, like :func:`merge_snapshot`'s:
 
     1. **Stats prune (no data read).** When the predicate is
-       sargable (:func:`_sql_bounds` — AND-conjuncts of ``col <op>
-       literal`` / BETWEEN / IN), each conjunct's bounds are compared
+       sargable (:func:`_sql_bounds`, the rule the PRQL pushdown
+       shares — ``col <op> literal`` / BETWEEN / IN atoms under AND,
+       and same-column ORs), its bounds are compared
        against the manifest's per-file stats and partition values —
        on a stats-covered table a delete of one key range plans
        tasks over the overlapping files only, not all of them. Files
@@ -2394,9 +2420,7 @@ def snapshot_pruned_read(
     overlap EVERY bound in ``bounds`` — ``{col: (lo, hi)}`` or
     ``{col: [(lo, hi), ...]}`` (a UNION of intervals, e.g. the
     multi-partition ``ds == a or ds == b`` query; a file survives a
-    column's bound when it overlaps ANY of its intervals, and an
-    EMPTY interval list — a provably unsatisfiable conjunction —
-    prunes every file). Unlike :func:`snapshot_scan` the predicate
+    column's bound when it overlaps ANY of its intervals). Unlike :func:`snapshot_scan` the predicate
     is NOT applied here — the caller re-applies its exact original
     filter on top, so pruning only has to be CONSERVATIVE: files
     lacking stats for a bounded column are kept, and any comparison

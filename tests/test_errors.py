@@ -154,3 +154,34 @@ def test_jinja_on_dataframe_path_reports_prql_error(catalog):
         compile_prql(
             "from orders\nderive [x = {{ var('v') }}]", catalog
         )
+
+
+@pytest.mark.parametrize(
+    "prql, extra",
+    [
+        (
+            "from orders\nfilter o_orderkey > 5 o_orderkey < 3",
+            "o_orderkey < 3",
+        ),
+        # the `in` typo: a PRQL error, not Spark's FILTER_NOT_BOOLEAN
+        ("from orders\nfilter o_orderkey in 100..", "in 100.."),
+        ("from orders\ntake 5 10", "10"),
+        ("from orders o_custkey", "o_custkey"),
+        ("from o = orders o_custkey", "o_custkey"),
+        (
+            "from orders\ngroup o_custkey (aggregate [n = count]) x",
+            "x",
+        ),
+    ],
+)
+def test_extra_transform_argument_reports_span(catalog, prql, extra):
+    """A positional argument a transform does not read raises at its
+    own line:col in both engines — never dropped silently."""
+    from prql_spark import to_sql
+    from prql_spark.parser import _line_col
+
+    where = _line_col(prql, prql.rindex(extra))
+    for compile_ in (compile_prql, to_sql):
+        with pytest.raises(PrqlCompileError) as ei:
+            compile_(prql, catalog)
+        assert f"unexpected argument at {where}" in str(ei.value)

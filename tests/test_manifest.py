@@ -1511,6 +1511,132 @@ def test_sql_bounds_extractor_soundness():
     assert _sql_bounds("id >= 3 AND id >= 7") == {"id": (7, None)}
 
 
+def _minute_tables(spark, tmp_path):
+    """A stats-covered manifest table ``mins`` and a plain-parquet
+    copy ``mins_plain`` of the same rows: INT ``k`` 0..119 and ``ts``
+    one row per minute from 2024-01-01 00:00, four files."""
+    from prql_spark.sources.catalog import Catalog
+
+    df = (
+        spark.range(120)
+        .select(F.col("id").cast("int").alias("k"))
+        .withColumn(
+            "ts",
+            F.expr("TIMESTAMP '2024-01-01 00:00:00' "
+                   "+ make_dt_interval(0, 0, k, 0)"),
+        )
+        .repartitionByRange(4, "k")
+        .sortWithinPartitions("k")
+    )
+    snapshot_write(df, str(tmp_path / "mins"), stats_cols=("k", "ts"))
+    df.write.parquet(str(tmp_path / "mins_plain"))
+    return Catalog(spark, str(tmp_path))
+
+
+def test_datetime_literal_bounds_are_canonical(spark, tmp_path):
+    """DATE/TIMESTAMP literals bound in the stats' isoformat: a
+    minute-precision literal ('...T00:00') must not sort below the
+    stats' '...T00:00:00' and skip the file holding the row."""
+    from prql_spark import compile_prql
+    from prql_spark.sources.manifest import _sql_bounds
+
+    cat = _minute_tables(spark, tmp_path)
+    out = compile_prql("from mins\nfilter ts == @2024-01-01T00:00", cat)
+    assert [r.k for r in out.collect()] == [0]
+    assert len(out.inputFiles()) == 1
+    assert _sql_bounds("d = DATE '2024-01-02'") == {
+        "d": ("2024-01-02", "2024-01-02")
+    }
+    # a zoned or unparseable literal gives no bound
+    assert _sql_bounds("ts >= TIMESTAMP '2024-01-01 00:00+01:00'") is None
+    assert _sql_bounds("d <= DATE '2024-1-2'") is None
+
+    path = str(tmp_path / "mins")
+    res = delete_snapshot(spark, path, "ts = TIMESTAMP '2024-01-01 00:00'")
+    assert not res.get("noop") and res["n_candidates"] == 1
+    assert snapshot_read(spark, path).count() == 119
+
+
+@pytest.mark.parametrize(
+    "cond",
+    [
+        # a TIMESTAMP lower end and a string upper end do not compare
+        # as strings ('T' > ' '): their "empty" intersection is not
+        'ts >= @2024-01-01T00:00 and ts <= "2024-01-01 00:30:00"',
+        # both strings cast to INT 1: not a disjoint equality
+        'k == "01" and k == "1"',
+    ],
+)
+def test_pruned_prql_filter_matches_plain_parquet(spark, tmp_path, cond):
+    """File skipping never changes a PRQL filter's rows: a
+    stats-covered manifest table answers as its plain-parquet copy."""
+    from prql_spark import compile_prql
+
+    cat = _minute_tables(spark, tmp_path)
+    got, want = (
+        sorted(r.k for r in compile_prql(f"from {t}\nfilter {cond}", cat)
+               .collect())
+        for t in ("mins", "mins_plain")
+    )
+    assert got == want and got
+
+
+def test_prql_pushdown_prunes_as_sql_bounds(spark, tmp_path):
+    """One predicate-to-bounds rule: a PRQL filter straight after
+    ``from`` opens exactly the files ``snapshot_pruned_read`` keeps
+    for the bounds ``_sql_bounds`` reads from the filter's compiled
+    Spark SQL — OR, IN lists and arithmetic included."""
+    from prql_spark import compile_prql, to_sql
+    from prql_spark.sources.catalog import Catalog
+    from prql_spark.sources.manifest import (
+        _sql_bounds,
+        snapshot_pruned_read,
+    )
+
+    path = str(tmp_path / "par")
+    snapshot_write(
+        spark.range(200)
+        .select(F.col("id").cast("int").alias("k"))
+        .selectExpr(
+            "k",
+            "concat('d', CAST(k DIV 50 AS STRING)) AS ds",
+            "date_add(DATE '2024-01-01', CAST(k DIV 10 AS INT)) AS d",
+            "TIMESTAMP '2024-01-01 00:00:00' "
+            "+ make_dt_interval(0, 0, k, 0) AS ts",
+            "concat('it''s ', lpad(CAST(k AS STRING), 3, '0')) AS s",
+        )
+        .repartitionByRange(8, "k")
+        .sortWithinPartitions("k"),
+        path,
+        stats_cols=("k", "ds", "d", "ts", "s"),
+    )
+    cat = Catalog(spark, str(tmp_path))
+    total = len(cat.load("par").inputFiles())
+    shapes = {
+        "range": "k >= 40 and k <= 59",
+        "in_range": "(k | in 100..119)",
+        "alias": "t.k < 30",
+        "same_column_or": 'ds == "d1" or ds == "d3"',
+        "or_under_and": 'k >= 20 and (ds == "d0" or ds == "d2")',
+        "disjoint_and": 'ds == "d1" and ds == "d2"',
+        "in_list": "(k | in [5, 105, 195])",
+        "date": "d == @2024-01-05",
+        "timestamp": "ts == @2024-01-01T01:00",
+        "apostrophe": 's == "it\'s 042"',
+        "arithmetic": "k % 7 == 0 and k >= 150",
+    }
+    for name, cond in shapes.items():
+        prql = f"from t = par\nfilter {cond}"
+        sql = to_sql(prql, cat, dialect="spark")
+        where = sql[sql.index("WHERE") + len("WHERE"):].strip()
+        want, _, _ = snapshot_pruned_read(
+            spark, path, _sql_bounds(where) or {}
+        )
+        got = compile_prql(prql, cat).inputFiles()
+        assert sorted(got) == sorted(want.inputFiles()), name
+        assert len(got) < total, name
+
+
 def test_lockfile_commit_protocol_races_and_recovers(
     spark, tmp_path, monkeypatch
 ):

@@ -317,8 +317,9 @@ def test_random_expression_format_roundtrip(e, cond):
 
 
 # ---------------------------------------------------------------
-# Pruning soundness: a file the delete/scan stats pruner skips can
-# NEVER contain a matching row. _sql_bounds extracts conservative
+# Pruning soundness: a file the stats pruner skips can NEVER contain
+# a matching row. _sql_bounds (the one bounds rule, for
+# delete_snapshot and the PRQL pushdown alike) extracts conservative
 # bounds from a random SQL predicate; _overlaps_bounds decides from
 # the file's true [min, max]; DuckDB evaluates ground truth on the
 # file's actual rows. The "conservative, never wrong" contract as a
@@ -326,11 +327,19 @@ def test_random_expression_format_roundtrip(e, cond):
 
 _PL = st.integers(-5, 15)
 _PC = st.sampled_from(["a", "b"])
+_POP = st.sampled_from(["=", "<", "<=", ">", ">=", "!="])
 
 _ATOM = st.one_of(
+    st.tuples(_PC, _POP, _PL).map(lambda t: f"{t[0]} {t[1]} {t[2]}"),
+    # reversed literal, parenthesized unary minus
+    st.tuples(_PL, _POP, _PC).map(lambda t: f"{t[0]} {t[1]} {t[2]}"),
+    st.tuples(_PC, _POP, st.integers(0, 5)).map(
+        lambda t: f"{t[0]} {t[1]} (- {t[2]})"
+    ),
+    # arithmetic: non-sargable, skipped without hiding its neighbours
     st.tuples(
-        _PC, st.sampled_from(["=", "<", "<=", ">", ">=", "!="]), _PL
-    ).map(lambda t: f"{t[0]} {t[1]} {t[2]}"),
+        _PC, st.sampled_from(["+", "-", "*"]), st.integers(1, 3), _POP, _PL
+    ).map(lambda t: f"{t[0]} {t[1]} {t[2]} {t[3]} {t[4]}"),
     st.tuples(_PC, _PL, _PL).map(
         lambda t: f"{t[0]} BETWEEN {min(t[1], t[2])} AND {max(t[1], t[2])}"
     ),
@@ -346,6 +355,10 @@ _PRED = st.recursive(
     lambda inner: st.one_of(
         st.tuples(inner, inner).map(lambda t: f"({t[0]}) AND ({t[1]})"),
         st.tuples(inner, inner).map(lambda t: f"({t[0]}) OR ({t[1]})"),
+        # unparenthesized mixes: AND binds tighter than OR
+        st.tuples(inner, st.sampled_from(["AND", "OR"]), inner).map(
+            lambda t: f"{t[0]} {t[1]} {t[2]}"
+        ),
         inner.map(lambda p: f"NOT ({p})"),
     ),
     max_leaves=4,
@@ -361,7 +374,9 @@ _PRED = st.recursive(
     stat_a=st.booleans(),
     stat_b=st.booleans(),
 )
-def test_stats_pruning_never_wrong(oracle, pred, rows, stat_a, stat_b):
+def test_stats_pruning_never_wrong(pred, rows, stat_a, stat_b):
+    import duckdb
+
     from prql_spark.sources.manifest import _overlaps_bounds, _sql_bounds
 
     bounds = _sql_bounds(pred)
@@ -376,9 +391,17 @@ def test_stats_pruning_never_wrong(oracle, pred, rows, stat_a, stat_b):
     if _overlaps_bounds(f, bounds):
         return  # kept: the exact predicate decides — always sound
     values = ", ".join(f"({a}, {b})" for a, b in rows)
-    n = oracle.execute(
-        f"SELECT count(*) FROM (VALUES {values}) t(a, b) WHERE {pred}"
-    ).fetchone()[0]
+    # DuckDB 1.0.0's optimizer raises InternalException (NULL
+    # unique_ptr) on some same-column OR/BETWEEN mixes; unoptimized
+    # evaluation returns the right count
+    con = duckdb.connect()
+    try:
+        con.execute("PRAGMA disable_optimizer")
+        n = con.execute(
+            f"SELECT count(*) FROM (VALUES {values}) t(a, b) WHERE {pred}"
+        ).fetchone()[0]
+    finally:
+        con.close()
     assert n == 0, (
         f"pruned a file with {n} matching rows: pred={pred!r} "
         f"bounds={bounds!r} stats={stats!r} rows={rows!r}"
