@@ -353,8 +353,8 @@ class Compiler:
 
     def _arity(self, step: FuncCall, n: int) -> None:
         """Raise at the first positional argument past the ``n`` the
-        transform reads, instead of dropping it (``filter k > 5 k <
-        3`` would otherwise filter on ``k > 5`` alone)."""
+        transform reads (``filter k > 5 k < 3`` must not drop ``k < 3``);
+        an AST read back from JSON has no offsets, so no line:col."""
         if len(step.args) > n:
             pos = step.arg_pos[n] if n < len(step.arg_pos) else -1
             raise self._err(f"{step.name}: unexpected argument", pos=pos)
@@ -1363,6 +1363,7 @@ def _substitute(node, binding: dict):
                 )
                 for k, v in node.named.items()
             },
+            node.arg_pos,
         )
     if isinstance(node, SString):
         return SString(

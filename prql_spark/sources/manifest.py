@@ -1547,6 +1547,7 @@ def _table_stats_cols(m: dict, partition_by: tuple) -> tuple | None:
 
 
 _DT_SHAPE = re.compile(r"^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}")
+_DATE_SHAPE = re.compile(r"\d{4}-\d{2}-\d{2}")
 
 
 def _lt_for_prune(a, b) -> bool:
@@ -1560,11 +1561,18 @@ def _lt_for_prune(a, b) -> bool:
     (``'T' > ' '``); conversely a STRING column holding
     datetime-shaped text really does compare raw. Pruning is only
     sound when BOTH orderings agree, so require both; disagreement
-    keeps the file (conservative, never wrong)."""
-    if isinstance(a, str) and isinstance(b, str) and (
-        _DT_SHAPE.match(a) or _DT_SHAPE.match(b)
-    ):
-        return a < b and _norm_ts_path(a) < _norm_ts_path(b)
+    keeps the file (conservative, never wrong). A bare date against
+    a datetime compares by the date alone: Spark compares a DATE
+    with a TIMESTAMP as its midnight, so ``'2024-01-01'`` does not
+    lie below ``'2024-01-01T00:00:00'``, but an earlier day lies
+    below every time of a later one, on every ordering."""
+    if isinstance(a, str) and isinstance(b, str):
+        if (_DATE_SHAPE.fullmatch(a) and _DT_SHAPE.match(b)) or (
+            _DT_SHAPE.match(a) and _DATE_SHAPE.fullmatch(b)
+        ):
+            return a[:10] < b[:10]
+        if _DT_SHAPE.match(a) or _DT_SHAPE.match(b):
+            return a < b and _norm_ts_path(a) < _norm_ts_path(b)
     return a < b
 
 

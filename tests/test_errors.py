@@ -172,6 +172,12 @@ def test_jinja_on_dataframe_path_reports_prql_error(catalog):
             "from orders\ngroup o_custkey (aggregate [n = count]) x",
             "x",
         ),
+        # inside an inlined user function's body
+        (
+            "func big lo -> (filter o_orderkey > lo o_orderkey < 3)\n"
+            "from orders\nbig 5",
+            "o_orderkey < 3",
+        ),
     ],
 )
 def test_extra_transform_argument_reports_span(catalog, prql, extra):

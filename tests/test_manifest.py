@@ -1513,8 +1513,9 @@ def test_sql_bounds_extractor_soundness():
 
 def _minute_tables(spark, tmp_path):
     """A stats-covered manifest table ``mins`` and a plain-parquet
-    copy ``mins_plain`` of the same rows: INT ``k`` 0..119 and ``ts``
-    one row per minute from 2024-01-01 00:00, four files."""
+    copy ``mins_plain`` of the same rows: INT ``k`` 0..119, ``ts``
+    one row per minute from 2024-01-01 00:00 and DATE ``d`` one day
+    per 30 rows from 2024-01-01, four files."""
     from prql_spark.sources.catalog import Catalog
 
     df = (
@@ -1525,10 +1526,13 @@ def _minute_tables(spark, tmp_path):
             F.expr("TIMESTAMP '2024-01-01 00:00:00' "
                    "+ make_dt_interval(0, 0, k, 0)"),
         )
+        .withColumn(
+            "d", F.expr("date_add(DATE '2024-01-01', CAST(k DIV 30 AS INT))")
+        )
         .repartitionByRange(4, "k")
         .sortWithinPartitions("k")
     )
-    snapshot_write(df, str(tmp_path / "mins"), stats_cols=("k", "ts"))
+    snapshot_write(df, str(tmp_path / "mins"), stats_cols=("k", "ts", "d"))
     df.write.parquet(str(tmp_path / "mins_plain"))
     return Catalog(spark, str(tmp_path))
 
@@ -1557,6 +1561,19 @@ def test_datetime_literal_bounds_are_canonical(spark, tmp_path):
     assert snapshot_read(spark, path).count() == 119
 
 
+def test_date_column_timestamp_literal_delete(spark, tmp_path):
+    """Spark compares a DATE with a TIMESTAMP as its midnight: a
+    date-only TIMESTAMP literal's bound ('...T00:00:00') must not
+    skip the file whose DATE stats hold that bare day."""
+    _minute_tables(spark, tmp_path)
+    path = str(tmp_path / "mins")
+    res = delete_snapshot(spark, path, "d = TIMESTAMP '2024-01-01'")
+    assert not res.get("noop") and res["n_candidates"] < 4
+    left = snapshot_read(spark, path)
+    assert left.count() == 90
+    assert left.where("d = DATE '2024-01-01'").count() == 0
+
+
 @pytest.mark.parametrize(
     "cond",
     [
@@ -1565,6 +1582,10 @@ def test_datetime_literal_bounds_are_canonical(spark, tmp_path):
         'ts >= @2024-01-01T00:00 and ts <= "2024-01-01 00:30:00"',
         # both strings cast to INT 1: not a disjoint equality
         'k == "01" and k == "1"',
+        # a bare date against TIMESTAMP stats is their midnight
+        "ts <= @2024-01-01",
+        # a datetime string against DATE stats is cast to its day
+        'd >= "2024-01-01 12:00"',
     ],
 )
 def test_pruned_prql_filter_matches_plain_parquet(spark, tmp_path, cond):
@@ -1585,7 +1606,8 @@ def test_prql_pushdown_prunes_as_sql_bounds(spark, tmp_path):
     """One predicate-to-bounds rule: a PRQL filter straight after
     ``from`` opens exactly the files ``snapshot_pruned_read`` keeps
     for the bounds ``_sql_bounds`` reads from the filter's compiled
-    Spark SQL — OR, IN lists and arithmetic included."""
+    Spark SQL — OR, IN lists and arithmetic included — and returns
+    the rows of a plain-parquet copy."""
     from prql_spark import compile_prql, to_sql
     from prql_spark.sources.catalog import Catalog
     from prql_spark.sources.manifest import (
@@ -1594,7 +1616,7 @@ def test_prql_pushdown_prunes_as_sql_bounds(spark, tmp_path):
     )
 
     path = str(tmp_path / "par")
-    snapshot_write(
+    df = (
         spark.range(200)
         .select(F.col("id").cast("int").alias("k"))
         .selectExpr(
@@ -1606,10 +1628,10 @@ def test_prql_pushdown_prunes_as_sql_bounds(spark, tmp_path):
             "concat('it''s ', lpad(CAST(k AS STRING), 3, '0')) AS s",
         )
         .repartitionByRange(8, "k")
-        .sortWithinPartitions("k"),
-        path,
-        stats_cols=("k", "ds", "d", "ts", "s"),
+        .sortWithinPartitions("k")
     )
+    snapshot_write(df, path, stats_cols=("k", "ds", "d", "ts", "s"))
+    df.write.parquet(str(tmp_path / "par_plain"))
     cat = Catalog(spark, str(tmp_path))
     total = len(cat.load("par").inputFiles())
     shapes = {
@@ -1632,9 +1654,15 @@ def test_prql_pushdown_prunes_as_sql_bounds(spark, tmp_path):
         want, _, _ = snapshot_pruned_read(
             spark, path, _sql_bounds(where) or {}
         )
-        got = compile_prql(prql, cat).inputFiles()
+        out = compile_prql(prql, cat)
+        got = out.inputFiles()
         assert sorted(got) == sorted(want.inputFiles()), name
         assert len(got) < total, name
+        # and the rows are the plain-parquet copy's
+        plain = compile_prql(prql.replace("= par", "= par_plain"), cat)
+        rows = sorted(r.k for r in out.collect())
+        assert rows == sorted(r.k for r in plain.collect()), name
+        assert bool(rows) == (name != "disjoint_and"), name
 
 
 def test_lockfile_commit_protocol_races_and_recovers(
