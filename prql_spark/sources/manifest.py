@@ -1551,21 +1551,15 @@ _DATE_SHAPE = re.compile(r"\d{4}-\d{2}-\d{2}")
 
 
 def _lt_for_prune(a, b) -> bool:
-    """``a < b`` strictly enough to justify PRUNING. For plain
-    strings where either side is datetime-shaped, the true ordering
-    depends on the column's type, which the bound extractor cannot
-    see: a timestamp column's stats are isoformat (``T`` separator,
-    zero-trimmed fraction handled by :func:`_norm_ts_path`) while a
-    query literal is often space-separated (``ts <= '2024-01-01
-    23:59:59'``) — raw lexicographic compare would mis-prune
-    (``'T' > ' '``); conversely a STRING column holding
-    datetime-shaped text really does compare raw. Pruning is only
-    sound when BOTH orderings agree, so require both; disagreement
-    keeps the file (conservative, never wrong). A bare date against
-    a datetime compares by the date alone: Spark compares a DATE
-    with a TIMESTAMP as its midnight, so ``'2024-01-01'`` does not
-    lie below ``'2024-01-01T00:00:00'``, but an earlier day lies
-    below every time of a later one, on every ordering."""
+    """``a < b`` strictly enough to justify PRUNING. Where either
+    string is datetime-shaped the ordering depends on the column's
+    type, which the extractor cannot see: TIMESTAMP stats are
+    isoformat (``T``, fraction as :func:`_norm_ts_path` writes it),
+    a literal is often space-separated (``'T' > ' '``), and a STRING
+    column compares raw, so both orderings must agree. A bare date
+    against a datetime compares by the day: Spark reads a DATE as
+    its midnight, and only an earlier day lies below on every
+    ordering. Disagreement keeps the file (never wrong)."""
     if isinstance(a, str) and isinstance(b, str):
         if (_DATE_SHAPE.fullmatch(a) and _DT_SHAPE.match(b)) or (
             _DT_SHAPE.match(a) and _DATE_SHAPE.fullmatch(b)
