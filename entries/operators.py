@@ -1455,18 +1455,22 @@ GROUP BY event_type ORDER BY event_type
 
 
 def q_upsert_merge(spark, sf_dir):
-    """Partition-scoped parquet upsert (sources/upsert.py): write
-    orders partitioned by status, merge in price-bumped updates for
-    keys divisible by 97 plus one synthetic insert, then aggregate.
-    The DuckDB oracle applies the same merge relationally, so the
-    writer's update/insert/preserve semantics are value-checked."""
+    """Keyed upsert into a partitioned manifest table
+    (manifest.merge_snapshot): write orders partitioned by status,
+    merge in price-bumped updates for keys divisible by 97 plus one
+    synthetic insert, then aggregate the latest version. The DuckDB
+    oracle applies the same merge relationally, so the merge's
+    update/insert/preserve semantics are value-checked."""
+    import hashlib
     import os
     import shutil
     import tempfile
 
-    from prql_spark.sources.upsert import upsert_parquet
-
-    import hashlib
+    from prql_spark.sources.manifest import (
+        merge_snapshot,
+        snapshot_read,
+        snapshot_write,
+    )
 
     d = os.path.join(
         tempfile.gettempdir(),
@@ -1476,19 +1480,18 @@ def q_upsert_merge(spark, sf_dir):
     orders = Catalog(spark, sf_dir).load("orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    upsert_parquet(orders, d, ["o_orderkey"], partition_col="o_orderstatus")
+    snapshot_write(orders, d, partition_by=("o_orderstatus",))
     updates = orders.where("o_orderkey % 97 = 0").withColumn(
         "o_totalprice", F.expr("o_totalprice + 1000.0")
     )
     inserts = spark.createDataFrame(
         [(10**9, "F", 42.5)], "o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE"
     )
-    upsert_parquet(
-        updates.unionByName(inserts), d, ["o_orderkey"],
-        partition_col="o_orderstatus",
+    merge_snapshot(
+        spark, d, updates.unionByName(inserts), on=("o_orderkey",)
     )
     return (
-        spark.read.parquet(d)
+        snapshot_read(spark, d)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -35,16 +35,12 @@ def _table_mode(args) -> int:
     spark = build_spark("prql_spark-maint")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        if args.layout:
-            from prql_spark.sources.compact import dataset_layout
-
-            print(json.dumps(dataset_layout(spark, args.layout)))
         if args.compact:
-            from prql_spark.sources.compact import compact_parquet
+            from prql_spark.sources.manifest import compact_snapshot
 
-            print(json.dumps(compact_parquet(
+            print(json.dumps(compact_snapshot(
                 spark, args.compact, target_mb=args.target_mb,
-                partition_col=args.partition_col,
+                max_replan=args.max_replan, where=args.where,
             )))
         if args.history:
             from prql_spark.sources.manifest import snapshot_history
@@ -187,16 +183,14 @@ def main(argv: list[str] | None = None) -> int:
         help="run physical-plan lints (e.g. broadcast-miss) and print "
         "findings to stderr (combines with --explain/--run/--schema)",
     )
-    # dataset-maintenance modes (no query): file-layout stats,
-    # small-file compaction, snapshot history / vacuum
+    # dataset-maintenance modes (no query) on manifest-committed
+    # datasets: compaction, history, vacuum, ...
     tbl = ap.add_argument_group("dataset maintenance (no query)")
     tbl.add_argument(
-        "--layout", metavar="PATH",
-        help="print file-layout stats for the parquet dataset",
-    )
-    tbl.add_argument(
         "--compact", metavar="PATH",
-        help="compact the parquet dataset in place (rename-swapped)",
+        help="compact a manifest-committed dataset: commit its latest "
+        "version repacked into --target-mb files (one commit; time "
+        "travel keeps the old version)",
     )
     tbl.add_argument(
         "--history", metavar="PATH",
@@ -213,11 +207,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     tbl.add_argument(
         "--target-mb", type=int, default=256,
-        help="target file size for --compact (default 256)",
-    )
-    tbl.add_argument(
-        "--partition-col", default=None,
-        help="hive partition column for --compact",
+        help="target file size for --compact/--optimize (default 256)",
     )
     tbl.add_argument(
         "--keep-versions", type=int, default=2,
@@ -252,14 +242,14 @@ def main(argv: list[str] | None = None) -> int:
     )
     tbl.add_argument(
         "--where", default=None, metavar="PREDICATE",
-        help="scope --optimize to matching partitions' files (the "
-        "predicate must depend only on partition columns); "
-        "everything else is referenced verbatim",
+        help="scope --compact/--optimize to matching partitions' "
+        "files (the predicate must depend only on partition "
+        "columns); everything else is referenced verbatim",
     )
     tbl.add_argument(
         "--max-replan", type=int, default=0,
-        help="--optimize: auto re-plan against the new head up to N "
-        "times on a commit conflict (default 0: raise)",
+        help="--compact/--optimize: auto re-plan against the new "
+        "head up to N times on a commit conflict (default 0: raise)",
     )
     tbl.add_argument(
         "--restore", nargs=2, metavar=("PATH", "VERSION"),
@@ -282,7 +272,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     if (
-        args.layout or args.compact or args.history or args.vacuum
+        args.compact or args.history or args.vacuum
         or args.fsck or args.partitions or args.delete_where
         or args.optimize or args.restore or args.count or args.describe
     ):

@@ -1,8 +1,9 @@
-"""Snapshot diffing for a plain-parquet lake: which keys were added,
-removed, or changed between two dataset versions.
+"""Snapshot diffing: which keys were added, removed, or changed
+between two versions of a table (any two DataFrames — e.g. two
+``snapshot_read`` versions of a manifest table).
 
-The audit complement to ``upsert_parquet``: after (or before) a
-merge, diff the snapshots to see exactly what the increment did —
+The audit complement to ``merge_snapshot``: after (or before) a
+merge, diff the versions to see exactly what the increment did —
 or compare a rebuilt table against the previous run's output as a
 regression gate.
 
@@ -42,7 +43,7 @@ def diff_datasets(
     ``compare_cols=None`` compares every non-key column of ``old``;
     an explicit empty list is a presence-only diff (added/removed,
     never changed). Keys are assumed unique per snapshot (a lake
-    primary key — the same contract upsert_parquet merges by); NULL
+    primary key — the same contract merge_snapshot merges by); NULL
     keys never match across sides, so a NULL-keyed row shows up as
     removed+added.
     """

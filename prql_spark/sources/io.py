@@ -1,10 +1,10 @@
 """Source/sink helpers (SURVEY §2 #24).
 
 Readers return lazy scans so Catalyst pushes filters/projections into
-the source. Writers expose the two layout levers that matter at
-100 TB: partitionBy (directory pruning for predicate-aligned reads)
-and bucketBy (pre-shuffled layout so later joins/aggs on the bucket
-key skip their exchange).
+the source. Writers expose partitionBy (directory pruning for
+predicate-aligned reads); the bucketed writer, whose pre-shuffled
+layout lets later joins/aggs on the bucket key skip their exchange,
+is ``sources/bucketing.write_bucketed``.
 """
 
 from __future__ import annotations
@@ -67,27 +67,6 @@ def write_csv(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.csv(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-):
-    """Persist as a bucketed managed table: joins/aggregations on
-    bucket_cols against another table bucketed the same way run
-    shuffle-free (Spark reuses the on-disk hash layout)."""
-    w = (
-        df.write.mode(mode)
-        .bucketBy(num_buckets, *bucket_cols)
-        .format("parquet")
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -303,8 +282,8 @@ def read_warc_stream(
     per-trigger work at any backlog), runs the SAME Arrow-batched
     record parser, and emits the same record schema. Compose with
     :func:`warc_to_documents` (pure column expressions — streams
-    unchanged) and a ``foreachBatch`` upsert sink
-    (:func:`prql_spark.streaming.pipeline.stream_upsert_to_parquet`)
+    unchanged) and the keyed manifest-table sink
+    (:func:`prql_spark.streaming.pipeline.stream_merge_snapshot`)
     for the continuous crawl → corpus-lake loop; doc_id =
     file#offset keys make replayed batches idempotent."""
     from pyspark.sql.types import (

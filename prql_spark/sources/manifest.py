@@ -20,8 +20,8 @@ to this engine:
   the repacked files and commits a manifest pointing at them; the
   old version stays fully readable. Space is reclaimed later by an
   explicit ``vacuum_snapshot`` — data files are deleted ONLY when no
-  retained manifest references them. (Contrast with in-place
-  ``compact_parquet``, which must swap directories under readers.)
+  retained manifest references them, so a reader never sees a table
+  with files missing mid-rewrite.
 * **Optimistic concurrency.** The version number is claimed by the
   manifest rename; a loser's rename fails (file exists) and retries
   on top of the winner's commit.
@@ -983,10 +983,18 @@ def snapshot_read(
     """Read the dataset at ``path`` as of ``version`` (default: the
     latest). Plans from the manifest's file list — one listing per
     referenced commit directory (to validate dir-grouped planning),
-    never a recursive data-tree walk."""
+    never a recursive data-tree walk. A version with no files (an
+    empty write, or a delete of every row) reads as an empty frame
+    with the recorded schema; only a manifest too old to record one
+    raises."""
     _, _, base, _, v, m = _open(spark, path, "snapshot_read", version)
     if not m["files"]:
-        raise ValueError(f"snapshot_read: version {v} is empty at {path!r}")
+        ddl = _manifest_ddl(m)
+        if ddl is None:
+            raise ValueError(
+                f"snapshot_read: version {v} is empty at {path!r}"
+            )
+        return spark.createDataFrame([], ddl)
     return _plan_read(spark, base, m)
 
 
@@ -1548,6 +1556,20 @@ def _table_stats_cols(m: dict, partition_by: tuple) -> tuple | None:
 
 _DT_SHAPE = re.compile(r"^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}")
 _DATE_SHAPE = re.compile(r"\d{4}-\d{2}-\d{2}")
+# the canonical spellings: a DATE's or TIMESTAMP's stats text
+_CANON_DT = re.compile(
+    r"\d{4}-\d{2}-\d{2}(?:[ T]\d{2}:\d{2}(?::\d{2}(?:\.\d{1,9})?)?)?"
+)
+# a superset of what Spark's string -> DATE/TIMESTAMP casts
+# (DateTimeUtils.stringToDate, stringToTimestamp) accept after
+# trimming blanks and ISO controls: [+-]yyyy*, [+-]yyyy*-[m]m,
+# [+-]yyyy*-[m]m-[d]d followed by anything (' '/'T' then a time of
+# [h]h:[m]m:[s]s.[fraction][zone]), or a bare time [T][h]h:[m]m...
+_SPARK_DT_CAST = re.compile(
+    r"[\x00-\x20\x7f]*(?:[+-]?\d{4,7}(?:-\d{1,2}(?:-\d{1,2}.*)?)?"
+    r"|T?\d{1,2}:.*)[\x00-\x20\x7f]*",
+    re.S,
+)
 
 
 def _lt_for_prune(a, b) -> bool:
@@ -1559,8 +1581,17 @@ def _lt_for_prune(a, b) -> bool:
     column compares raw, so both orderings must agree. A bare date
     against a datetime compares by the day: Spark reads a DATE as
     its midnight, and only an earlier day lies below on every
-    ordering. Disagreement keeps the file (never wrong)."""
+    ordering. A canonical date or datetime against a string Spark's
+    cast reads in another spelling (``2024-1-2``, ``2024-01``,
+    ``2024-1-2 3:04``, leading blanks) has no text order at all:
+    Spark compares the cast value. Disagreement keeps the file
+    (never wrong)."""
     if isinstance(a, str) and isinstance(b, str):
+        ca, cb = _CANON_DT.fullmatch(a), _CANON_DT.fullmatch(b)
+        if (ca and not cb and _SPARK_DT_CAST.fullmatch(b)) or (
+            cb and not ca and _SPARK_DT_CAST.fullmatch(a)
+        ):
+            return False
         if (_DATE_SHAPE.fullmatch(a) and _DT_SHAPE.match(b)) or (
             _DT_SHAPE.match(a) and _DATE_SHAPE.fullmatch(b)
         ):

@@ -284,55 +284,80 @@ def interval_join(
     return lsel.join(rsel, on=cond, how="inner")
 
 
-def stream_upsert_to_parquet(
-    stream_df: DataFrame,
-    path: str,
-    key_cols: list[str],
-    partition_col: str | None = None,
-    checkpoint: str | None = None,
-    timeout_s: int = 300,
-):
-    """Continuously merge a streaming aggregation into a plain-parquet
-    lake: ``writeStream.foreachBatch`` + :func:`upsert_parquet`.
+def _is_table(spark: SparkSession, path: str) -> bool:
+    """True once a version of a manifest table has been committed at
+    ``path`` (listed through Hadoop's FileSystem API, so hdfs:// and
+    s3a:// paths behave like local ones)."""
+    from prql_spark.sources.manifest import _fs, _versions
 
-    The streaming-ETL tail end: an update-mode aggregation emits
-    changed keys each micro-batch, and each batch is MERGED into the
-    lake by key (update-or-insert) instead of appended — the lake
-    holds exactly one current row per key, readable by any parquet
-    consumer mid-stream. With ``partition_col`` set, each micro-batch
-    rewrites only the partitions it touches (cost tracks the batch's
-    key spread, not the lake size) — the same bounded-work contract as
-    the batch upsert. Checkpointing makes the sink restartable;
-    foreachBatch is at-least-once, and the upsert's key-overwrite
-    semantics make replayed batches idempotent — the standard
-    exactly-once-effect recipe for non-transactional sinks.
+    fs, jvm = _fs(spark, path)
+    return bool(_versions(fs, jvm, path.rstrip("/")))
 
-    Runs with trigger(availableNow) and blocks until drained (test /
-    bounded-backfill shape); pass a processingTime trigger via the
-    returned query for long-running deployments.
-    """
-    from prql_spark.sources.upsert import upsert_parquet
 
-    def _merge(batch_df: DataFrame, _epoch: int) -> None:
-        if not batch_df.isEmpty():
-            upsert_parquet(batch_df, path, key_cols, partition_col)
-
+def _drain(stream_df: DataFrame, commit, output_mode: str,
+           checkpoint: str | None, timeout_s: int, name: str, path: str):
+    """Run ``commit(batch_df, epoch_id)`` on every micro-batch with
+    ``trigger(availableNow)`` and block until the backlog drains; a
+    stream that does not drain within ``timeout_s`` is stopped and
+    raises, so a partly committed table is never handed back
+    silently."""
     w = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .outputMode("update")
+        stream_df.writeStream.foreachBatch(commit)
+        .outputMode(output_mode)
         .trigger(availableNow=True)
     )
     if checkpoint:
         w = w.option("checkpointLocation", checkpoint)
     q = w.start()
     if not q.awaitTermination(timeout_s):
-        # a partially-merged lake must never be handed back silently
         q.stop()
         raise TimeoutError(
-            f"stream_upsert_to_parquet: backfill not drained within "
-            f"{timeout_s}s — lake at {path!r} is partially merged"
+            f"{name}: backfill not drained within {timeout_s}s at {path!r}"
         )
     return q
+
+
+def stream_merge_snapshot(
+    stream_df: DataFrame,
+    path: str,
+    on: tuple,
+    checkpoint: str | None = None,
+    timeout_s: int = 300,
+    partition_by: tuple | None = None,
+):
+    """Keyed streaming ingest into a manifest-committed table
+    (``sources/manifest.py``): each micro-batch is MERGED by ``on``
+    (update-or-insert), so the table holds exactly one current row
+    per key and every micro-batch is one atomic, time-travelable
+    version.
+
+    The first non-empty micro-batch creates the table
+    (:func:`snapshot_write`, laid out by ``partition_by``); every
+    later one runs :func:`merge_snapshot`, which rewrites only the
+    files holding a matched key — a key whose partition value
+    changes leaves no stale row behind. foreachBatch is
+    at-least-once; a replayed batch merges the same rows by key
+    again, so replays are idempotent. An update-mode aggregation
+    (changed keys per trigger) is the canonical input.
+
+    Runs with trigger(availableNow) and blocks until drained (test /
+    bounded-backfill shape).
+    """
+    from prql_spark.sources.manifest import merge_snapshot, snapshot_write
+
+    on = tuple(on)
+
+    def _merge(batch_df: DataFrame, _epoch: int) -> None:
+        if batch_df.isEmpty():
+            return
+        sess = batch_df.sparkSession
+        if _is_table(sess, path):
+            merge_snapshot(sess, path, batch_df, on=on)
+        else:
+            snapshot_write(batch_df, path, partition_by=partition_by)
+
+    return _drain(stream_df, _merge, "update", checkpoint, timeout_s,
+                  "stream_merge_snapshot", path)
 
 
 def stream_warc_to_corpus(
@@ -346,14 +371,15 @@ def stream_warc_to_corpus(
 ):
     """The continuous crawl → corpus-lake loop: streaming WARC reader
     over a landing directory → :func:`warc_to_documents` (stateless
-    column expressions — stream-safe) → keyed ``foreachBatch`` upsert
-    into a plain-parquet documents lake.
+    column expressions — stream-safe) → keyed
+    :func:`stream_merge_snapshot` into a manifest-committed documents
+    table.
 
     Each trigger ingests at most ``max_files_per_trigger`` newly
     landed shards (bounded work at any backlog); the checkpoint makes
     the source restartable mid-backlog; and because doc_id =
-    file#offset is a stable key, the upsert makes at-least-once
-    replays idempotent — the lake converges to exactly the batch
+    file#offset is a stable key, the merge makes at-least-once
+    replays idempotent — the table converges to exactly the batch
     twin ``warc_to_documents(read_warc(...))`` (pinned live in
     tests/test_streaming.py; the batch twin itself is value-oracled
     by the sources_warc_read driver entry).
@@ -371,8 +397,8 @@ def stream_warc_to_corpus(
             max_files_per_trigger=max_files_per_trigger,
         )
     )
-    return stream_upsert_to_parquet(
-        docs, lake_path, key_cols=["doc_id"],
+    return stream_merge_snapshot(
+        docs, lake_path, on=("doc_id",),
         checkpoint=checkpoint, timeout_s=timeout_s,
     )
 
@@ -401,13 +427,13 @@ def stream_append_snapshot(
       (:func:`prql_spark.sources.manifest.stream_high_water` — every
       commit carries the per-stream high-water map forward, so the
       check survives vacuum trimming old manifests) and is skipped —
-      no duplicate rows, ever. The upsert sink gets idempotence from
-      key-overwrite semantics; this one needs none of that, so it
-      works for APPEND-shaped streams (immutable event logs) where
-      upsert semantics would be wrong. The table probe and ledger
-      read go through Hadoop's FileSystem API (NOT ``os.path``), so
-      the exactly-once contract holds on hdfs:// and s3a:// paths,
-      not just local ones.
+      no duplicate rows, ever. :func:`stream_merge_snapshot` gets
+      idempotence from key-overwrite semantics; this one needs none
+      of that, so it works for APPEND-shaped streams (immutable
+      event logs) where upsert semantics would be wrong. The table
+      probe and ledger read go through Hadoop's FileSystem API (NOT
+      ``os.path``), so the exactly-once contract holds on hdfs://
+      and s3a:// paths, not just local ones.
 
     The ledger is keyed by ``(stream_id, epoch)``, which is exact
     for same-checkpoint replays (the failure mode that actually
@@ -428,25 +454,18 @@ def stream_append_snapshot(
     schema/partitioning checks still apply (a batch cannot silently
     change the table's layout).
     """
-    from prql_spark.sources.manifest import (
-        _fs,
-        snapshot_write,
-        stream_high_water,
-    )
+    from prql_spark.sources.manifest import snapshot_write, stream_high_water
 
     sid = stream_id or checkpoint or "default"
 
     def _append(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        fs, jvm = _fs(sess, path)
-        mdir = jvm.org.apache.hadoop.fs.Path(
-            f"{path.rstrip('/')}/_manifests"
-        )
-        if fs.exists(mdir):
-            # epochs are monotonic per checkpoint and commit in
-            # order, so at-or-below high water ⇔ already committed
-            if epoch_id <= stream_high_water(sess, path, sid):
-                return  # replayed batch: already committed
+        # epochs are monotonic per checkpoint and commit in order, so
+        # at-or-below high water ⇔ already committed
+        if _is_table(sess, path) and (
+            epoch_id <= stream_high_water(sess, path, sid)
+        ):
+            return  # replayed batch: already committed
         if batch_df.isEmpty():
             return
         snapshot_write(
@@ -455,18 +474,5 @@ def stream_append_snapshot(
             partition_by=partition_by,
         )
 
-    w = (
-        stream_df.writeStream.foreachBatch(_append)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    q = w.start()
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_append_snapshot: backfill not drained within "
-            f"{timeout_s}s at {path!r}"
-        )
-    return q
+    return _drain(stream_df, _append, "append", checkpoint, timeout_s,
+                  "stream_append_snapshot", path)

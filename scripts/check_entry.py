@@ -10,33 +10,15 @@ Usage: python scripts/check_entry.py [sf_dir] [name_filter]
 
 from __future__ import annotations
 
-import math
 import sys
 import time
 import traceback
 
 sys.path.insert(0, ".")
 
-import duckdb  # noqa: E402
-
 import __spark_entry__ as entry_mod  # noqa: E402
+from entries.oracle_check import compare, oracle_connection  # noqa: E402
 from prql_spark import build_spark  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        r = round(v, 5)
-        return 0.0 if r == 0 else r
-    if hasattr(v, "isoformat"):
-        return v.isoformat()[:19]
-    return v
 
 
 def main():
@@ -44,9 +26,7 @@ def main():
     pat = sys.argv[2] if len(sys.argv) > 2 else ""
     spark = build_spark("check-entry")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir)
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     n_pass = n_fail = 0
@@ -57,7 +37,7 @@ def main():
         try:
             df = fn(spark, sf_dir)
             rows = df.collect()
-            cols = [c.lower() for c in df.columns]
+            cols = df.columns
         except Exception:
             print(f"FAIL {name}: spark error")
             traceback.print_exc(limit=3)
@@ -67,39 +47,13 @@ def main():
         if name not in oracles:
             print(f"ROWS {name}: {len(rows)} rows ({dt:.1f}s) [no oracle]")
             continue
-        try:
-            res = con.execute(oracles[name])
-            want_cols = [d[0].lower() for d in res.description]
-            want = res.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: oracle error {str(e).splitlines()[0][:100]}")
-            n_fail += 1
-            continue
-        ok = True
-        if cols != want_cols:
-            print(f"FAIL {name}: cols {cols} != {want_cols}")
-            ok = False
-        elif len(rows) != len(want):
-            print(f"FAIL {name}: rowcount {len(rows)} != {len(want)}")
-            ok = False
-        else:
-            got_s = sorted(
-                [tuple(norm(v) for v in r) for r in rows], key=repr
-            )
-            want_s = sorted(
-                [tuple(norm(v) for v in r) for r in want], key=repr
-            )
-            if got_s != want_s:
-                diffs = [
-                    (g, w) for g, w in zip(got_s, want_s) if g != w
-                ][:3]
-                print(f"FAIL {name}: values differ, e.g. {diffs}")
-                ok = False
-        if ok:
+        why = compare(rows, cols, con, oracles[name])
+        if why is None:
             flag = " [!] 0-row pass proves nothing" if not rows else ""
             print(f"PASS {name}: {len(rows)} rows ({dt:.1f}s){flag}")
             n_pass += 1
         else:
+            print(f"FAIL {name}: {why}")
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     spark.stop()

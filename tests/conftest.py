@@ -5,16 +5,12 @@ import os
 import uuid
 from collections import OrderedDict
 
-import duckdb
 import pytest
 
+from entries.oracle_check import oracle_connection
 from prql_spark import Catalog, build_spark
 
 SF_DIR = os.environ.get("PRQL_SPARK_TEST_SF", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")
@@ -43,11 +39,7 @@ def empty_relation_cache(monkeypatch):
 
 @pytest.fixture(scope="session")
 def oracle():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = oracle_connection(SF_DIR)
     yield con
     con.close()
 

@@ -140,18 +140,16 @@ def test_cli_maintenance_modes(tmp_path, spark):
     from prql_spark.sources.manifest import snapshot_write
 
     frag = str(tmp_path / "frag")
-    spark.range(2000).repartition(8).write.parquet(frag)
+    snapshot_write(spark.range(2000).repartition(8), frag)
     snap = str(tmp_path / "snap")
     snapshot_write(spark.range(100), snap)
     snapshot_write(spark.range(100, 120), snap, mode="append")
 
-    r = _cli("--layout", frag)
-    assert r.returncode == 0, r.stderr
-    assert json.loads(r.stdout)["n_files"] == 8
-
     r = _cli("--compact", frag, "--target-mb", "256")
     assert r.returncode == 0, r.stderr
-    assert json.loads(r.stdout)["compacted"] is True
+    res = json.loads(r.stdout)
+    assert res["compacted"] is True
+    assert (res["n_files_before"], res["n_files_after"]) == (8, 1)
 
     r = _cli("--history", snap)
     assert r.returncode == 0, r.stderr
@@ -163,8 +161,8 @@ def test_cli_maintenance_modes(tmp_path, spark):
     assert r.returncode == 0, r.stderr
     assert json.loads(r.stdout)["kept_versions"] == [2]
 
-    r = _cli("--layout", str(tmp_path / "missing"))
-    assert r.returncode == 1 or json.loads(r.stdout)["n_files"] == 0
+    r = _cli("--compact", str(tmp_path / "missing"))
+    assert r.returncode == 1 and "error:" in r.stderr
 
 
 def test_cli_fsck_mode(tmp_path, spark):

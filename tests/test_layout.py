@@ -94,82 +94,6 @@ def test_zorder_skewed_and_timestamp(spark, tmp_path):
     shutil.rmtree(zdir, ignore_errors=True)
 
 
-def test_upsert_parquet_partition_scoped(spark, tmp_path):
-    from pyspark.sql import Row
-
-    from prql_spark.sources.upsert import upsert_parquet
-
-    d = str(tmp_path / "lake")
-    base = spark.createDataFrame(
-        [Row(k=i, part=f"p{i % 3}", v=float(i)) for i in range(30)]
-    )
-    upsert_parquet(base, d, ["k"], partition_col="part")
-    files_before = {
-        f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(d, "part=*/*.parquet"))
-    }
-
-    # update two rows in p0, insert one new row in p0
-    updates = spark.createDataFrame(
-        [
-            Row(k=0, part="p0", v=100.0),
-            Row(k=3, part="p0", v=103.0),
-            Row(k=999, part="p0", v=999.0),
-        ]
-    )
-    res = upsert_parquet(updates, d, ["k"], partition_col="part")
-    assert res["touched_partitions"] == ["p0"]
-
-    back = spark.read.parquet(d)
-    assert back.count() == 31
-    got = {r.k: r.v for r in back.where("part = 'p0'").collect()}
-    assert got[0] == 100.0 and got[3] == 103.0 and got[999] == 999.0
-    assert got[6] == 6.0  # untouched row in touched partition survives
-    # untouched partitions: same files, same mtimes
-    for f, m in files_before.items():
-        if "part=p0" not in f:
-            assert os.path.exists(f) and os.path.getmtime(f) == m
-    # p0 was rewritten
-    assert any(
-        f not in files_before
-        for f in glob.glob(os.path.join(d, "part=p0/*.parquet"))
-    )
-    # keyed replace is idempotent
-    res2 = upsert_parquet(updates, d, ["k"], partition_col="part")
-    assert spark.read.parquet(d).count() == 31
-
-
-def test_upsert_null_partition_and_strict_move(spark, tmp_path):
-    import pytest
-    from pyspark.sql import Row
-
-    from prql_spark.sources.upsert import upsert_parquet
-
-    d = str(tmp_path / "lake2")
-    base = spark.createDataFrame(
-        [Row(k=1, part="p0", v=1.0), Row(k=2, part="p1", v=2.0)]
-    )
-    upsert_parquet(base, d, ["k"], partition_col="part")
-
-    # NULL partition values are rejected (pruning can't cover them)
-    nulls = spark.createDataFrame(
-        [(9, None, 9.0)], "k LONG, part STRING, v DOUBLE"
-    )
-    with pytest.raises(ValueError, match="NULL partition"):
-        upsert_parquet(nulls, d, ["k"], partition_col="part")
-
-    # strict mode catches a key moving partitions (stale-copy hazard)
-    mover = spark.createDataFrame([Row(k=2, part="p0", v=20.0)])
-    with pytest.raises(ValueError, match="across"):
-        upsert_parquet(mover, d, ["k"], partition_col="part", strict=True)
-    # same-partition updates pass the strict check
-    ok = spark.createDataFrame([Row(k=1, part="p0", v=10.0)])
-    res = upsert_parquet(ok, d, ["k"], partition_col="part", strict=True)
-    assert res["touched_partitions"] == ["p0"]
-    got = {r.k: r.v for r in spark.read.parquet(d).collect()}
-    assert got == {1: 10.0, 2: 2.0}
-
-
 def test_bucketed_join_elides_exchanges(spark):
     """The bucketing contract at 100 TB: two tables written with the
     SAME bucket key and count join WITHOUT any Exchange (both scans

@@ -1006,7 +1006,10 @@ def test_merge_snapshot_schema_and_key_validation(spark, tmp_path):
 def test_merge_snapshot_partitioned_table(spark, tmp_path):
     """Merge into a partitioned table: rewrites stay inside the
     partition layout (new files land under col=value dirs, partition
-    stats intact) and only the touched partitions' files rewrite."""
+    stats intact) and only the touched partitions' files rewrite. An
+    update that moves a key to another partition leaves exactly one
+    row for it: the old partition's copy is removed, not left
+    stale."""
     from prql_spark.sources.manifest import merge_snapshot
 
     path = str(tmp_path / "mgp")
@@ -1015,7 +1018,7 @@ def test_merge_snapshot_partitioned_table(spark, tmp_path):
     )
     snapshot_write(df, path, partition_by=("bucket",))
     src = spark.createDataFrame(
-        [(0, 0), (4, 0), (9000, 1)], "id LONG, bucket INT"
+        [(0, 0), (4, 0), (9000, 1), (5, 3)], "id LONG, bucket INT"
     )
     res = merge_snapshot(spark, path, src, on=("id",))
     m2 = json.load(open(os.path.join(
@@ -1024,6 +1027,8 @@ def test_merge_snapshot_partitioned_table(spark, tmp_path):
     got = snapshot_read(spark, path)
     assert got.count() == 401
     assert got.where("id = 9000").collect()[0].bucket == 1
+    # id 5 moved from bucket 1 to bucket 3: one row, in bucket 3
+    assert [r.bucket for r in got.where("id = 5").collect()] == [3]
     # files stay hive-partitioned after the merge
     assert all("bucket=" in f["path"] for f in m2["files"])
 
@@ -1586,6 +1591,14 @@ def test_date_column_timestamp_literal_delete(spark, tmp_path):
         "ts <= @2024-01-01",
         # a datetime string against DATE stats is cast to its day
         'd >= "2024-01-01 12:00"',
+        # spellings Spark's string -> DATE/TIMESTAMP casts accept
+        # besides the canonical one: no text order against the stats
+        'd == "2024-1-2"',
+        'd == "2024-01"',
+        'd == "2024"',
+        'd == "  2024-01-03"',
+        'd <= "2024-1-2 3:04"',
+        'ts >= "2024-1-1 1:04"',
     ],
 )
 def test_pruned_prql_filter_matches_plain_parquet(spark, tmp_path, cond):
@@ -1600,6 +1613,38 @@ def test_pruned_prql_filter_matches_plain_parquet(spark, tmp_path, cond):
         for t in ("mins", "mins_plain")
     )
     assert got == want and got
+
+
+def test_spark_datetime_cast_spellings_are_recognized(spark):
+    """Every spelling Spark's string -> DATE/TIMESTAMP cast accepts is
+    recognized by the pruning compare (a superset is safe: it only
+    keeps files), and the pinned partition values are not."""
+    from prql_spark.sources.manifest import _SPARK_DT_CAST
+
+    probes = [
+        "2024", "2024-01", "2024-1", "2024-1-2", "2024-01-02",
+        " 2024-01-02", "2024-01-02 ", "\t2024-1-2\n", "+2024-01-02",
+        "-2024-01-02", "12024-01-02", "2024-01-02T", "2024-01-02 junk",
+        "2024-1-2 3:04", "2024-01-02T03:04:05.123456789",
+        "2024-01-02 03:04:05Z", "2024-01-02 03:04:05+01:00",
+        "2024-01-02 03:04:05 UTC", "2024-01-02Z", "2024-01-02+01:00",
+        "3:04", "03:04:05", "T03:04:05", "1:2:3", "2024-1-2T3",
+        "20240102", "2024/01/02", "02-01-2024", "2024-13-01", "x2024",
+        "\x012024-01-02", "1234567-01-01", "123456789", "", "  ",
+        "a:b c", "z",
+    ]
+    rows = spark.createDataFrame([(p,) for p in probes], "s STRING")
+    accepted = [
+        r.s
+        for r in rows.where(
+            "try_cast(s AS DATE) IS NOT NULL "
+            "OR try_cast(s AS TIMESTAMP) IS NOT NULL"
+        ).collect()
+    ]
+    assert "2024-1-2" in accepted and "3:04" in accepted
+    assert [p for p in accepted if not _SPARK_DT_CAST.fullmatch(p)] == []
+    assert not _SPARK_DT_CAST.fullmatch("a:b c")
+    assert not _SPARK_DT_CAST.fullmatch("z")
 
 
 def test_prql_pushdown_prunes_as_sql_bounds(spark, tmp_path):

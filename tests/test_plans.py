@@ -649,6 +649,38 @@ def test_plan_cuts_only_in_physical_helpers():
     assert offenders == []
 
 
+def test_one_mutable_table_format(capsys):
+    """Tables change in place only through the manifest table: no
+    plain-parquet upsert or in-place compaction (with its partition
+    overwrite and rename swap) is left in the package, and the CLI
+    offers no flag for one."""
+    import pathlib
+
+    import pytest
+
+    import prql_spark
+    from prql_spark.__main__ import main
+
+    root = pathlib.Path(prql_spark.__file__).parent
+    tokens = (
+        "upsert_parquet", "compact_parquet", "partitionOverwriteMode",
+        "__compact_tmp__",
+    )
+    offenders = [
+        f"{path.relative_to(root)}: {token}"
+        for path in sorted(root.rglob("*"))
+        if path.is_file() and "__pycache__" not in path.parts
+        for token in tokens
+        if token in path.read_text(errors="replace")
+    ]
+    assert offenders == []
+    with pytest.raises(SystemExit):
+        main(["--help"])
+    out = capsys.readouterr().out
+    assert "--compact" in out
+    assert "--layout" not in out and "--partition-col" not in out
+
+
 def test_measurement_only_in_bench():
     """Every script measures through bench.py — one GC-then-drain
     timer, one JVM gate, one sf-dir default — and the runtime package

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from prql_spark import Catalog, compile_prql
 from prql_spark.sources import io as pio
+from prql_spark.sources.bucketing import write_bucketed
 from tests.conftest import assert_df_matches_sql, jobs_started
 
 
@@ -82,10 +83,10 @@ def test_bucketed_tables_join_without_shuffle(spark, catalog, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     orders = catalog.load("orders")
     lineitem = catalog.load("lineitem")
-    pio.write_bucketed_table(
+    write_bucketed(
         orders.withColumnRenamed("o_orderkey", "k"), "b_orders", ["k"], 8
     )
-    pio.write_bucketed_table(
+    write_bucketed(
         lineitem.withColumnRenamed("l_orderkey", "k"), "b_lineitem", ["k"], 8
     )
     j = spark.table("b_orders").join(spark.table("b_lineitem"), "k")
@@ -533,7 +534,8 @@ def _parity_files(spark, d):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from tests.conftest import SF_DIR, TABLES
+    from entries.oracle_check import TABLES
+    from tests.conftest import SF_DIR
 
     files = [os.path.join(SF_DIR, f"{t}.parquet") for t in TABLES]
     ts = [dt.datetime(2024, 1, 2, 3, 4, 5, 678901), None]

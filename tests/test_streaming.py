@@ -422,22 +422,24 @@ def test_interval_join_bounds_state(spark, events_dir):
 
 
 def test_stream_upsert_to_parquet_lake(spark, events_dir, tmp_path):
-    """foreachBatch + upsert: the lake converges to the batch rollup,
-    holding exactly one current row per key after multiple
+    """foreachBatch + merge_snapshot: the lake converges to the batch
+    rollup, holding exactly one current row per key after multiple
     micro-batches have each merged their updates."""
+    from prql_spark.sources.manifest import snapshot_read
+
     lake = str(tmp_path / "lake")
     ckpt = str(tmp_path / "ckpt")
     stream = sp.read_events_stream(spark, events_dir, max_files_per_trigger=2)
     rolled = sp.hourly_rollup(stream, watermark="1000 hours").withColumn(
         "day", F.expr("CAST(CAST(bucket AS DATE) AS STRING)")
     )
-    sp.stream_upsert_to_parquet(
-        rolled, lake, key_cols=["bucket", "event_type"], partition_col="day",
+    sp.stream_merge_snapshot(
+        rolled, lake, on=("bucket", "event_type"), partition_by=("day",),
         checkpoint=ckpt,
     )
     got = {
         (r.bucket, r.event_type): (r.n, r.value_sum)
-        for r in spark.read.parquet(lake).collect()
+        for r in snapshot_read(spark, lake).collect()
     }
     batch = sp.hourly_rollup(spark.read.parquet(events_dir))
     want = {
@@ -445,7 +447,7 @@ def test_stream_upsert_to_parquet_lake(spark, events_dir, tmp_path):
     }
     assert got == want and len(got) > 0
     # one row per key — the upserts merged rather than appended
-    n_rows = spark.read.parquet(lake).count()
+    n_rows = snapshot_read(spark, lake).count()
     assert n_rows == len(want)
 
 
@@ -459,6 +461,7 @@ def test_stream_warc_to_corpus_converges_to_batch_twin(spark, tmp_path):
     import os
 
     from prql_spark.sources.io import read_warc, warc_to_documents
+    from prql_spark.sources.manifest import snapshot_read
     from prql_spark.streaming.pipeline import stream_warc_to_corpus
 
     landing = str(tmp_path / "landing")
@@ -476,7 +479,7 @@ def test_stream_warc_to_corpus_converges_to_batch_twin(spark, tmp_path):
     def lake_rows():
         return {
             (r.url, r.text)
-            for r in spark.read.parquet(lake).collect()
+            for r in snapshot_read(spark, lake).collect()
         }
 
     def twin_rows():

@@ -15,8 +15,7 @@ import pytest
 from prql_spark import PrqlCompileError, compile_prql, to_sql
 
 import __spark_entry__ as entry_mod
-
-from .conftest import TABLES
+from entries.oracle_check import TABLES
 
 
 def _canon(rows, cols):
