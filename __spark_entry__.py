@@ -1028,7 +1028,11 @@ _PRQL_QUERIES: dict[str, tuple[str, str]] = {
 # surviving r7-evidence spill entries + the core + 7 code-changed
 # entries fill the window; consolidation retired 5 thin entries
 # (122 total, down from 125), easing rotation pressure for the
-# first time since round 4.
+# first time since round 4. The bloom-prefiltered decontamination
+# entry is since retired with its operator (dedup_incremental checks
+# the same md5 NOT EXISTS semantics through dedup_against, the one
+# exact path); the head of the spill, sketch_top_items, took its
+# window slot (121 total).
 _DRIVER_WINDOW = 50
 
 _CORE = [
@@ -1054,10 +1058,6 @@ _CORE = [
 # and rides the fronted lakehouse entries' code paths.
 _NEW_THIS_ROUND: list[str] = [
     "language_features_suite",
-    # bloom-prefiltered decontamination (dedup_against_bloom): only
-    # filter-positive rows enter the anti-join exchange — the
-    # batch-vs-10B-doc-reference shape where neither side broadcasts
-    "dedup_incremental_bloom",
 ]
 
 # reserved for new entries that outgrow the window (empty this round)
@@ -1125,13 +1125,14 @@ _STALE_PREV = [
     "sources_snapshot_timetravel",
     "sources_snapshot_changes",
     "sources_snapshot_scan",
+    # --- the head of the r8 spill, in the retired bloom entry's slot
+    "sketch_top_items",
 ]
 
-# r8-evidence entries the round-10 window cannot fit (34). All
+# r8-evidence entries the round-10 window cannot fit (33). All
 # mimic-green every session; oldest driver evidence in the repo from
 # here on: these MUST open round 11's window.
 _STALE_SPILL = [
-    "sketch_top_items",
     "splits_shuffle_deterministic",
     "profile_orders",
     "sources_upsert_merge",

@@ -124,12 +124,11 @@ HEADLINE = {
     "sources_snapshot_merge": "collect",
     # round-10: the language-features consolidation suite (distinct
     # CTE + USING join + null coalesce + cast/f-string + offset-limit
-    # in one pipeline — replaces four retired thin entries) and the
-    # bloom-prefiltered decontamination (vectorized-UDF probe +
-    # refinement anti-join — a UDF or filter-routing regression must
-    # be driver-visible)
+    # in one pipeline — replaces four retired thin entries). The
+    # round's bloom-prefiltered decontamination row is retired with
+    # its operator: exact decontamination has one path,
+    # dedup_against, measured through the scale lane's OPS
     "language_features_suite": "collect",
-    "dedup_incremental_bloom": "count",
 }
 
 

@@ -1935,32 +1935,6 @@ ORDER BY d.doc_id
 """
 
 
-def q_dedup_incremental_bloom(spark, sf_dir):
-    """Bloom-prefiltered decontamination — same semantics as
-    dedup_against (the exact anti-join removes the filter's false
-    positives), but only filter-POSITIVE rows enter the exchange:
-    the 100 TB-batch-vs-10B-doc-reference shape where neither side
-    broadcasts and shuffling the whole batch is the cost to kill."""
-    docs = _docs(spark, sf_dir)
-    ref = docs.where("doc_id % 4 = 0")
-    recrawl = ref.withColumn("doc_id", F.expr("doc_id + 200000"))
-    incoming = docs.where("doc_id % 4 != 0").unionByName(recrawl)
-    out = dedup.dedup_against_bloom(incoming, ref, fpp=0.01)
-    return out.select("doc_id", "source").orderBy("doc_id")
-
-
-SQL_DEDUP_INCREMENTAL_BLOOM = f"""
-WITH ref AS (SELECT md5({NORM}) AS k FROM documents WHERE doc_id % 4 = 0),
-incoming AS (
-  SELECT doc_id, text, source FROM documents WHERE doc_id % 4 != 0
-  UNION ALL
-  SELECT doc_id + 200000, text, source FROM documents WHERE doc_id % 4 = 0)
-SELECT doc_id, source FROM incoming i
-WHERE NOT EXISTS (SELECT 1 FROM ref WHERE ref.k = md5({NORM_T.format(t="i.text")}))
-ORDER BY doc_id
-"""
-
-
 def q_dedup_incremental(spark, sf_dir):
     """Ingestion-increment dedup: the incoming batch carries fresh
     docs AND re-crawled copies of corpus docs (same text, new ids);
@@ -3797,9 +3771,6 @@ ENTRIES: dict[str, tuple[Build, str]] = {
     "semdedup_prune": (q_semdedup, _sql_semdedup()),
     "text_unigram_logprob": (q_unigram_logprob, SQL_UNIGRAM),
     "dedup_incremental": (q_dedup_incremental, SQL_DEDUP_INCREMENTAL),
-    "dedup_incremental_bloom": (
-        q_dedup_incremental_bloom, SQL_DEDUP_INCREMENTAL_BLOOM
-    ),
     "sample_per_group": (q_sample_per_group, SQL_SAMPLE_PER_GROUP),
     "text_collocations": (q_collocations, SQL_COLLOCATIONS),
     "skew_salted_join": (q_salted_join, SQL_SALTED_JOIN),

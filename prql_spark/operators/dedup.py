@@ -388,10 +388,11 @@ def dedup_against(
     Only the 16-byte md5 keys of the reference move: the reference is
     projected to a distinct key column before the anti-join, so a
     100 TB reference corpus contributes one narrow column scan + a
-    hash exchange of keys (or zero exchange of ``df`` with
-    ``broadcast_ref=True`` when the reference key set fits the
-    broadcast threshold). ``df`` itself is never shuffled wider than
-    its key.
+    hash exchange of keys. ``df`` is a different matter: without
+    ``broadcast_ref`` the anti-join is a shuffle join, so ``df``'s
+    WHOLE rows are exchanged on ``__key``. ``broadcast_ref=True``
+    (when the reference key set fits the broadcast threshold)
+    broadcasts the keys instead and ``df`` is not exchanged at all.
     """
     norm = "md5(lower(regexp_replace(trim({t}), '\\\\s+', ' ')))"
     keys = reference.select(
@@ -404,177 +405,6 @@ def dedup_against(
         .join(keys, "__key", "left_anti")
         .drop("__key")
     )
-
-
-def dedup_against_bloom(
-    df: DataFrame,
-    reference: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ref_text_col: str | None = None,
-    fpp: float = 0.01,
-    expected_keys: int | None = None,
-) -> DataFrame:
-    """:func:`dedup_against` for references too large to broadcast
-    AND too valuable to shuffle the whole batch against: a Bloom
-    filter built from the reference keys prefilters ``df`` so rows
-    that are DEFINITELY not in the reference (the overwhelming
-    majority of a healthy crawl) never enter the anti-join exchange;
-    only filter-positive rows (true matches + ~``fpp`` false
-    positives) pay the exact md5 anti-join, which removes the false
-    positives — the result is EXACTLY ``dedup_against``'s, the bloom
-    pass only changes how many rows shuffle.
-
-    Scale posture (the 100 TB ingest vs the 10B-doc corpus):
-    - The filter is built from two JVM-side ``xxhash64`` columns
-      (double hashing h1 + i*h2 — Kirsch-Mitzenmacher), one numpy
-      pass per reference partition; partial filters (m/8 bytes each)
-      OR together driver-side — ``expected_keys`` × ~1.2 bytes at
-      1% fpp, e.g. ~12 GB of filter per 10B keys, sharded in
-      practice by running per reference partition-range. Pass
-      ``expected_keys`` to skip the sizing count job.
-    - Probing is one broadcast of the filter bytes + one Arrow-
-      batched vectorized UDF over ``df`` — no shuffle at all for
-      filter-negative rows.
-    - The exact refinement join moves only (positives × 16-byte
-      keys), i.e. ~(dup_rate + fpp) of the batch instead of all of
-      it.
-    """
-    import math
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BooleanType
-
-    spark = df.sparkSession
-    norm = "md5(lower(regexp_replace(trim({t}), '\\\\s+', ' ')))"
-    rt = ref_text_col or text_col
-
-    # the bloom hashes derive from the md5 KEY (h1/h2 = seeded
-    # xxhash64 over the 32-char hex), not from the raw text: the key
-    # is the one normalize+md5 pass every row pays anyway (same
-    # per-scan work as dedup_against), and hashing 32 chars is
-    # negligible next to re-running the whitespace regexp on
-    # kilobyte documents (the first cut did exactly that and paid
-    # the normalization four times over)
-    # the slim key set is used three times (sizing count, filter
-    # build, refinement anti-join) — materialize it so the
-    # reference's normalize+md5 scan happens ONCE, not three times
-    # (16-byte keys: a 10B-doc reference stores ~300 GB across a
-    # cluster, small next to re-scanning the corpus twice more).
-    # materialize, NOT persist(): CacheManager entries live until an
-    # explicit unpersist that no caller can place (the refinement
-    # join consumes the keys lazily, after this function returns), so
-    # a long session accumulated cached reference key sets in storage
-    # memory. Checkpoint blocks are reclaimed by the ContextCleaner
-    # as soon as the consuming plan is garbage-collected.
-    ref_keys = materialize(
-        reference.select(F.expr(norm.format(t=rt)).alias("__key"))
-        .distinct()
-    )
-    ref_hashes = ref_keys.select(
-        F.xxhash64("__key").alias("h1"),
-        F.xxhash64("__key", F.lit(7)).alias("h2"),
-    )
-    n = expected_keys if expected_keys is not None else ref_keys.count()
-    n = max(1, int(n))
-    fpp = min(max(fpp, 1e-6), 0.5)
-    m = max(64, int(-n * math.log(fpp) / (math.log(2) ** 2)))
-    k = max(1, min(16, round(m / n * math.log(2))))
-    nbytes = (m + 7) // 8
-
-    def build(batches):
-        bits = np.zeros(nbytes, dtype=np.uint8)
-        for pdf in batches:
-            h1 = pdf["h1"].to_numpy(dtype=np.int64).astype(np.uint64)
-            h2 = pdf["h2"].to_numpy(dtype=np.int64).astype(np.uint64)
-            for i in range(k):
-                pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-                np.bitwise_or.at(
-                    bits, (pos >> np.uint64(3)).astype(np.int64),
-                    np.left_shift(
-                        np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)
-                    ),
-                )
-        yield pd.DataFrame({"bf": [bits.tobytes()]})
-
-    # OR the per-partition partial filters in a TREE (treeAggregate),
-    # not a collect-all: collecting one m/8-byte partial PER
-    # REFERENCE PARTITION materializes O(partitions × m/8) on the
-    # driver at once (at 10B keys ≈ 1.4 GB × partitions — a driver
-    # OOM at the op's own documented scale); the tree folds partials
-    # executor-side and the driver receives only the top fan-in.
-    # Identical bits — OR is associative/commutative.
-    def _or_row(acc, row):
-        return (
-            np.frombuffer(acc, dtype=np.uint8)
-            | np.frombuffer(row["bf"], dtype=np.uint8)
-        ).tobytes()
-
-    def _or_bytes(a, b):
-        return (
-            np.frombuffer(a, dtype=np.uint8)
-            | np.frombuffer(b, dtype=np.uint8)
-        ).tobytes()
-
-    merged = ref_hashes.mapInPandas(build, "bf BINARY").rdd.treeAggregate(
-        np.zeros(nbytes, dtype=np.uint8).tobytes(),
-        _or_row,
-        _or_bytes,
-        depth=2,
-    )
-    bf_b = spark.sparkContext.broadcast(merged)
-
-    def _might_contain_fn(h1, h2):
-        arr = np.frombuffer(bf_b.value, dtype=np.uint8)
-        a1 = h1.to_numpy(dtype=np.int64).astype(np.uint64)
-        a2 = h2.to_numpy(dtype=np.int64).astype(np.uint64)
-        hit = np.ones(len(a1), dtype=bool)
-        for i in range(k):
-            pos = (a1 + np.uint64(i) * a2) % np.uint64(m)
-            byte = arr[(pos >> np.uint64(3)).astype(np.int64)]
-            bit = np.left_shift(
-                np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)
-            )
-            hit &= (byte & bit) != 0
-        return pd.Series(hit)
-
-    # no inline type hints: `from __future__ import annotations`
-    # stringifies them, which pandas_udf inference rejects.
-    # asNondeterministic (guide §4.4): the probe IS deterministic,
-    # but constraint propagation otherwise infers the filter onto
-    # the refinement anti-join's REFERENCE side (join-key equality ⟹
-    # equal probe result) and evaluates the UDF over every reference
-    # key — where it drops NOTHING (every reference key is in its
-    # own filter) and at the op's documented 10B-key scale would be
-    # 10B wasted Python probes. The round-11 before-plan shows the
-    # propagated ArrowEvalPython over the ref-keys checkpoint; the
-    # marker pins the probe to the incoming side only.
-    might_contain = F.pandas_udf(
-        _might_contain_fn, BooleanType()
-    ).asNondeterministic()
-
-    probed = df.withColumn(
-        "__key", F.expr(norm.format(t=text_col))
-    ).withColumn(
-        "__bf_hit",
-        might_contain(
-            F.xxhash64("__key"), F.xxhash64("__key", F.lit(7))
-        ),
-    )
-    # the two branches re-evaluate the scan (cheap, columnar) rather
-    # than persisting a 100 TB batch; what the split buys is that the
-    # clean branch — the overwhelming majority at a healthy dup rate
-    # — reaches the output with ZERO exchange, and only candidates
-    # enter the anti-join
-    clean = probed.where(~F.col("__bf_hit")).drop("__key", "__bf_hit")
-    refined = (
-        probed.where(F.col("__bf_hit"))
-        .drop("__bf_hit")
-        .join(ref_keys, "__key", "left_anti")
-        .drop("__key")
-    )
-    return clean.unionByName(refined)
 
 
 def dedup_against_near(

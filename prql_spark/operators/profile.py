@@ -106,12 +106,16 @@ def rollup_stats(
 
     ``aggs``: output_name -> SQL aggregate expression.
 
-    Scale shape: rollup/cube compile to ONE scan + an Expand node
-    (n_levels × the map-side rows, combined map-side before the
-    single hash exchange) — no joins, no second pass per level. A
+    Scale shape: rollup/cube compile to ONE aggregating scan + an
+    Expand node (n_levels × the map-side rows, combined map-side
+    before the single hash exchange) — no second pass per level. A
     ``lvl`` grouping_id column disambiguates rollup NULLs from
     genuine NULL dim values (the standard bitmask, identical in
     Spark and DuckDB).
+
+    Empty input yields the SQL answer, the grand-total row alone:
+    its aggregates run over ``df.limit(0)`` (no scan) and it is kept
+    only while the column-less probe ``df.limit(1)`` is empty.
     """
     if not dims:
         raise ValueError("rollup_stats: dims must be non-empty")
@@ -122,4 +126,9 @@ def rollup_stats(
         ),
         *exprs,
     )
-    return grouped.select(*dims, "lvl", *aggs.keys())
+    total = df.limit(0).agg(*exprs).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name)
+          for f in df.select(*dims).schema],
+        F.lit((1 << len(dims)) - 1).alias("lvl"), *aggs.keys(),
+    ).join(df.limit(1), how="left_anti")
+    return grouped.select(*dims, "lvl", *aggs.keys()).unionByName(total)

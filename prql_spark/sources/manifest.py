@@ -743,7 +743,11 @@ def _stage_commit(
             tuple(stats_cols),
             schema=df.schema if partition_by else None,
         )
-    return commit_id, staged
+    # a writer task with no rows can still leave a 0-row file: every
+    # file recorded empty is deleted and left out of the commit
+    for f in [f for f in staged if f.get("n_rows") == 0]:
+        fs.delete(Path(f"{base}/{f['path']}"), False)
+    return commit_id, [f for f in staged if f.get("n_rows") != 0]
 
 
 def snapshot_write(

@@ -332,7 +332,8 @@ def stream_merge_snapshot(
     version.
 
     The first non-empty micro-batch creates the table
-    (:func:`snapshot_write`, laid out by ``partition_by``); every
+    (:func:`snapshot_write`, laid out by ``partition_by``, with stats
+    on ``on`` so later merges prune files by key range); every
     later one runs :func:`merge_snapshot`, which rewrites only the
     files holding a matched key — a key whose partition value
     changes leaves no stale row behind. foreachBatch is
@@ -354,7 +355,8 @@ def stream_merge_snapshot(
         if _is_table(sess, path):
             merge_snapshot(sess, path, batch_df, on=on)
         else:
-            snapshot_write(batch_df, path, partition_by=partition_by)
+            snapshot_write(batch_df, path, partition_by=partition_by,
+                           stats_cols=on)
 
     return _drain(stream_df, _merge, "update", checkpoint, timeout_s,
                   "stream_merge_snapshot", path)

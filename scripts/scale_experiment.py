@@ -113,8 +113,7 @@ def _clusters(spark, d):
 
 def _recrawl_batch(spark, d):
     # a batch of docs with doc_id % 5 != 0 plus re-crawls (new ids) of
-    # the reference fifth: the exact and bloom-prefiltered anti-joins
-    # return identical rows, only the exchanged row count differs
+    # the reference fifth: the anti-join drops exactly the re-crawls
     docs = _docs(spark, d)
     return docs.where("doc_id % 5 != 0").unionByName(
         docs.where("doc_id % 5 = 0").withColumn(
@@ -214,12 +213,6 @@ OPS = {
     ),
     "dedup_against": (
         lambda s, d: dedup.dedup_against(
-            _recrawl_batch(s, d), _docs(s, d).where("doc_id % 5 = 0")
-        ),
-        "count",
-    ),
-    "dedup_against_bloom": (
-        lambda s, d: dedup.dedup_against_bloom(
             _recrawl_batch(s, d), _docs(s, d).where("doc_id % 5 = 0")
         ),
         "count",

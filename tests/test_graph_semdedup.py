@@ -254,12 +254,21 @@ def test_dedup_against_normalized(spark):
         ],
         "doc_id long, text string",
     )
+    empty = ref.where("doc_id < 0")
     for bc in (False, True):
         kept = sorted(
             r.doc_id
             for r in dedup.dedup_against(inc, ref, broadcast_ref=bc).collect()
         )
         assert kept == [11, 12]
+        # an empty reference keeps every row
+        kept = sorted(
+            r.doc_id
+            for r in dedup.dedup_against(
+                inc, empty, broadcast_ref=bc
+            ).collect()
+        )
+        assert kept == [10, 11, 12]
 
 
 # ------------------------------------------------- per-group sample

@@ -981,6 +981,16 @@ def test_merge_snapshot_upserts_and_rewrites_only_touched(spark, tmp_path):
     assert rewritten and all(
         "id" in (f.get("stats") or {}) for f in rewritten
     )
+    # a one-row insert spread over 4 partitions: the writer's empty
+    # tasks may leave 0-row files, and none may reach the manifest
+    one = spark.createDataFrame([(3000, 3)], "id LONG, val LONG")
+    res = merge_snapshot(spark, path, one.repartition(4), on=("id",))
+    m3 = json.load(open(os.path.join(
+        path, "_manifests", f"v{res['version']:010d}.json")))
+    assert all(f.get("n_rows") != 0 for f in m3["files"])
+    assert {r.id: r.val for r in snapshot_read(spark, path).collect()} == {
+        **got, 3000: 3
+    }
 
 
 def test_merge_snapshot_schema_and_key_validation(spark, tmp_path):

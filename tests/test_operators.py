@@ -2885,49 +2885,3 @@ class TestImagePhash:
             if v > med:
                 packed |= 1 << i
         assert packed == got
-
-
-def test_dedup_against_bloom_matches_exact(spark):
-    """dedup_against_bloom must return EXACTLY dedup_against's rows:
-    the bloom pass only routes rows, the exact anti-join decides.
-    Checked at a realistic fpp AND at an absurd fpp=0.5 (many false
-    positives — all must be removed by the refinement join), plus
-    the expected_keys fast path and an empty reference."""
-    from pyspark.sql import functions as F
-
-    from prql_spark.operators import dedup
-
-    docs = spark.createDataFrame(
-        [(i, f"doc text {i % 37} body {i % 11}", "s") for i in range(500)],
-        "doc_id LONG, text STRING, source STRING",
-    )
-    ref = docs.where("doc_id % 3 = 0")
-    batch = docs.where("doc_id % 3 != 0").unionByName(
-        ref.withColumn("doc_id", F.col("doc_id") + 10000)
-    )
-
-    want = sorted(
-        r.doc_id for r in dedup.dedup_against(batch, ref).collect()
-    )
-    for kwargs in (
-        {"fpp": 0.01},
-        {"fpp": 0.5},  # floods the refinement join with false positives
-        {"fpp": 0.01, "expected_keys": 200},  # sizing without a count job
-    ):
-        got = sorted(
-            r.doc_id
-            for r in dedup.dedup_against_bloom(batch, ref, **kwargs).collect()
-        )
-        assert got == want, kwargs
-
-    # empty reference: everything survives
-    empty = ref.where("doc_id < 0")
-    assert dedup.dedup_against_bloom(batch, empty).count() == batch.count()
-
-    # NULL text rows survive on both paths (md5(NULL) never equi-joins)
-    nbatch = batch.unionByName(spark.createDataFrame(
-        [(99999, None, "s")], "doc_id LONG, text STRING, source STRING"
-    ))
-    assert 99999 in {
-        r.doc_id for r in dedup.dedup_against_bloom(nbatch, ref).collect()
-    }

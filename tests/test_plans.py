@@ -681,6 +681,37 @@ def test_one_mutable_table_format(capsys):
     assert "--layout" not in out and "--partition-col" not in out
 
 
+def test_one_exact_decontamination_path():
+    """Exact decontamination has one operator, dedup_against: no
+    bloom-prefiltered copy (or its entry) is named by the package, the
+    entries, the scripts or the bench, and the package builds no
+    driver-side tree aggregate."""
+    import pathlib
+
+    import prql_spark
+
+    root = pathlib.Path(prql_spark.__file__).parent
+    repo = root.parent
+    files = [
+        p
+        for d in ("prql_spark", "entries", "scripts")
+        for p in sorted((repo / d).rglob("*"))
+        if p.is_file() and "__pycache__" not in p.parts
+    ] + [repo / "bench.py"]
+    offenders = [
+        f"{path.relative_to(repo)}: {token}"
+        for path in files
+        for token in ("dedup_against_bloom", "dedup_incremental_bloom")
+        if token in path.read_text(errors="replace")
+    ]
+    offenders += [
+        f"{path.relative_to(repo)}: treeAggregate"
+        for path in sorted(root.rglob("*.py"))
+        if "treeAggregate" in path.read_text()
+    ]
+    assert offenders == []
+
+
 def test_measurement_only_in_bench():
     """Every script measures through bench.py — one GC-then-drain
     timer, one JVM gate, one sf-dir default — and the runtime package

@@ -8,6 +8,7 @@ and assert the stream result equals the batch twin.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 
@@ -449,6 +450,14 @@ def test_stream_upsert_to_parquet_lake(spark, events_dir, tmp_path):
     # one row per key — the upserts merged rather than appended
     n_rows = snapshot_read(spark, lake).count()
     assert n_rows == len(want)
+    # the creating commit carries stats on every key column, so each
+    # later micro-batch's merge prunes files by key range
+    with open(os.path.join(lake, "_manifests", f"v{1:010d}.json")) as f:
+        v1 = json.load(f)
+    assert v1["files"] and all(
+        {"bucket", "event_type"} <= set(e.get("stats") or {})
+        for e in v1["files"]
+    )
 
 
 def test_stream_warc_to_corpus_converges_to_batch_twin(spark, tmp_path):

@@ -1,6 +1,7 @@
-"""Degenerate inputs: every ``sources_*`` entry on zero-row copies of
-the ten tables answers as its DuckDB oracle does, compared the way
-the correctness gate (``scripts/check_entry.py``) compares."""
+"""Degenerate inputs: every ``sources_*`` entry, and the ROLLUP report
+``profile_rollup``, on zero-row copies of the ten tables answers as
+its DuckDB oracle does, compared the way the correctness gate
+(``scripts/check_entry.py``) compares."""
 
 from __future__ import annotations
 
@@ -11,7 +12,9 @@ import __spark_entry__ as entry_mod
 from entries.oracle_check import TABLES, compare, oracle_connection
 from tests.conftest import SF_DIR
 
-SOURCES = [n for n in entry_mod.queries() if n.startswith("sources_")]
+SOURCES = [n for n in entry_mod.queries() if n.startswith("sources_")] + [
+    "profile_rollup"
+]
 
 
 @pytest.fixture(scope="module")
