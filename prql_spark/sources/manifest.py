@@ -94,7 +94,11 @@ import re
 import uuid
 from urllib.parse import unquote
 
+from py4j.java_gateway import JavaClass
+from pyspark.errors import AnalysisException, SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
+
+from prql_spark.plans.physical import materialize
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
@@ -186,9 +190,21 @@ def _parse_partition(
     return out, stats_ok
 
 
+def _jclass(jvm, fqn: str):
+    """The Py4J handle of JVM class ``fqn``, built without asking the
+    JVM: spelling it ``jvm.org.apache.hadoop.fs.Path`` resolves each
+    dotted segment with its own round trip (five for ``Path``)."""
+    return JavaClass(fqn, jvm._gateway_client)
+
+
+def _hpath(jvm):
+    """Hadoop's ``org.apache.hadoop.fs.Path`` class."""
+    return _jclass(jvm, "org.apache.hadoop.fs.Path")
+
+
 def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = _hpath(jvm)(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
@@ -220,7 +236,7 @@ class RenameCommitProtocol(CommitProtocol):
     there instead."""
 
     def publish(self, fs, jvm, dir_path: str, name: str, text: str) -> bool:
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _hpath(jvm)
         tmp = Path(f"{dir_path}/.{name}.{uuid.uuid4().hex[:8]}.tmp")
         out = fs.create(tmp, True)
         try:
@@ -255,7 +271,7 @@ class LockFileCommitProtocol(CommitProtocol):
     def publish(self, fs, jvm, dir_path: str, name: str, text: str) -> bool:
         import time
 
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _hpath(jvm)
         lock = Path(f"{dir_path}/.commit.lock")
         try:
             out = fs.create(lock, False)  # exclusive create
@@ -332,9 +348,9 @@ def _write_text_atomic(fs, jvm, dir_path: str, name: str, text: str) -> bool:
 
 
 def _read_text(fs, jvm, path: str) -> str:
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
+    stream = fs.open(_hpath(jvm)(path))
     try:
-        return jvm.org.apache.commons.io.IOUtils.toString(
+        return _jclass(jvm, "org.apache.commons.io.IOUtils").toString(
             stream, "UTF-8"
         )
     finally:
@@ -342,7 +358,7 @@ def _read_text(fs, jvm, path: str) -> str:
 
 
 def _versions(fs, jvm, base: str) -> list[int]:
-    Path = jvm.org.apache.hadoop.fs.Path
+    Path = _hpath(jvm)
     mdir = Path(f"{base}/{_MANIFEST_DIR}")
     if not fs.exists(mdir):
         return []
@@ -397,7 +413,7 @@ def _publish(fs, jvm, base: str, op: str, build) -> dict:
         head = seen[-1] if seen else None
         hm = None
         if head is None:
-            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{base}/{_MANIFEST_DIR}"))
+            fs.mkdirs(_hpath(jvm)(f"{base}/{_MANIFEST_DIR}"))
         else:
             hm = _load_manifest(fs, jvm, base, head)
         manifest = {**build(head, hm), "version": (head or 0) + 1,
@@ -540,13 +556,20 @@ def _staged_stats(
         n_by_rel[rel] = r["__n_rows"]
         if st:
             by_rel[rel] = st
+    rels = {f["path"].split("/", 2)[2] for f in staged}
+    # a 0-row file has no group in the scan: once every group has
+    # matched a staged file, a staged file without one is empty (a
+    # group that matched none means the path forms disagree, and
+    # nothing is inferred from absence)
+    empty = 0 if n_by_rel.keys() <= rels else None
     n_ok = 0
     for f in staged:
         rel = f["path"].split("/", 2)[2]  # after data/<commit>/
         # per-file row count rides the same scan for free — powers
         # metadata-only counts (snapshot_count) and history rows
-        if rel in n_by_rel:
-            f["n_rows"] = int(n_by_rel[rel])
+        n = n_by_rel.get(rel, empty)
+        if n is not None:
+            f["n_rows"] = int(n)
         st = by_rel.get(rel)
         if st:
             f["stats"] = {**f.get("stats", {}), **st}
@@ -704,7 +727,7 @@ def _stage_commit(
 
     # relative paths of the freshly staged files (partitioned writes
     # nest them under col=value dirs — keep the FULL relative path)
-    Path = jvm.org.apache.hadoop.fs.Path
+    Path = _hpath(jvm)
     data_prefix = Path(data_dir).toUri().getPath()
     staged = []
     it = fs.listFiles(Path(data_dir), True)
@@ -901,82 +924,129 @@ def _manifest_ddl(m: dict) -> str | None:
     return ", ".join(f"`{n}` {t}" for n, t in sd)
 
 
+def _input_files(spark, df: DataFrame) -> list:
+    """``df.inputFiles()`` — the files Spark's own index listed when
+    ``df`` was planned — in two Py4J round trips. pyspark copies the
+    Java array element by element, two round trips per file; Hadoop's
+    ``StringUtils.join`` hands it over as one string (URIs
+    percent-encode newlines)."""
+    uris = _jclass(spark._jvm, "org.apache.hadoop.util.StringUtils").join(
+        "\n", df._jdf.inputFiles()
+    )
+    return uris.split("\n") if uris else []
+
+
+def _stale_dirs(uris: list, groups: dict) -> set:
+    """The commit dirs of ``groups`` (dir → referenced manifest paths)
+    whose files in a Spark listing of them (``uris``) are not exactly
+    the referenced ones: a stray, a superseded or a missing file.
+
+    A file belongs to the dir after the table's OWN ``/data/``, the
+    one the fewest ``/data/`` splits of any listed URI reach. Every
+    file sits under ``<base>/data/<commit>/``, so a stray inside a
+    nested ``data/`` dir still counts against the commit dir that
+    holds it, never against the one its deeper path names."""
+    marker = f"/{_DATA_DIR}/"
+    split = [u.split(marker) for u in uris]
+    k = min((len(parts) for parts in split), default=1) - 1
+    listed: dict[str, list] = {d: [] for d in groups}
+    for parts in split:
+        rel = f"{_DATA_DIR}/" + unquote(marker.join(parts[k:]))
+        d = "/".join(rel.split("/", 2)[:2])
+        if d not in listed:
+            return set(groups)
+        listed[d].append(rel)
+    return {
+        d for d, rels in listed.items() if sorted(rels) != sorted(groups[d])
+    }
+
+
 def _plan_read(spark, base: str, m: dict, files=None) -> DataFrame:
     """Plan a scan of ``files`` (manifest file dicts; default: all of
     ``m``'s). Plans per COMMIT DIRECTORY, not per file: passing N
     explicit paths costs Spark one driver-side stat each (~2 ms/file
-    locally, a remote call each on object stores). Commit dirs are
-    immutable, so a dir whose visible data files EQUAL the referenced
-    set is passed as one path — verified with one (recursive) listing
-    per dir, so a hand-planted stray file inside a commit dir still
-    falls back to exact file paths and is never read. Planning is
+    locally, a remote call each on object stores). Planning is
     O(#commits), not O(#files).
+
+    Each commit dir is planned as one path, so Spark lists it once,
+    inside the JVM. That listing (``inputFiles``) is then compared
+    with the files the manifest references there; a dir whose
+    listing differs — a hand-planted stray, a file a later rewrite
+    superseded, a referenced file gone from disk — is re-planned by
+    its exact file paths, so a stray is never read and a missing file
+    raises at planning. Spark receives the same paths either way; a
+    dir whose one-path plan Spark refuses (partition discovery over a
+    stray ``col=value`` dir) is read by its exact paths too.
 
     Unpartitioned versions read with the manifest's recorded schema
     (no inference job); manifests without ``schema_ddl`` and
-    schema-evolved (``merge_schema``) versions let Spark infer.
+    schema-evolved (``merge_schema``) versions let Spark infer, so
+    their listing comes from a schema-only plan: inference would read
+    a stray file's footer before the comparison could exclude it.
 
     Partitioned tables read per commit dir with ``basePath`` (so the
     ``col=value`` dirs surface as columns) and the manifest's exact
     ordered schema (types never depend on path inference; with
     schema evolution, old files null-fill newer columns), then the
     commits union — plan-level only, no shuffle."""
-    fs, jvm = _fs(spark, base)
-    Path = jvm.org.apache.hadoop.fs.Path
     if files is None:
         files = m["files"]
-    # commit dir -> referenced paths relative to it
+    # commit dir -> the manifest paths (data/<commit>/...) under it
     groups: dict[str, set] = {}
     for f in files:
-        d, cid, rel = f["path"].split("/", 2)
-        groups.setdefault(f"{d}/{cid}", set()).add(rel)
+        d, cid, _ = f["path"].split("/", 2)
+        groups.setdefault(f"{d}/{cid}", set()).add(f["path"])
 
-    def visible_rels(full_dir: str) -> set:
-        prefix = Path(full_dir).toUri().getPath()
-        out = set()
-        it = fs.listFiles(Path(full_dir), True)
-        while it.hasNext():
-            st = it.next()
-            rel = st.getPath().toUri().getPath()[len(prefix):]
-            rel = rel.lstrip("/")
-            if not _hidden_rel(rel):
-                out.add(rel)
-        return out
+    def scan(reader, dirs: list, stale=frozenset()) -> DataFrame:
+        return reader.parquet(*[
+            p
+            for d in dirs
+            for p in (
+                [f"{base}/{r}" for r in sorted(groups[d])]
+                if d in stale else [f"{base}/{d}"]
+            )
+        ])
 
-    per_dir: dict[str, list] = {}
-    for d, rels in groups.items():
-        full = f"{base}/{d}"
-        if visible_rels(full) == rels:
-            per_dir[d] = [full]
-        else:
-            per_dir[d] = [f"{full}/{r}" for r in sorted(rels)]
+    def plan(reader, dirs: list, lister=None) -> DataFrame:
+        # ``lister``: a schema-only reader to take the listing from
+        # when ``reader`` infers
+        try:
+            probe = scan(lister or reader, dirs)
+        except (AnalysisException, SparkRuntimeException):
+            # partition discovery refused a stray dir, or a commit dir
+            # is gone: exact paths read the first, raise on the second
+            return scan(reader, dirs, set(dirs))
+        stale = _stale_dirs(
+            _input_files(spark, probe), {d: groups[d] for d in dirs}
+        )
+        if not stale and lister is None:
+            return probe
+        return scan(reader, dirs, stale)
 
     ddl = _manifest_ddl(m)
     if not m.get("partition_by"):
-        paths = [p for ps in per_dir.values() for p in ps]
+        if ddl is not None and not m.get("merge_schema"):
+            # every file carries the recorded schema: plan the scan
+            # from it, with no footer-inference job
+            return plan(spark.read.schema(ddl), list(groups))
         reader = spark.read
         if m.get("merge_schema"):
             # schema-evolved version: files span schemas; merge so
             # old files null-fill columns added later
             reader = reader.option("mergeSchema", "true")
-        elif ddl is not None:
-            # every file carries the recorded schema: plan the scan
-            # from it, with no footer-inference job
-            reader = reader.schema(ddl)
-        return reader.parquet(*paths)
+        return plan(
+            reader, list(groups), spark.read.schema(ddl or "x int")
+        )
 
     order = [n for n, _t in m["schema_ddl"]]
     out = None
-    for d, paths in per_dir.items():
-        part_df = (
-            spark.read.schema(ddl)
-            .option("basePath", f"{base}/{d}")
-            .parquet(*paths)
-            # Spark surfaces partition columns LAST regardless of the
-            # user schema's order — restore the writer's order (a
-            # plan-level projection, free)
-            .select(*order)
-        )
+    for d in groups:
+        # Spark surfaces partition columns LAST regardless of the
+        # user schema's order — restore the writer's order (a
+        # plan-level projection, free)
+        part_df = plan(
+            spark.read.schema(ddl).option("basePath", f"{base}/{d}"), [d]
+        ).select(*order)
         out = part_df if out is None else out.unionByName(part_df)
     return out
 
@@ -985,12 +1055,12 @@ def snapshot_read(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
     """Read the dataset at ``path`` as of ``version`` (default: the
-    latest). Plans from the manifest's file list — one listing per
-    referenced commit directory (to validate dir-grouped planning),
-    never a recursive data-tree walk. A version with no files (an
-    empty write, or a delete of every row) reads as an empty frame
-    with the recorded schema; only a manifest too old to record one
-    raises."""
+    latest). Plans from the manifest's file list: Spark lists each
+    referenced commit directory once while planning it (see
+    :func:`_plan_read`), never the whole data tree. A version with
+    no files (an empty write, or a delete of every row) reads as an
+    empty frame with the recorded schema; only a manifest too old to
+    record one raises."""
     _, _, base, _, v, m = _open(spark, path, "snapshot_read", version)
     if not m["files"]:
         ddl = _manifest_ddl(m)
@@ -1343,7 +1413,7 @@ def vacuum_snapshot(
         raise ValueError("vacuum_snapshot: keep_versions must be >= 1")
     fs, jvm = _fs(spark, path)
     base = path.rstrip("/")
-    Path = jvm.org.apache.hadoop.fs.Path
+    Path = _hpath(jvm)
     seen = _versions(fs, jvm, base)
     keep = seen[-keep_versions:]
     referenced: set[str] = set()
@@ -2001,11 +2071,23 @@ def merge_snapshot(
     concurrent data commit between plan and publish raises (see
     :func:`_commit_replacing`); re-run on the new head.
 
-    The distinct source keys are broadcast to both probe joins only
-    while they stay under ``broadcast_key_limit`` (default 2M keys —
-    comfortably driver-safe); a bulk backfill with more distinct
-    keys drops the hint and lets Spark/AQE pick the join strategy
-    instead of OOMing a forced broadcast."""
+    The distinct source keys are computed once and stored with
+    :func:`~prql_spark.plans.physical.materialize`: the bounds agg,
+    the probe and the survivor anti-join all scan the stored blocks.
+    Under AQE those blocks hold the exchange's COALESCED output (one
+    partition for a small update), so each consumer runs a handful of
+    tasks, not one per shuffle partition. The trade-off is
+    materialize's: the blocks live only on the executors that wrote
+    them, so a lost executor fails the merge before it publishes, and
+    no version is written — the failure mode of every other
+    materialize site, whose storage policy changes in that one
+    helper.
+
+    The keys are broadcast to both probe joins only while they stay
+    under ``broadcast_key_limit`` (default 2M keys — comfortably
+    driver-safe); a bulk backfill with more distinct keys drops the
+    hint and lets Spark/AQE pick the join strategy instead of OOMing
+    a forced broadcast."""
     from pyspark.sql import functions as F
 
     on = tuple(on)
@@ -2034,10 +2116,10 @@ def merge_snapshot(
     # stage 1: prune candidates by manifest stats vs source key range.
     # The bounds agg, the key-count (broadcast gate) and the two probe
     # joins all consume the same distinct key set, so it is computed
-    # ONCE here: one job returns min/max/count over the persisted
+    # ONCE here: one job returns min/max/count over the materialized
     # keys (min/max over distinct keys == min/max over the source —
     # one fewer full source scan than a separate source-side agg).
-    keys = source.select(*on).dropDuplicates().persist()
+    keys = materialize(source.select(*on).dropDuplicates())
     krow = keys.agg(
         F.count(F.lit(1)).alias("__n"),
         *[F.min(c).alias(f"mn_{c}") for c in on],
@@ -2095,13 +2177,10 @@ def merge_snapshot(
             )
     else:
         new_data = source
-    try:
-        commit_id, staged = _stage_commit(
-            new_data, base, fs, jvm, partition_by, col_types,
-            stats_cols=_table_stats_cols(m, partition_by),
-        )
-    finally:
-        keys.unpersist()
+    commit_id, staged = _stage_commit(
+        new_data, base, fs, jvm, partition_by, col_types,
+        stats_cols=_table_stats_cols(m, partition_by),
+    )
     keep = {f["path"] for f in m["files"]} - touched
     return _commit_replacing(
         spark, path, m, keep, staged, "merge", commit_id=commit_id,
@@ -2364,13 +2443,14 @@ def attach_stats(
     ranges → most files skip.
     """
     fs, jvm, base, _, _, m = _open(spark, path, "attach_stats", version)
-    scheme = jvm.org.apache.hadoop.fs.Path(base).toUri().getScheme()
+    uri = _hpath(jvm)(base).toUri()
+    scheme = uri.getScheme()
     if scheme not in (None, "file"):
         raise ValueError(
             f"attach_stats: footer reads need a local path, got "
             f"scheme {scheme!r} — collect stats from a staging copy"
         )
-    local_base = jvm.org.apache.hadoop.fs.Path(base).toUri().getPath()
+    local_base = uri.getPath()
     stats_by_path: dict[str, dict] = {}
     nrows_by_path: dict[str, int] = {}
     for f in m["files"]:
@@ -2554,7 +2634,7 @@ def validate_snapshot(spark: SparkSession, path: str) -> dict:
     metadata only; no Spark job."""
     fs, jvm = _fs(spark, path)
     base = path.rstrip("/")
-    Path = jvm.org.apache.hadoop.fs.Path
+    Path = _hpath(jvm)
     seen = _versions(fs, jvm, base)
     report: dict = {
         "ok": True,

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -217,6 +218,133 @@ def test_stray_file_in_commit_dir_not_read(spark, tmp_path):
     (side_file,) = _g.glob(str(tmp_path / "side" / "*.parquet"))
     _sh.copy(side_file, os.path.join(commit_dir, "stray.parquet"))
     assert _ids(snapshot_read(spark, path)) == list(range(10))
+
+
+@pytest.mark.parametrize("stray_dir", [None, "other=1", "bucket=zz"])
+def test_stray_file_in_partitioned_commit_dir_not_read(
+    spark, tmp_path, stray_dir
+):
+    # the partitioned read plans each commit dir with basePath; a file
+    # the manifest does not reference is not read, whether it sits in
+    # a col=value dir (None), under a partition column the table does
+    # not have, or under a value Spark cannot cast (both make Spark
+    # refuse the one-path plan)
+    path = str(tmp_path / "strayp")
+    df = spark.range(10).withColumn("bucket", (F.col("id") % 2).cast("int"))
+    snapshot_write(df, path, partition_by=("bucket",))
+    m = json.load(open(os.path.join(path, "_manifests", f"v{1:010d}.json")))
+    part_dir = os.path.dirname(os.path.join(path, m["files"][0]["path"]))
+    assert os.path.basename(part_dir).startswith("bucket=")
+    if stray_dir is not None:
+        part_dir = os.path.join(os.path.dirname(part_dir), stray_dir)
+        os.makedirs(part_dir)
+    spark.range(700, 705).coalesce(1).write.parquet(str(tmp_path / "side"))
+    import glob as _g
+    import shutil as _sh
+
+    (side_file,) = _g.glob(str(tmp_path / "side" / "*.parquet"))
+    _sh.copy(side_file, os.path.join(part_dir, "stray.parquet"))
+    got = snapshot_read(spark, path)
+    assert sorted((r.id, r.bucket) for r in got.collect()) == [
+        (i, i % 2) for i in range(10)
+    ]
+
+
+def test_stray_file_not_read_by_schema_inference(spark, tmp_path):
+    # a schema-evolved version lets Spark infer (mergeSchema), and
+    # inference reads every listed footer: the listing that finds the
+    # stray must come from a plan that only lists, or a non-parquet
+    # stray fails the read
+    path = str(tmp_path / "straye")
+    snapshot_write(spark.range(10).coalesce(1), path)
+    snapshot_write(
+        spark.range(10, 15).withColumn("lang", F.lit("en")).coalesce(1),
+        path, mode="append", allow_new_columns=True,
+    )
+    m = json.load(open(os.path.join(path, "_manifests", f"v{2:010d}.json")))
+    assert m["merge_schema"]
+    commit_dir = os.path.dirname(os.path.join(path, m["files"][0]["path"]))
+    with open(os.path.join(commit_dir, "stray.parquet"), "w") as f:
+        f.write("not parquet")
+    assert _ids(snapshot_read(spark, path)) == list(range(15))
+
+
+class _ListingRefused:
+    """A Hadoop FileSystem proxy whose ``listFiles`` raises while
+    ``state["reading"]`` is set; every other call reaches the real
+    FileSystem."""
+
+    def __init__(self, fs, state):
+        self._fs, self._state = fs, state
+
+    def listFiles(self, *args):
+        if self._state["reading"]:
+            raise AssertionError("listFiles while planning a read")
+        return self._fs.listFiles(*args)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+@pytest.mark.parametrize("partition_by", [None, ("bucket",)])
+def test_reads_take_the_listing_from_spark(
+    spark, tmp_path, monkeypatch, partition_by
+):
+    """Reads plan each commit dir from Spark's own file index, never a
+    Python-side listing, and return the right rows over several
+    commits, one of whose dirs holds files a merge superseded."""
+    from prql_spark.sources import manifest as mf
+    from prql_spark.sources.manifest import snapshot_pruned_read
+
+    state = {"reading": False}
+    real_fs = mf._fs
+
+    def proxied_fs(spark_, path_):
+        fs, jvm = real_fs(spark_, path_)
+        return _ListingRefused(fs, state), jvm
+
+    monkeypatch.setattr(mf, "_fs", proxied_fs)
+
+    def batch(lo, hi):
+        return spark.range(lo, hi, numPartitions=2).withColumn(
+            "bucket", (F.col("id") % 3).cast("int")
+        )
+
+    def rows(df):
+        return sorted((r.id, r.bucket) for r in df.collect())
+
+    path = str(tmp_path / "spark_listing")
+    kw = {"partition_by": partition_by, "stats_cols": ("id",)}
+    snapshot_write(batch(0, 100), path, **kw)
+    snapshot_write(batch(100, 200), path, mode="append", **kw)
+    snapshot_write(batch(200, 300), path, mode="append", **kw)
+    # an identity update rewrites the files holding ids 150-154
+    merge_snapshot(spark, path, batch(150, 155), on=("id",))
+    want = [(i, i % 3) for i in range(300)]
+
+    state["reading"] = True
+    assert rows(snapshot_read(spark, path)) == want
+    assert rows(snapshot_read(spark, path, 1)) == want[:100]
+    df, kept, total = snapshot_pruned_read(spark, path, {"id": (120, 180)})
+    assert 0 < kept <= total
+    assert rows(df.where("id BETWEEN 120 AND 180")) == want[120:181]
+
+
+@pytest.mark.parametrize("partition_by", [None, ("bucket",)])
+def test_deleted_referenced_file_raises(spark, tmp_path, partition_by):
+    """A file the manifest references but the disk lost fails the read
+    at planning; it never reads as a table with fewer rows."""
+    from pyspark.errors import AnalysisException
+
+    path = str(tmp_path / "lost")
+    df = spark.range(100, numPartitions=4).withColumn(
+        "bucket", (F.col("id") % 2).cast("int")
+    )
+    snapshot_write(df, path, partition_by=partition_by)
+    m = json.load(open(os.path.join(path, "_manifests", f"v{1:010d}.json")))
+    os.remove(os.path.join(path, m["files"][0]["path"]))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        snapshot_read(spark, path)
 
 
 def test_attach_stats_and_file_skipping_scan(spark, tmp_path):
@@ -991,6 +1119,100 @@ def test_merge_snapshot_upserts_and_rewrites_only_touched(spark, tmp_path):
     assert {r.id: r.val for r in snapshot_read(spark, path).collect()} == {
         **got, 3000: 3
     }
+
+
+def _eight_file_table(spark, path):
+    base = (
+        spark.range(8000)
+        .withColumn("val", F.col("id") * 10)
+        .repartitionByRange(8, "id")
+        .sortWithinPartitions("id")
+    )
+    snapshot_write(base, path, stats_cols=("id",))
+    return {i: i * 10 for i in range(8000)}
+
+
+def test_merge_stats_scan_drops_zero_row_files(spark, tmp_path, monkeypatch):
+    """When the footer fast path declines, the stats scan records 0
+    rows for every staged file it saw no row of, so the writer's
+    empty files never reach the manifest."""
+    from prql_spark.sources import manifest as mf
+
+    monkeypatch.setattr(mf, "_staged_stats_footers", lambda *a, **k: False)
+    path = str(tmp_path / "zr")
+    want = _eight_file_table(spark, path)
+    one = spark.createDataFrame([(90000, 3)], "id LONG, val LONG")
+    res = merge_snapshot(spark, path, one.repartition(4), on=("id",))
+    m = json.load(open(os.path.join(
+        path, "_manifests", f"v{res['version']:010d}.json")))
+    assert all((f.get("n_rows") or 0) > 0 for f in m["files"])
+    got = {r.id: r.val for r in snapshot_read(spark, path).collect()}
+    assert got == {**want, 90000: 3}
+
+
+def test_merge_runs_no_stage_one_task_per_shuffle_partition(spark, tmp_path):
+    """The merge stores its distinct key set coalesced, so the bounds
+    agg, the probe and the survivor anti-join scan a handful of
+    blocks: no stage of a small merge runs one task per shuffle
+    partition."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    path = str(tmp_path / "mgw")
+    want = _eight_file_table(spark, path)
+    src = spark.createDataFrame(
+        [(5, -5), (4000, -4), (90000, 1)], "id LONG, val LONG"
+    )
+    group = f"merge-width-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        merge_snapshot(spark, path, src, on=("id",))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    widths = [
+        info.numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+        if (info := tracker.getStageInfo(stage)) is not None
+    ]
+    assert widths and n_shuffle not in widths, widths
+    got = {r.id: r.val for r in snapshot_read(spark, path).collect()}
+    assert got == {**want, 5: -5, 4000: -4, 90000: 1}
+
+
+def test_merge_lost_key_blocks_raise_before_publish(
+    spark, tmp_path, monkeypatch
+):
+    """The merge's key set lives only in its executors' blocks: losing
+    them (as when the executor dies) after the bounds agg fails the
+    merge, and no version is published."""
+    from prql_spark.sources import manifest as mf
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "mglost")
+    want = _eight_file_table(spark, path)
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    real_overlaps = mf._overlaps_bounds
+    lost = []
+
+    def overlaps_after_loss(f, bounds):
+        if not lost:
+            lost.extend(set(sc._jsc.getPersistentRDDs().keySet()) - before)
+            for rdd_id in lost:
+                sc._jsc.sc().unpersistRDD(rdd_id, True)
+        return real_overlaps(f, bounds)
+
+    monkeypatch.setattr(mf, "_overlaps_bounds", overlaps_after_loss)
+    src = spark.createDataFrame([(5, -5)], "id LONG, val LONG")
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        merge_snapshot(spark, path, src, on=("id",))
+    assert lost
+    assert not os.path.exists(
+        os.path.join(path, "_manifests", f"v{2:010d}.json")
+    )
+    got = {r.id: r.val for r in snapshot_read(spark, path).collect()}
+    assert got == want
 
 
 def test_merge_snapshot_schema_and_key_validation(spark, tmp_path):

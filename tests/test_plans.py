@@ -642,7 +642,8 @@ def test_plan_cuts_only_in_physical_helpers():
         for path in sorted(root.rglob("*.py"))
         if path != helper
         for token in (
-            "localCheckpoint(", "StorageLevel", "spark_partition_id() >= 0"
+            "localCheckpoint(", "StorageLevel", "spark_partition_id() >= 0",
+            ".persist(", ".cache()",
         )
         if token in path.read_text()
     ]
